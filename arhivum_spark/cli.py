@@ -152,10 +152,18 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         # stage, the wall of the run that produced the COMMITTED
         # snapshot (a resumed stage reports its original write time —
         # the _metrics table would report the max over every historical
-        # generation instead)
+        # generation instead). Only this pipeline's stages: a reused
+        # --stage-dir can hold entries an earlier, differently-configured
+        # run committed.
+        ran = {"s1_signatures", "s2_exact", "s3_candidates", "s4_clusters"}
+        if cfg.psnr_verify_enabled:
+            ran.add("s3b_psnr")
+        if args.captions_out:
+            ran.add("s5_captions")
         stage_secs = {
             stage: round(entry.get("write_seconds", 0.0), 1)
             for stage, entry in sorted(store._manifest()["stages"].items())
+            if stage in ran
         }
         metrics = {
             "rows": row["rows"],

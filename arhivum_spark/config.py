@@ -88,23 +88,17 @@ class DedupConfig:
     hot_detect_sample: float = 0.01
     salt_buckets: int = 16
     max_pairs_per_band: int = 4096         # hard cap per (band,key) group
-    # star-verification retry (lsh.verify_edges_retry_pairs): failed-edge
-    # groups up to this size enumerate all member pairs (complete
-    # recovery, <= g^2/2 enumerations per bucket); larger groups fall
-    # back to one hub re-election (linear in rejects)
-    # verify_retry_enabled=False drops to plain verify_edges (single
-    # pass, no reject retry): cheaper by a near-constant per-job cost,
-    # at the measured price of hub-election split clusters (recall
-    # 0.9999x instead of exactly 1.0 — 10 splits at 2.4M, 137 at 4.8M;
-    # BENCH.md "splits diagnosed" section)
-    verify_retry_enabled: bool = True
-    retry_allpairs_max: int = 128
-    # retry pairs are pre-filtered by phash hamming INSIDE the self-join
+    # bucket-local pairs (lsh.salted_candidate_edges): buckets of 3 up to
+    # this many members emit every non-hub member pair (<= g^2/2 per
+    # bucket, before the gate) on top of their star edges, so a true pair
+    # does not depend on hub election; larger buckets emit stars only
+    bucket_allpairs_max: int = 128
+    # those pairs are pre-filtered by phash hamming INSIDE the self-join
     # stage (before any shuffle or signature scoring): random colliders
     # sit at ~32/64 bits, true near-dups at PSNR>=40 measured at 0-2, so
     # this collapses the quadratic enumeration to ~true-pair volume.
     # P(random pair <= 16) ~ 3e-5 keeps noise negligible.
-    retry_phash_max_hamming: int = 16
+    pair_phash_max_hamming: int = 16
 
     # connected components
     cc_max_iters: int = 50

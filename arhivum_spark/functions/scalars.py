@@ -76,8 +76,10 @@ def base_identifier(ident_col: str | Column) -> Column:
     # two segments": a 4-segment ident like 'com.example:api:core:1.0'
     # must keep 'com.example:api:core', not collapse to 'com.example:api'
     # (which would alias unrelated artifacts as same-base duplicates).
-    # No ':' -> no match -> unchanged.
-    return F.regexp_replace(c, ":[^:]*$", "")
+    # No ':' -> no match -> unchanged. The lookbehind keeps a colon at
+    # position 0 from matching, so ':abc' stays ':abc' (the reference's
+    # lastColon > 0 guard).
+    return F.regexp_replace(c, "(?s)(?<=.):[^:]*$", "")
 
 
 # F5 — MIME detection: magic-byte sniff first, extension fallback, then

@@ -490,13 +490,11 @@ def minhash_lsh_pairs(
         .withColumn("phash", F.lit(0).cast("long"))
         .localCheckpoint(eager=False)
     )
-    bands = band_keys(
-        sigs.select(F.col("id").alias("image_id"), "minhash"), cfg
-    )
-    cand = salted_candidate_edges(bands, cfg)
-    verified = verify_edges(
-        cand, sigs.select(F.col("id").alias("image_id"), "minhash", "phash"), cfg
-    )
+    # phash is constant, so the bucket-local pair gate passes every pair:
+    # plain bucket-local all-pairs LSH up to cfg.bucket_allpairs_max
+    sigs = sigs.select(F.col("id").alias("image_id"), "minhash", "phash")
+    cand = salted_candidate_edges(band_keys(sigs, cfg), cfg)
+    verified = verify_edges(cand, sigs, cfg)
     return verified.select(
         F.col("src").alias("id_a"), F.col("dst").alias("id_b"), "est_jaccard"
     )

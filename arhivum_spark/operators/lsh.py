@@ -12,10 +12,16 @@ Scale design (the parts Catalyst can't do for us — SURVEY.md §4):
   duplicates optimization, ScanCommand.java:342-353, applied to the whole
   near-dup stage). Degenerate cohorts (all-black images) collapse from
   billions of rows to a handful of distinct contents.
-- **Star edges, not cliques**: within a (band, key, salt) bucket we emit
-  (hub=min_id, member) edges via a ranking window — O(k) edges per bucket
-  instead of O(k^2) pairs. Connected components restores the full cluster.
-  No collect_list, no quadratic pair blowup on hot bands.
+- **Star edges plus phash-gated bucket-local pairs**: within a
+  (band, key, salt) bucket we emit (hub=min_id, member) star edges — O(k)
+  per bucket. Buckets of 3..`bucket_allpairs_max` members also emit every
+  non-hub member pair whose pHash Hamming distance is at most
+  `pair_phash_max_hamming`, gated inside the self-join, so a true pair no
+  longer depends on winning hub election (a foreign min-id collider hub
+  fails both its star edges at verification). Larger buckets emit stars
+  only. One verification pass scores the whole candidate set;
+  connected components restores the full cluster. No collect_list, no
+  un-gated quadratic pair blowup on hot bands.
 - **Two-pass hot-key salting**: band-key frequencies are counted, keys above
   `hot_band_threshold` get a salt = hash(image_id) % salt_buckets appended,
   splitting a hot bucket's window into bounded partitions. Buckets of a
@@ -28,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from arhivum_spark.config import DedupConfig
 
@@ -45,12 +50,14 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
     2^32), which would drown the star construction. At 2^64 the 2.4M
     load expects ~1e-4 colliding keys. (Measured at 2.4M, hash
     collisions were NOT the split-cluster source — that is same-slice
-    concentration; see verify_edges_retry_pairs — but 64-bit keys are a
+    concentration; see salted_candidate_edges — but 64-bit keys are a
     survival requirement at the target scale.)
 
     The id column that rides through the explode and both downstream
     shuffles should be a LONG, not a string: at rows x bands scale every
     byte of the key is shuffle traffic (see candidate_edges_compact).
+    `phash` rides along so the bucket-local pair gate runs inside the
+    self-join, before any pair crosses a shuffle.
     """
     r = cfg.rows_per_band
     bands_arr = F.transform(
@@ -59,6 +66,7 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
     )
     return sig_df.select(
         F.col(id_col).alias("image_id"),
+        "phash",
         F.posexplode(bands_arr).alias("band", "key"),
     )
 
@@ -66,7 +74,8 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
 def candidate_edges_compact(
     sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id"
 ) -> DataFrame:
-    """band explode -> salted star edges, with a compact long surrogate id.
+    """band explode -> salted candidate edges, with a compact long
+    surrogate id.
 
     The 14+-byte string ids would dominate the (rows x bands) explode and
     both window shuffles; a long surrogate (xxhash64 of the id — collision
@@ -74,11 +83,14 @@ def candidate_edges_compact(
     the original id via one broadcast-friendly dictionary join.
     """
     keyed = sig_df.select(
-        F.xxhash64(F.col(id_col)).alias("_iid"), F.col(id_col), "minhash"
+        F.xxhash64(F.col(id_col)).alias("_iid"),
+        F.col(id_col),
+        "minhash",
+        "phash",
     )
     iid_map = keyed.select("_iid", F.col(id_col))
     bands = band_keys(
-        keyed.select(F.col("_iid").alias("image_id"), "minhash"), cfg
+        keyed.select(F.col("_iid").alias("image_id"), "minhash", "phash"), cfg
     )
     edges = salted_candidate_edges(bands, cfg)
     src_map = iid_map.select(
@@ -97,13 +109,38 @@ def candidate_edges_compact(
 def salted_candidate_edges(
     bands: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """(band,key) buckets -> star candidate edges (src < dst), salt-split.
+    """(band,key) buckets -> candidate edges (src < dst), salt-split.
 
     Two passes:
       1. count band-key frequencies; keys above hot_band_threshold are 'hot'
-      2. hot keys get per-row salt; a window per (band, key, salt) emits
-         hub->member edges; for hot keys an extra bucket-hub chain edge set
-         links the salt buckets of the same (band, key) together.
+      2. hot keys get per-row salt; each (band, key, salt) bucket emits
+         hub->member star edges; for hot keys an extra bucket-hub chain
+         edge set links the salt buckets of the same (band, key) together.
+
+    Why pairs as well as stars: star verification filters (hub, member)
+    edges independently, so a FOREIGN collider that holds the bucket's
+    min id fails both edges and orphans the true pair sitting in the same
+    bucket. Minhash values concentrate (random images share ~6% of
+    positions through common shingles), so popular slices recur across
+    dozens of images: at 2.4M images the split pairs sat in buckets of
+    3-69 mutually-dissimilar members in every one of their 4-12 shared
+    bands, the best true member ranked as low as 40th by id. Hence buckets
+    of 3..bucket_allpairs_max members also emit every non-hub member pair
+    whose pHash Hamming distance is <= pair_phash_max_hamming. The gate
+    runs inside the self-join stage: random colliders sit at ~32/64 bits,
+    true near-dups at 0-2 (P(random pair <= 16 bits) ~ 3e-5), so only
+    ~true-pair volume crosses a shuffle. A 2-member bucket's only pair is
+    its star edge, so it is skipped.
+
+    Every edge is oriented src < dst in id order — star (hub = min), pair
+    (m1 < m2) and hub chain (key hub = min) — so the final distinct()
+    dedups unordered pairs across buckets and edge kinds.
+
+    Residual recall gap, documented: a true pair is found only through
+    winning a hub election (a) in buckets above bucket_allpairs_max, which
+    emit stars only — hot-key shrapnel the salting and cap valves already
+    bound — and (b) when its pHash Hamming distance exceeds
+    pair_phash_max_hamming (PSNR >= 40 dB re-encodes measure 0-2 bits).
     """
     # pass 1: hot-band detection on a SAMPLE. Band keys are mostly unique
     # (near-dup pairs are rare), so a full groupBy(band,key) count shuffles
@@ -188,6 +225,9 @@ def salted_candidate_edges(
     pair_hubs = hub_small.filter(F.col("bucket_n") >= 2).select(
         "band", "key", "salt", "hub", "bucket_n"
     )
+    members = salted.join(pair_hubs, ["band", "key", "salt"]).filter(
+        F.col("image_id") != F.col("hub")
+    )
     # max_pairs_per_band (SURVEY §4 degenerate-content valve): a bucket
     # with more than `cap` members emits only ~cap star edges — members are
     # kept by a deterministic hash draw (pmod(h, bucket_n) < cap keeps an
@@ -197,9 +237,7 @@ def salted_candidate_edges(
     # documented trade. Per (band, key) the bound is salt_buckets * cap.
     cap = cfg.max_pairs_per_band
     edges = (
-        salted.join(pair_hubs, ["band", "key", "salt"])
-        .filter(F.col("image_id") != F.col("hub"))
-        .filter(
+        members.filter(
             (F.col("bucket_n") <= cap)
             | (
                 F.pmod(
@@ -210,6 +248,30 @@ def salted_candidate_edges(
             )
         )
         .select(F.col("hub").alias("src"), F.col("image_id").alias("dst"))
+    )
+    # bucket-local non-hub pairs, phash-gated before anything leaves the
+    # self-join stage (see the docstring)
+    pair_side = members.filter(
+        F.col("bucket_n").between(3, cfg.bucket_allpairs_max)
+    )
+    pairs = (
+        pair_side.select(
+            "band", "key", "salt",
+            F.col("image_id").alias("src"), F.col("phash").alias("p1"),
+        )
+        .join(
+            pair_side.select(
+                "band", "key", "salt",
+                F.col("image_id").alias("dst"), F.col("phash").alias("p2"),
+            ),
+            ["band", "key", "salt"],
+        )
+        .filter(F.col("src") < F.col("dst"))
+        .filter(
+            F.bit_count(F.col("p1").bitwiseXOR(F.col("p2")))
+            <= cfg.pair_phash_max_hamming
+        )
+        .select("src", "dst")
     )
     # link salt buckets of the same hot (band,key): min bucket-hub per key
     # joins every other bucket hub (replaces the per-key ordering window —
@@ -223,23 +285,21 @@ def salted_candidate_edges(
         .filter(F.col("hub") != F.col("key_hub"))
         .select(F.col("key_hub").alias("src"), F.col("hub").alias("dst"))
     )
-    return edges.unionByName(hub_chain).distinct()
+    return edges.unionByName(pairs).unionByName(hub_chain).distinct()
 
 
-def score_edges(
+def verify_edges(
     edges: DataFrame,
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "image_id",
-    _keep_member_phash: bool = False,
 ) -> DataFrame:
-    """Attach est_jaccard + phash_hamming to every candidate edge.
+    """Keep candidate edges whose full-signature agreement >= threshold.
 
     Agreement = fraction of equal MinHash positions (unbiased Jaccard
     estimate, the true-Jaccard generalization of the reference's
-    calculateSimilarity proxy). Computed with zip_with/aggregate — stays in
-    the JVM, no Python. No filtering: callers split pass/fail themselves
-    (verify_edges_retry_pairs needs BOTH sides from one scoring pass).
+    calculateSimilarity proxy), computed with zip_with/aggregate — stays
+    in the JVM, no Python. Adds est_jaccard and phash_hamming.
     """
     sigs = sig_df.select(
         F.col(id_col).alias("_vid"),
@@ -261,9 +321,6 @@ def score_edges(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    out_cols = ["src", "dst", "est_jaccard", "phash_hamming"]
-    if _keep_member_phash:
-        out_cols.append("ph_b")
     return (
         edges.join(a, "src")
         .join(b, "dst")
@@ -272,236 +329,6 @@ def score_edges(
             "phash_hamming",
             F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))),
         )
-        .select(*out_cols)
+        .select("src", "dst", "est_jaccard", "phash_hamming")
+        .filter(F.col("est_jaccard") >= cfg.min_signature_agreement)
     )
-
-
-def verify_edges(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Keep candidate edges whose full-signature agreement >= threshold."""
-    return score_edges(edges, sig_df, cfg, id_col=id_col).filter(
-        F.col("est_jaccard") >= cfg.min_signature_agreement
-    )
-
-
-def verify_edges_rehub(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """verify_edges plus one hub re-election pass over its REJECTS.
-
-    The star construction elects hub = min(id) per bucket, and
-    verification filters (hub, member) edges independently. When the
-    min-id member of a bucket is a FOREIGN one-band collider, both edges
-    to the true members fail signature agreement and the true pair loses
-    that bucket's connectivity entirely — even though both members sit in
-    the bucket. The miss probability grows with n (collider occupancy of
-    near-dup buckets), which is exactly the superlinear split-cluster
-    growth measured at 2.4M/4.8M images (BENCH.md): every split was a
-    {base, reenc} pair orphaned by a smaller-id collider hub.
-
-    Fix, preserving the star/no-window scale shape: edges that FAIL
-    verification are regrouped BY their hub, a retry hub = min(member) is
-    elected among each hub's failed members, and the retry star is
-    verified once more. The retry frame is O(rejects) — rejects are rare
-    (random-pair agreement ~0.06 vs the 0.5 threshold, so only collider
-    edges land here) — and the whole pass is two joins + one partial
-    aggregation, no window, no pair enumeration. A bucket with TWO
-    foreign colliders below every true id can still orphan a pair
-    (probability squared per bucket). Measured at 2.4M images: this pass
-    recovers 2 of the 10 split truth clusters (BENCH.md); the remaining
-    8 share 4-12 bands each yet lose every one to multi-collider
-    buckets — see verify_edges_retry_pairs for the bounded complete fix.
-    """
-    # score ONCE and pin (DISK_ONLY, same heap-headroom discipline as
-    # verify_edges_retry_pairs): the verified frame feeds three lineage
-    # branches (failed split, retry guard anti-join, final union) — an
-    # anti-join formulation over an unpinned verify_edges re-derives the
-    # edges x signatures scoring join through every branch
-    scored = score_edges(edges, sig_df, cfg, id_col=id_col).localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
-    passing = F.col("est_jaccard") >= cfg.min_signature_agreement
-    verified = scored.filter(passing).select(
-        "src", "dst", "est_jaccard", "phash_hamming"
-    )
-    failed = scored.filter(~passing).select("src", "dst")
-    retry_hub = failed.groupBy("src").agg(
-        F.min("dst").alias("_h2"), F.count("*").alias("_fn")
-    )
-    retry = (
-        failed.join(retry_hub.filter(F.col("_fn") >= 2), "src")
-        .filter(F.col("dst") != F.col("_h2"))
-        .select(F.col("_h2").alias("src"), "dst")
-        # two hubs sharing failed members can emit the same retry edge
-        .distinct()
-        # an edge verified via another bucket must not be re-emitted —
-        # without this, the returned frame can hold the same unordered
-        # pair twice. Orientations differ across sources: pipeline star
-        # edges are hub->member in xxhash64-surrogate order
-        # (candidate_edges_compact), while retry edges are min-string-id
-        # -> member by construction — so the guard must compare in a
-        # canonical orientation, not raw (src, dst).
-        .join(
-            verified.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        # tiny frame (O(rejects)); pin it so the isEmpty probe below and
-        # the retry verification don't re-run the anti-join pipeline
-        .localCheckpoint(eager=True)
-    )
-    if retry.isEmpty():
-        return verified
-    return verified.unionByName(verify_edges(retry, sig_df, cfg, id_col=id_col))
-
-
-def verify_edges_retry_pairs(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Star verification with a COMPLETE bounded retry over its rejects.
-
-    verify_edges_rehub's single hub re-election still orphans a true pair
-    when two or more foreign colliders sit below it in the bucket's id
-    order. This is not rare at scale: minhash values CONCENTRATE (random
-    images share ~6% of signature positions through common shingles), so
-    popular 4-value slices recur across dozens of images — the occupancy
-    probe at 2.4M found the 8 rehub-surviving split pairs sitting in
-    buckets of 3-69 same-slice, mutually-dissimilar members in EVERY one
-    of their 4-12 shared bands, with the best true member ranked as low
-    as 40th by id. Hub election loses all of them; probability of that
-    grows with occupancy, i.e. with n — the measured superlinear split
-    growth (0 -> 10 -> 137 at 600k/2.4M/4.8M). This variant terminates
-    in exactly TWO verification passes and recovers every true pair that
-    reached a bucket together:
-
-    - Failed (hub, member) edges are grouped by hub. Groups whose TOTAL
-      member count (passed + failed — a true pair can sit pass/fail
-      asymmetric when est_jaccard is non-transitive through the hub:
-      J(H,m1)=0.52 passes, J(H,m2)=0.45 fails, J(m1,m2)=0.7; pairing
-      only failed members would never retry it) is
-      2..retry_allpairs_max enumerate every failed x any pair
-      (bounded by g(g-1)/2 <= ~8k at the default bound of 128, covering
-      every occupancy observed at 4.8M), pre-filtered by phash hamming
-      (<= retry_phash_max_hamming) INSIDE the self-join stage — any true
-      pair among the rejects is verified DIRECTLY, no election luck.
-    - Larger groups fall back to one min-id re-election over the failed
-      members, keeping the pass linear. Such groups are hot-key
-      shrapnel the salting/cap valves already bound; documented
-      residual: a true pair inside one with two colliders below it and
-      no other shared band.
-
-    Cost model: most multi-member buckets are pure collider groups whose
-    star edges ALL fail (600k measured: 3.36M of 3.46M star edges
-    reject), so the naive retry enumerates sum C(g,2) pairs — 27.98M at
-    600k, 8x the candidate count and growing with occupancy. The phash
-    gate collapses that inside the join stage (random colliders sit at
-    ~32/64 bits vs 0-2 for true near-dups; P(pass) ~ 3e-5) so only
-    ~true-pair volume (85k at 600k) reaches scoring or any exchange.
-    Edges are scored ONCE and pinned; pass/fail split by filter (an
-    anti-join formulation re-derives the big scoring join through every
-    branch of the lineage). The pass adds three shuffles over the reject
-    frame and one extra scan of sig_df for the retry scoring
-    (broadcast-joined against the small retry side by AQE).
-
-    Residual recall gap, both documented and phash-bounded: a true pair
-    whose phash hamming exceeds retry_phash_max_hamming is recoverable
-    only by winning a hub election somewhere (PSNR >= 40 dB re-encodes
-    measure 0-2 bits apart — 16 is ~8 sigma of slack).
-    """
-    # DISK_ONLY: at 2.4M images the scored frame is ~1 GB — parking it
-    # on-heap shaves exactly the headroom the byte-bearing scans need
-    # (GCLocker contiguous-allocation deaths on the 16 GB local heap);
-    # with RAM-backed local dirs "disk" is still memory, just off-heap
-    scored = score_edges(
-        edges, sig_df, cfg, id_col=id_col, _keep_member_phash=True
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    passing = F.col("est_jaccard") >= cfg.min_signature_agreement
-    verified = scored.filter(passing).select(
-        "src", "dst", "est_jaccard", "phash_hamming"
-    )
-    failed = scored.filter(~passing).select("src", "dst", "ph_b")
-    # group-size bound on the TOTAL bucket-group membership (passed +
-    # failed), since the enumeration below pairs failed members against
-    # ALL members of the group
-    sized = failed.join(
-        scored.groupBy("src").agg(F.count("*").alias("_fn")), "src"
-    )
-    small = sized.filter(
-        (F.col("_fn") >= 2) & (F.col("_fn") <= cfg.retry_allpairs_max)
-    )
-    all_small = (
-        scored.select(
-            "src",
-            F.col("dst").alias("m2"),
-            F.col("ph_b").alias("p2"),
-            passing.alias("_pass2"),
-        )
-        # inner-joined on hub below, so only hubs with a small failed
-        # group contribute; no size filter needed on this side
-    )
-    # the phash-hamming filter runs INSIDE the self-join stage, so the
-    # quadratic enumeration never crosses a shuffle boundary — measured
-    # at 600k it collapses 27.98M enumerated pairs to ~85k. Each
-    # unordered pair is enumerated exactly once: failed x failed only in
-    # m1 < m2 orientation; failed x passed from the failed side alone
-    # (passed members never appear on the left).
-    member_pairs = (
-        small.select("src", F.col("dst").alias("m1"), F.col("ph_b").alias("p1"))
-        .join(all_small, "src")
-        .filter(
-            (F.col("m1") != F.col("m2"))
-            & ((F.col("m1") < F.col("m2")) | F.col("_pass2"))
-        )
-        .filter(
-            F.bit_count(F.col("p1").bitwiseXOR(F.col("p2")))
-            <= cfg.retry_phash_max_hamming
-        )
-        .select(
-            F.least("m1", "m2").alias("src"),
-            F.greatest("m1", "m2").alias("dst"),
-        )
-    )
-    big = sized.filter(F.col("_fn") > cfg.retry_allpairs_max)
-    big_hub = big.groupBy("src").agg(F.min("dst").alias("_h2"))
-    big_star = (
-        big.join(big_hub, "src")
-        .filter(F.col("dst") != F.col("_h2"))
-        .select(F.col("_h2").alias("src"), "dst")
-    )
-    retry = (
-        member_pairs.unionByName(big_star)
-        .distinct()
-        # an edge verified via another bucket must not be re-emitted.
-        # Retry edges are min-string-id ordered by construction
-        # (member_pairs: m1 < m2; big_star: hub = min(dst)), but the
-        # verified star edges arrive hub->member in xxhash64-surrogate
-        # order (candidate_edges_compact) — compare canonically or the
-        # same unordered pair slips through reversed and is emitted twice.
-        .join(
-            verified.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        # tiny frame (O(rejects)); pin it so the isEmpty probe and the
-        # retry verification don't re-run the anti-join pipeline
-        .localCheckpoint(eager=True)
-    )
-    if retry.isEmpty():
-        return verified
-    return verified.unionByName(verify_edges(retry, sig_df, cfg, id_col=id_col))

@@ -9,7 +9,8 @@ The Spark shape of the reference's scan lifecycle (SURVEY.md §3.1):
                           distinct-content representatives continue (the
                           reference's skip-work-for-duplicates optimization)
     stage 3  candidates   LSH band explode -> hot-key salting -> star edges
-                          -> signature-agreement verification
+                          + phash-gated bucket-local pairs -> one
+                          signature-agreement verification pass
     stage 4  clusters     connected components over exact+near edges,
                           representative election (best-copy window), final
                           cluster table
@@ -34,11 +35,7 @@ from arhivum_spark.config import DedupConfig
 from arhivum_spark.functions.signatures import attach_signatures
 from arhivum_spark.operators import dedup_exact
 from arhivum_spark.operators.connected_components import connected_components
-from arhivum_spark.operators.lsh import (
-    candidate_edges_compact,
-    verify_edges,
-    verify_edges_retry_pairs,
-)
+from arhivum_spark.operators.lsh import candidate_edges_compact, verify_edges
 from arhivum_spark.sources.checkpoints import StageStore
 
 
@@ -332,8 +329,6 @@ def _run_pipeline_stages(
         reps = exact.filter(~F.col("is_duplicate")).select("image_id")
         rep_sigs = sigs.join(reps, "image_id", "left_semi")
         cand = candidate_edges_compact(rep_sigs, cfg)
-        if cfg.verify_retry_enabled:
-            return verify_edges_retry_pairs(cand, rep_sigs, cfg)
         return verify_edges(cand, rep_sigs, cfg)
     near_edges = store.read_or_compute("s3_candidates", candidate_stage)
 

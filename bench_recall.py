@@ -178,8 +178,9 @@ def main() -> None:
     # SPARK_GRAFT_RECALL_CAP: override max_pairs_per_band. Kept for cap
     # attribution experiments; NOTE the split-cluster mechanism turned
     # out to be hub election in same-slice collider buckets, not the
-    # caps (occupancy probe + lsh.verify_edges_retry_pairs, BENCH.md
-    # round 5 — splits 0/10/137 -> 0 at the default cap).
+    # caps (occupancy probe, BENCH.md round 5 — splits 0/10/137 -> 0 at
+    # the default cap; the phash-gated bucket-local pairs of
+    # lsh.salted_candidate_edges now close it).
     cap_env = os.environ.get("SPARK_GRAFT_RECALL_CAP")
     cfg = (
         DedupConfig(max_pairs_per_band=int(cap_env))

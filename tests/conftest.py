@@ -17,8 +17,11 @@ SF_ORACLE_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 def get_shared_spark():
     """Session-wide SparkSession for non-fixture consumers (hypothesis
-    @given tests can't take pytest fixtures per-example)."""
-    return get_spark("arhivum_spark_tests", cores=8, shuffle_partitions=8)
+    @given tests can't take pytest fixtures per-example). Cores come from
+    SPARK_GRAFT_CPUS (the Tier-1 command exports it), else every host
+    core (get_spark). Shuffle partitions stay 8 whatever the core count,
+    so partition-dependent test inputs do not change with the host."""
+    return get_spark("arhivum_spark_tests", shuffle_partitions=8)
 
 
 @pytest.fixture(scope="session")

@@ -60,17 +60,27 @@ def test_cli_end_to_end_and_resume(spark, tmp_path):
 
 
 def test_cli_config_overrides(spark, tmp_path):
+    from arhivum_spark.sources.checkpoints import StageStore
+
     tmp = str(tmp_path)
     params = datagen.GenParams(n=120, seed=5, img_hw=48)
     datagen.images_df(spark, params, partitions=4).write.parquet(
         os.path.join(tmp, "images")
     )
+    # a reused --stage-dir holding stages an earlier run committed: a
+    # PSNR stage this run skips, and a stage no pipeline has
+    stale = StageStore(spark, os.path.join(tmp, "stages"))
+    stale.write("s3b_psnr", spark.range(1))
+    stale.write("s9_retired", spark.range(1))
     m = run(
         _argv(tmp, extra=["--no-psnr-verify", "--max-pairs-per-band", "512"]),
         spark=spark,
     )
     assert m["rows"] == 120
-    assert "s3b_psnr" not in m["stage_seconds"]
+    assert set(m["stage_seconds"]) == {
+        "s1_signatures", "s2_exact", "s3_candidates", "s4_clusters",
+        "s5_captions",
+    }
 
 
 def test_cli_via_real_spark_submit(spark, tmp_path):

@@ -13,17 +13,24 @@ from arhivum_spark.operators.lsh import salted_candidate_edges
 HOT_N = 4000
 
 
+def _bucket(spark, lo, hi, band, key, phash=None):
+    """band_keys rows for ids [lo, hi) in one (band, key). phash defaults
+    to a hash of the id: spread ~32 bits apart, so the bucket-local pair
+    gate passes no pair and only star edges remain."""
+    return spark.range(lo, hi).select(
+        F.col("id").alias("image_id"),
+        F.xxhash64("id").alias("phash") if phash is None
+        else F.lit(phash).cast("long").alias("phash"),
+        F.lit(band).alias("band"),
+        (F.col("id") if key is None else F.lit(key)).cast("long").alias("key"),
+    )
+
+
 def _bands(spark):
     """One pathologically hot (band,key) bucket + 500 singleton keys."""
-    hot = spark.range(HOT_N).select(
-        F.col("id").alias("image_id"), F.lit(0).alias("band"),
-        F.lit(777).alias("key"),
+    return _bucket(spark, 0, HOT_N, 0, 777).unionByName(
+        _bucket(spark, 10_000, 10_500, 1, None)
     )
-    cold = spark.range(10_000, 10_500).select(
-        F.col("id").alias("image_id"), F.lit(1).alias("band"),
-        F.col("id").alias("key"),
-    )
-    return hot.unionByName(cold)
 
 
 @pytest.mark.parametrize("sample", [1.0, 0.05])
@@ -64,20 +71,21 @@ def test_max_pairs_per_band_caps_bucket_edges(spark):
         hot_detect_sample=1.0, hot_band_threshold=100_000,
         max_pairs_per_band=50,
     )
-    big = spark.range(500).select(
-        F.col("id").alias("image_id"), F.lit(0).alias("band"),
-        F.lit(7).alias("key"),
+    big = _bucket(spark, 0, 500, 0, 7)
+    small = _bucket(spark, 1000, 1030, 1, 8)
+    # equal phashes: the pair gate passes every non-hub member pair
+    same = _bucket(spark, 2000, 2010, 2, 9, phash=0)
+    edges = salted_candidate_edges(
+        big.unionByName(small).unionByName(same), cfg
     )
-    small = spark.range(1000, 1030).select(
-        F.col("id").alias("image_id"), F.lit(1).alias("band"),
-        F.lit(8).alias("key"),
-    )
-    edges = salted_candidate_edges(big.unionByName(small), cfg)
     n_big = edges.filter(F.col("dst") < 1000).count()
-    n_small = edges.filter(F.col("dst") >= 1000).count()
+    n_small = edges.filter(F.col("dst").between(1000, 1999)).count()
+    n_same = edges.filter(F.col("dst") >= 2000).count()
     # hash-draw keeps an expected `cap` members of the big bucket
     assert 20 <= n_big <= 100, f"cap not enforced: {n_big} edges"
     assert n_small == 29  # below cap: every member star-linked
+    # 9 star edges + C(9, 2) gated non-hub pairs
+    assert n_same == 9 + 36
 
 
 def test_sampled_detection_misses_small_buckets_harmlessly(spark):
@@ -85,10 +93,7 @@ def test_sampled_detection_misses_small_buckets_harmlessly(spark):
     still link their members (correctness unaffected; only partition size
     guarantees relax)."""
     cfg = DedupConfig(hot_detect_sample=0.01)
-    small = spark.range(40).select(
-        F.col("id").alias("image_id"), F.lit(0).alias("band"),
-        F.lit(5).alias("key"),
-    )
+    small = _bucket(spark, 0, 40, 0, 5)
     edges = salted_candidate_edges(small, cfg)
     vertices = small.select(F.col("image_id").alias("id"))
     comp = connected_components(vertices, edges, id_col="id")

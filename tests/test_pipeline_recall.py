@@ -224,20 +224,3 @@ def test_psnr_verify_filters_false_edges(spark):
     assert set(got) == {(1, 2), (1, 5)}
     assert got[(1, 2)] >= CFG.psnr_verify_db  # strict roundtrip invariant
     assert got[(1, 5)] >= CFG.psnr_edge_min_db
-
-
-def test_pipeline_retry_disabled_still_clears_recall_gate(
-    spark, images, tmp_path_factory
-):
-    """verify_retry_enabled=False drops the reject-retry pass (the
-    exact-recall machinery) back to single-pass star verification — the
-    pipeline must still run end-to-end and clear the >= 0.99 gate (the
-    retry's value is the last ~1e-4 of recall at multi-million scale,
-    where hub-election splits appear; see BENCH.md)."""
-    store = StageStore(spark, str(tmp_path_factory.mktemp("stages_nr")))
-    pred = run_pipeline(
-        images, store, DedupConfig(verify_retry_enabled=False)
-    ).toPandas()
-    truth = datagen.truth_clusters(P)
-    recall = _pair_recall(truth, pred[["image_id", "cluster_id"]])
-    assert recall >= 0.99

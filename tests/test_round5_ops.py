@@ -321,171 +321,177 @@ def test_pinned_reader_batch_contextmanager(spark):
         spark.conf.unset(key)
 
 
-def _sig_rows(spark, agreements):
-    """sig_df with controlled pairwise MinHash agreement.
+def _sig_rows(spark, sigs, phash):
+    """sig_df with long ids: sigs {id: minhash list}, phash {id: long}."""
+    rows = [(i, [int(v) for v in mh], phash[i]) for i, mh in sigs.items()]
+    return spark.createDataFrame(
+        rows, "image_id long, minhash array<int>, phash long"
+    )
 
-    agreements: {id: minhash list}. phash is irrelevant to signature
-    verification (informational column) — any distinct longs work.
-    """
+
+def _bands_rows(spark, buckets, phash):
+    """Hand-built band_keys frame: buckets {(band, key): [ids]}."""
     rows = [
-        (k, [int(v) for v in mh], i) for i, (k, mh) in enumerate(agreements.items())
+        (i, phash[i], band, key)
+        for (band, key), ids in buckets.items()
+        for i in ids
     ]
     return spark.createDataFrame(
-        rows, "image_id string, minhash array<int>, phash long"
+        rows, "image_id long, phash long, band int, key long"
     )
 
 
-def test_verify_edges_rehub_recovers_foreign_hub_orphans(spark):
-    """The measured 2.4M/4.8M split-cluster mechanism (BENCH.md round 5):
-    a foreign one-band collider with the bucket's MIN id is elected hub,
-    both (hub, true-member) star edges fail signature verification, and
-    the true pair — present in the bucket! — loses its connectivity.
-    verify_edges_rehub must re-elect a hub among the rejects and recover
-    the pair; plain verify_edges documents the failure."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_rehub
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    # true pair: 100/128 agreement (>= 0.5); collider: 8/128 with both
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    collider = base[:8] + [2000 + i for i in range(k - 8)]
-    sigs = _sig_rows(
-        spark, {"img-a": collider, "img-b": base, "img-c": reenc}
-    )
-    # star edges of bucket {a, b, c} with hub = min id = the collider
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-c")], "src string, dst string"
-    )
-
-    plain = verify_edges(edges, sigs, cfg)
-    assert plain.count() == 0  # the failure mode: true pair orphaned
-
-    got = verify_edges_rehub(edges, sigs, cfg)
-    pairs = {(r.src, r.dst) for r in got.collect()}
-    assert pairs == {("img-b", "img-c")}
+# Hub-collider fixtures: the measured 2.4M/4.8M split-cluster mechanism
+# (BENCH.md round 5). A FOREIGN one-band collider holds the bucket's min
+# id, so it is elected star hub; both (hub, true-member) star edges fail
+# signature verification, and the true pair — present in the bucket —
+# loses its connectivity unless the bucket also emits member pairs.
+_K = DedupConfig().num_perm
+_BASE = list(range(_K))
+_REENC = _BASE[:100] + [1000 + i for i in range(_K - 100)]  # 100/128 with base
+_COLL1 = [2000 + i for i in range(_K)]
+_COLL2 = [3000 + i for i in range(_K)]
+# phash: true members 0-2 bits apart, colliders ~half the bits away
+_FAR1 = 0x5A5A5A5A5A5A5A5A
+_FAR2 = 0x3C3C3C3C3C3C3C3C
 
 
-def test_verify_edges_rehub_is_identity_on_clean_buckets(spark):
-    """When the hub itself is a true member (the overwhelmingly common
-    case) the rehub pass must add nothing and keep verify_edges'
-    output — same rows, same columns."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_rehub
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    near = base[:90] + [3000 + i for i in range(k - 90)]
-    far = [4000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-a": base, "img-b": near, "img-d": far})
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-d")], "src string, dst string"
-    )
-    plain = sorted(verify_edges(edges, sigs, cfg).collect())
-    rehub = sorted(verify_edges_rehub(edges, sigs, cfg).collect())
-    assert plain == rehub
-    assert [(r.src, r.dst) for r in plain] == [("img-a", "img-b")]
-
-
-def test_verify_edges_retry_pairs_recovers_multi_collider_bucket(spark):
-    """Two foreign colliders below the true pair in id order: the first
-    election picks collider-1, the rehub re-election picks collider-2,
-    and the pair stays orphaned (the measured residual at 2.4M — 8 of 10
-    splits survived rehub). retry_pairs enumerates all pairs among the
-    failed members, so the true pair is verified DIRECTLY."""
+def _candidates_and_verified(spark, buckets, sigs, phash, cfg=DedupConfig()):
     from arhivum_spark.operators.lsh import (
-        verify_edges_rehub,
-        verify_edges_retry_pairs,
+        salted_candidate_edges,
+        verify_edges,
     )
 
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    coll1 = [2000 + i for i in range(k)]
-    coll2 = [3000 + i for i in range(k)]
-    sigs = _sig_rows(
+    cand = salted_candidate_edges(_bands_rows(spark, buckets, phash), cfg)
+    sig_df = _sig_rows(spark, sigs, phash)
+    cand_rows = [(r.src, r.dst) for r in cand.collect()]
+    verified = verify_edges(cand, sig_df, cfg).collect()
+    return cand_rows, [(r.src, r.dst) for r in verified]
+
+
+def test_bucket_pairs_recover_foreign_hub_orphans(spark):
+    """One foreign collider (id 1) is the bucket minimum: both star edges
+    fail verification; the gated member pair (10, 11) recovers the true
+    pair."""
+    from arhivum_spark.operators.lsh import verify_edges
+
+    sigs = {1: _COLL1, 10: _BASE, 11: _REENC}
+    phash = {1: _FAR1, 10: 0, 11: 1}
+    stars = spark.createDataFrame([(1, 10), (1, 11)], "src long, dst long")
+    # the failure mode: plain stars orphan the true pair
+    sig_df = _sig_rows(spark, sigs, phash)
+    assert verify_edges(stars, sig_df, DedupConfig()).count() == 0
+
+    cand, got = _candidates_and_verified(
+        spark, {(0, 77): [1, 10, 11]}, sigs, phash
+    )
+    assert sorted(cand) == [(1, 10), (1, 11), (10, 11)]
+    assert got == [(10, 11)]
+
+
+def test_bucket_pairs_recover_multi_collider_bucket(spark):
+    """Two foreign colliders below the true pair in id order: a min-id
+    re-election among the rejects would pick collider 2 and still orphan
+    the pair (8 of the 10 splits at 2.4M). Bucket-local pairs verify the
+    true pair directly; the collider x member pairs are phash-gated out
+    before scoring."""
+    cand, got = _candidates_and_verified(
         spark,
-        {"img-a1": coll1, "img-a2": coll2, "img-b": base, "img-c": reenc},
+        {(0, 77): [1, 2, 10, 11]},
+        {1: _COLL1, 2: _COLL2, 10: _BASE, 11: _REENC},
+        {1: _FAR1, 2: _FAR2, 10: 0, 11: 1},
     )
-    # star of bucket {a1, a2, b, c}, hub = min id = collider a1
-    edges = spark.createDataFrame(
-        [("img-a1", "img-a2"), ("img-a1", "img-b"), ("img-a1", "img-c")],
-        "src string, dst string",
+    assert sorted(cand) == [(1, 2), (1, 10), (1, 11), (10, 11)]
+    assert got == [(10, 11)]
+
+
+def test_clean_bucket_candidates_are_plain_stars(spark):
+    """When the hub is a true member and the other members' phashes are
+    far apart, the candidates are exactly the star edges and
+    verification keeps only the true one. A 2-member bucket emits its
+    star edge alone."""
+    near = _BASE[:90] + [3000 + i for i in range(_K - 90)]
+    far = [4000 + i for i in range(_K)]
+    cand, got = _candidates_and_verified(
+        spark,
+        {(0, 77): [1, 2, 3], (1, 78): [4, 5]},
+        {1: _BASE, 2: near, 3: far, 4: _BASE, 5: far},
+        {1: 0, 2: _FAR1, 3: _FAR2, 4: 0, 5: 0},
     )
+    assert sorted(cand) == [(1, 2), (1, 3), (4, 5)]
+    assert got == [(1, 2)]
 
-    rehub = verify_edges_rehub(edges, sigs, cfg)
-    assert rehub.count() == 0  # re-elected hub a2 is ALSO foreign
 
-    got = verify_edges_retry_pairs(edges, sigs, cfg)
-    assert {(r.src, r.dst) for r in got.collect()} == {("img-b", "img-c")}
+def test_verify_edges_rehub_no_duplicate_edges(spark):
+    """An edge verified via one bucket must not be emitted twice through
+    another: bucket {10, 11} in band 0 makes (10, 11) a star edge, while
+    collider bucket {1, 10, 11} in band 1 (foreign hub 1 fails both star
+    edges) re-derives it as a gated member pair. Every edge is oriented
+    src < dst, so distinct() leaves the pair exactly once — in the
+    candidates and after verification."""
+    cand, got = _candidates_and_verified(
+        spark,
+        {(0, 5): [10, 11], (1, 6): [1, 10, 11]},
+        {1: _COLL1, 10: _BASE, 11: _REENC},
+        {1: _FAR1, 10: 0, 11: 1},
+    )
+    assert sorted(cand) == [(1, 10), (1, 11), (10, 11)]
+    assert got == [(10, 11)]
 
 
 def test_verify_edges_retry_pairs_identity_on_clean_and_no_dup_edges(spark):
-    """Clean buckets: identical output to verify_edges. And an edge that
-    verifies in one bucket must not be duplicated by another bucket's
-    retry (the anti-join guard)."""
-    from arhivum_spark.operators.lsh import verify_edges, verify_edges_retry_pairs
+    """Clean bucket (hub 1 is a true member, the others' phashes far
+    apart): verifying the bucket candidates gives exactly what verifying
+    plain stars gives. And a pair verified in that bucket and re-derived
+    as a gated pair of a foreign-hub bucket appears once."""
+    from arhivum_spark.operators.lsh import verify_edges
 
     cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    near = base[:90] + [3000 + i for i in range(k - 90)]
-    far = [4000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-a": base, "img-b": near, "img-d": far})
-    edges = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-a", "img-d")], "src string, dst string"
-    )
-    plain = sorted(verify_edges(edges, sigs, cfg).collect())
-    got = sorted(verify_edges_retry_pairs(edges, sigs, cfg).collect())
-    assert plain == got
-    assert [(r.src, r.dst) for r in plain] == [("img-a", "img-b")]
+    near = _BASE[:90] + [3000 + i for i in range(_K - 90)]
+    far = [4000 + i for i in range(_K)]
+    sigs = {1: _BASE, 2: near, 3: far}
+    phash = {1: 0, 2: _FAR1, 3: _FAR2}
+    stars = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
+    plain = verify_edges(stars, _sig_rows(spark, sigs, phash), cfg).collect()
+    plain = sorted((r.src, r.dst) for r in plain)
+    _, got = _candidates_and_verified(spark, {(0, 77): [1, 2, 3]}, sigs, phash)
+    assert sorted(got) == plain == [(1, 2)]
 
-    # second bucket whose star (with foreign hub img-z) fails both edges;
-    # its all-pairs retry re-derives (img-a, img-b) — already verified via
-    # the first bucket, so the union must contain it exactly once
-    foreign = [5000 + i for i in range(k)]
-    sigs2 = _sig_rows(
-        spark, {"img-a": base, "img-b": near, "img-z": foreign}
+    # second bucket: foreign hub 0 fails both star edges; members 1 and 2
+    # sit 1 pHash bit apart, so (1, 2) is also emitted as a gated pair
+    sigs[0] = _COLL1
+    phash[0], phash[2] = _FAR1, 1
+    cand, got = _candidates_and_verified(
+        spark, {(0, 77): [1, 2, 3], (1, 78): [0, 1, 2]}, sigs, phash
     )
-    edges2 = spark.createDataFrame(
-        [("img-a", "img-b"), ("img-z", "img-a"), ("img-z", "img-b")],
-        "src string, dst string",
-    )
-    out = verify_edges_retry_pairs(edges2, sigs2, cfg).collect()
-    assert [(r.src, r.dst) for r in out] == [("img-a", "img-b")]
+    assert sorted(cand) == [(0, 1), (0, 2), (1, 2), (1, 3)]
+    assert got == [(1, 2)]
 
 
-def test_retry_guards_are_orientation_blind(spark):
-    """Pipeline star edges arrive hub->member in xxhash64-SURROGATE order
-    (candidate_edges_compact), so a verified edge's (src, dst) is reversed
-    relative to string order for ~half of all pairs; retry edges are
-    min-STRING-id ordered by construction. The already-verified anti-join
-    guard must therefore compare canonically — with a raw (src, dst)
-    compare, a pair verified as (c, b) re-enters via a collider bucket's
-    retry as (b, c) and the output holds the same unordered pair twice
-    (double PSNR decode downstream, duplicate s3 snapshot rows)."""
-    from arhivum_spark.operators.lsh import (
-        verify_edges_rehub,
-        verify_edges_retry_pairs,
-    )
+def test_compact_candidates_emit_each_pair_once(spark):
+    """Through the string-id seam (candidate_edges_compact): star edges
+    and pairs are oriented in xxhash64-surrogate order BEFORE the ids are
+    mapped back, so a pair that is a star edge in some bands and a gated
+    pair in another still appears once, whatever the string order."""
+    from arhivum_spark.operators.lsh import candidate_edges_compact
 
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    foreign = [5000 + i for i in range(k)]
-    sigs = _sig_rows(spark, {"img-b": base, "img-c": reenc, "img-z": foreign})
-    # (img-c, img-b): verified edge in REVERSED string order (hash-order
-    # hub election); plus a collider bucket whose star fails both edges
-    # and whose retry re-derives the pair string-ordered as (img-b, img-c)
-    edges = spark.createDataFrame(
-        [("img-c", "img-b"), ("img-z", "img-b"), ("img-z", "img-c")],
-        "src string, dst string",
+    r = DedupConfig().rows_per_band
+    # the collider img-0 shares only band 0 with the true pair, which
+    # shares bands 0..24. Surrogate order is img-0 < img-y < img-b: img-0
+    # is band 0's hub, so (img-y, img-b) is a gated pair there and a star
+    # edge in bands 1..24, against the string order of its ids
+    coll = _BASE[:r] + [5000 + i for i in range(_K - r)]
+    sigs = spark.createDataFrame(
+        [("img-b", _BASE, 0), ("img-y", _REENC, 1), ("img-0", coll, _FAR1)],
+        "image_id string, minhash array<int>, phash long",
     )
-    for fn in (verify_edges_retry_pairs, verify_edges_rehub):
-        out = [(r.src, r.dst) for r in fn(edges, sigs, cfg).collect()]
-        assert out == [("img-c", "img-b")], fn.__name__
+    rows = [
+        tuple(sorted((e.src, e.dst)))
+        for e in candidate_edges_compact(sigs, DedupConfig()).collect()
+    ]
+    assert sorted(rows) == [
+        ("img-0", "img-b"), ("img-0", "img-y"), ("img-b", "img-y")
+    ]
 
 
 def test_prune_does_not_clobber_concurrent_commit(spark, tmp_path):
@@ -594,7 +600,8 @@ def test_band_keys_are_64bit_and_slice_determined(spark):
     sig_a = list(range(k))
     sig_b = list(range(cfg.rows_per_band)) + [9000 + i for i in range(k - cfg.rows_per_band)]
     df = spark.createDataFrame(
-        [("a", sig_a), ("b", sig_b)], "image_id string, minhash array<int>"
+        [("a", sig_a, 0), ("b", sig_b, 0)],
+        "image_id string, minhash array<int>, phash long",
     )
     out = band_keys(df, cfg)
     assert dict(out.dtypes)["key"] == "bigint"
@@ -604,44 +611,35 @@ def test_band_keys_are_64bit_and_slice_determined(spark):
     assert keys[("a", 1)] != keys[("b", 1)]
     # same slice value in different bands must not collide (band seed)
     df2 = spark.createDataFrame(
-        [("c", list(range(cfg.rows_per_band)) * cfg.bands)],
-        "image_id string, minhash array<int>",
+        [("c", list(range(cfg.rows_per_band)) * cfg.bands, 0)],
+        "image_id string, minhash array<int>, phash long",
     )
     k2 = [r.key for r in band_keys(df2, cfg).collect()]
     assert len(set(k2)) == len(k2)
 
 
-def test_verify_edges_retry_pairs_phash_gate(spark):
-    """The retry's quadratic enumeration is collapsed by a phash-hamming
-    pre-filter (config.retry_phash_max_hamming): a signature-agreeing
-    pair with DISTANT phashes is not recovered via retry (documented
-    residual — impossible for PSNR>=40 near-dups, which measure 0-2
-    bits), while the same pair with close phashes is."""
-    from arhivum_spark.operators.lsh import verify_edges_retry_pairs
+def test_bucket_pairs_phash_gate(spark):
+    """The quadratic member-pair enumeration is collapsed by a phash
+    Hamming gate (config.pair_phash_max_hamming) inside the self-join: a
+    signature-agreeing non-hub pair with DISTANT phashes is not a
+    candidate (documented residual — impossible for PSNR>=40 near-dups,
+    which measure 0-2 bits), while the same pair with close phashes is.
+    Star edges are never gated."""
 
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    coll = [2000 + i for i in range(k)]
-
-    def run(ph_b, ph_c):
-        sigs = spark.createDataFrame(
-            [("img-a", coll, 7), ("img-b", base, ph_b), ("img-c", reenc, ph_c)],
-            "image_id string, minhash array<int>, phash long",
+    def run(ph_c):
+        return _candidates_and_verified(
+            spark,
+            {(0, 77): [1, 10, 11]},
+            {1: _COLL1, 10: _BASE, 11: _REENC},
+            {1: _FAR1, 10: 0, 11: ph_c},
         )
-        edges = spark.createDataFrame(
-            [("img-a", "img-b"), ("img-a", "img-c")], "src string, dst string"
-        )
-        return {
-            (r.src, r.dst)
-            for r in verify_edges_retry_pairs(edges, sigs, cfg).collect()
-        }
 
     # close phashes (hamming 1): recovered
-    assert run(0, 1) == {("img-b", "img-c")}
-    # distant phashes (hamming 64): gated out of the retry
-    assert run(0, -1) == set()
+    cand, got = run(1)
+    assert (10, 11) in cand and got == [(10, 11)]
+    # distant phashes (hamming 64): gated out, stars kept
+    cand, got = run(-1)
+    assert sorted(cand) == [(1, 10), (1, 11)] and got == []
 
 
 def test_session_disables_parquet_vectored_io(spark):
@@ -705,29 +703,6 @@ def test_psnr_inflight_batching_matches_single_shot(spark):
         psnr_verify_edges(edges, images, DedupConfig(psnr_max_inflight_edges=0))
 
 
-def test_verify_edges_rehub_no_duplicate_edges(spark):
-    """An edge verified via one bucket must not be re-emitted by another
-    bucket's retry pass: bucket {b, c} verifies (b, c) directly, while
-    collider bucket {a, b, c} rejects both star edges and re-elects
-    hub b — its retry edge (b, c) must be suppressed, not duplicated."""
-    from arhivum_spark.operators.lsh import verify_edges_rehub
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
-    reenc = base[:100] + [1000 + i for i in range(k - 100)]
-    collider = base[:8] + [2000 + i for i in range(k - 8)]
-    sigs = _sig_rows(
-        spark, {"img-a": collider, "img-b": base, "img-c": reenc}
-    )
-    edges = spark.createDataFrame(
-        [("img-b", "img-c"), ("img-a", "img-b"), ("img-a", "img-c")],
-        "src string, dst string",
-    )
-    rows = verify_edges_rehub(edges, sigs, cfg).collect()
-    assert [(r.src, r.dst) for r in rows] == [("img-b", "img-c")]
-
-
 def test_required_java_opts_survive_caller_extra_conf():
     """extra_conf supplying its own extraJavaOptions must not silently
     drop the GCLocker workaround (BENCH.md cliff #4) — the flags merge,
@@ -749,38 +724,23 @@ def test_required_java_opts_survive_caller_extra_conf():
 # propagation in the PSNR kernel
 
 
-def test_retry_pairs_recovers_pass_fail_asymmetric_pair(spark):
+def test_bucket_pairs_recover_pass_fail_asymmetric_pair(spark):
     """est_jaccard is not transitive through a hub: J(H,m1) can pass the
     0.5 threshold while J(H,m2) fails it, with J(m1,m2) well above it.
-    A retry that pairs only FAILED members never enumerates (m1, m2) —
-    m2 is alone in its failed group — and the true pair is orphaned if
-    no other band saves it. The retry must pair failed members against
-    ALL members of the hub group (passed included)."""
-    from arhivum_spark.operators.lsh import (
-        verify_edges,
-        verify_edges_retry_pairs,
-    )
-
-    cfg = DedupConfig()
-    k = cfg.num_perm
-    base = list(range(k))
+    The bucket's member pair (m1, m2) is a candidate whatever the star
+    edges score, so the true pair is verified directly."""
     # m1 = base; H agrees with m1 on exactly half the positions (passes
     # at >= 0.5); m2 agrees with m1 on 96/128 (passes) but with H on
     # only 32/128 (fails)
-    hub = base[: k // 2] + [6000 + i for i in range(k - k // 2)]
-    m2 = [7000 + i for i in range(k // 4)] + base[k // 4:]
-    sigs = _sig_rows(spark, {"img-h": hub, "img-m1": base, "img-m2": m2})
-    edges = spark.createDataFrame(
-        [("img-h", "img-m1"), ("img-h", "img-m2")], "src string, dst string"
+    hub = _BASE[: _K // 2] + [6000 + i for i in range(_K - _K // 2)]
+    m2 = [7000 + i for i in range(_K // 4)] + _BASE[_K // 4:]
+    _cand, got = _candidates_and_verified(
+        spark,
+        {(0, 77): [1, 2, 3]},
+        {1: hub, 2: _BASE, 3: m2},
+        {1: 0, 2: 0, 3: 1},
     )
-    plain = {(r.src, r.dst) for r in verify_edges(edges, sigs, cfg).collect()}
-    assert plain == {("img-h", "img-m1")}  # m2 orphaned without the fix
-
-    got = {
-        (r.src, r.dst)
-        for r in verify_edges_retry_pairs(edges, sigs, cfg).collect()
-    }
-    assert got == {("img-h", "img-m1"), ("img-m1", "img-m2")}
+    assert sorted(got) == [(1, 2), (2, 3)]
 
 
 def test_psnr_fallback_join_is_shuffle_hash(spark):
@@ -1253,6 +1213,8 @@ def test_base_identifier_strips_only_trailing_segment(spark):
             ("com.example:api:client:2.0",),
             ("name:1.0",),
             ("noversion",),
+            (":abc",),
+            ("::abc",),
         ],
         "ident string",
     )
@@ -1260,10 +1222,23 @@ def test_base_identifier_strips_only_trailing_segment(spark):
         r["b"] for r in df.select(base_identifier("ident").alias("b")).collect()
     ]
     # 4-segment idents keep their 3rd segment (previously both collapsed
-    # to 'com.example:api' — spurious same-base duplicate candidates)
+    # to 'com.example:api' — spurious same-base duplicate candidates).
+    # A colon at position 0 is not a version separator (the reference's
+    # lastColon > 0 guard): ':abc' stays, '::abc' strips at index 1.
     assert got == [
-        "com.example:api:core", "com.example:api:client", "name", "noversion"
+        "com.example:api:core", "com.example:api:client", "name", "noversion",
+        ":abc", ":",
     ]
+
+
+def test_registry_cap_raises_instead_of_asserting():
+    """The 50-entry registry cap must survive ``python -O``, which strips
+    asserts: it raises RuntimeError."""
+    from arhivum_spark.queries import check_registry_cap
+
+    check_registry_cap(dict.fromkeys(range(50)))
+    with pytest.raises(RuntimeError, match="51 entries"):
+        check_registry_cap(dict.fromkeys(range(51)))
 
 
 def test_cli_rejects_object_store_stage_dir(spark, tmp_path):
