@@ -51,7 +51,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True, help="cluster table output dir")
     p.add_argument(
         "--stage-dir", required=True,
-        help="checkpoint root; rerun with the same dir to resume",
+        help=(
+            "checkpoint root; rerun with the same dir to resume. Several "
+            "drivers resuming from one shared root need a filesystem with "
+            "working cross-host advisory locks (e.g. NFSv4): the manifest "
+            "lock is flock"
+        ),
     )
     p.add_argument(
         "--captions-out", default=None,

@@ -157,28 +157,26 @@ def substring_pairs(
     Default False keeps exact full-pair semantics — the registry query's
     DuckDB oracle enumerates all pairs.
 
-    Distributed generalized-suffix matching with POWER-OF-TWO ANCHOR
-    windows (round 4 — bounds emission): containers do NOT emit a window
-    per distinct candidate length (O(n_tok x distinct lengths) rows — a
-    10k-token container against 64 candidate lengths emitted ~640k hash
-    rows pre-round-4). Instead, for each candidate length L define the
-    anchor length m(L) = 2^floor(log2 L); since m >= L/2, the candidate's
-    m-token PREFIX and m-token SUFFIX together cover all L tokens, so
-    `container[s : s+L] == candidate` iff the prefix hash matches at
-    window start s AND the suffix hash matches at window start s + L - m.
-    Containers therefore emit windows only at the <= log2(max_tokens)+1
-    distinct anchor lengths actually present among candidates — emission
-    is O(n_tok x log(substring_max_tokens)) per container, independent of
-    how many distinct candidate lengths exist — and two equi-joins (the
-    second keyed on (container, m, aligned start)) replace the one. Both
-    joins carry only 64+128-bit hashes and int positions, never token
-    arrays; the false-positive guard is the same dual xxhash64+md5 as
-    before, now applied to both halves. All emission is JVM-side
-    (sequence/slice/xxhash64). m(L) is computed by the SAME expression on
-    the candidate frame that feeds both the anchor-length broadcast and
-    the join keys, so any floating-point wobble in floor(log2 L) at exact
-    powers of two is self-consistent (and any m in [ceil(L/2), L] is
-    algorithmically valid).
+    Distributed generalized-suffix matching: one power-of-two prefix-
+    anchor pass plus a full-span check. For candidate length L the anchor
+    length is m(L) = 2^floor(log2 L) <= L; containers emit m-token window
+    hashes only at the <= log2(substring_max_tokens)+1 anchor lengths
+    present among candidates (_anchor_windows: O(n_tok x log
+    substring_max_tokens) per container, however many distinct lengths
+    exist). One equi-join on (m, window xxhash64 = prefix xxhash64) finds
+    every start s where container[s : s+m] may equal the candidate's
+    prefix; each hit then verifies the WHOLE span: xxhash64 + md5 of
+    slice(container tokens, s, L) must equal the same two hashes of the
+    candidate's token list (computed once per candidate), so a 64-bit
+    prefix collision costs one extra hit, never a false pair. Hit rows
+    are fixed-width (ids, ints, hashes) and meet the container tokens in
+    one join on container_id. Residual: a prefix shared by many
+    candidates and many containers (a hot boilerplate opening) yields
+    |candidates| x |containers| hits before the span check drops the
+    non-matches. m(L) is computed by ONE expression on the candidate
+    frame, which feeds both the anchor broadcast and the join key, so
+    floating-point wobble in floor(log2 L) is self-consistent (any m in
+    [1, L] is valid).
 
     The within-bucket exhaustive variant (true suffix array) is
     substring_pairs_within_groups below.
@@ -212,6 +210,10 @@ def substring_pairs(
                 ).orderBy("_id")
             ),
         )
+        # keyed feeds the identity edges and the rep matching's three
+        # token reads — pin it or the Window's text exchange re-executes
+        # per branch (as simhash_near_pairs pins `flagged`)
+        keyed = keyed.localCheckpoint(eager=False)
         members = keyed.filter(F.col("_id") != F.col("_rep"))
         identity = members.select(
             F.col("_id").alias("contained_id"),
@@ -242,74 +244,52 @@ def substring_pairs(
     ).withColumn("n_tok", F.size("toks"))
 
     m_expr = F.pow(F.lit(2.0), F.floor(F.log2("n_tok"))).cast("int")
+    prefix = F.concat_ws("\x1f", F.slice("toks", F.lit(1), F.col("m")))
+    full = F.concat_ws("\x1f", "toks")
     cand = toks.filter(
         (F.col("n_tok") >= 1) & (F.col("n_tok") <= cfg.substring_max_tokens)
-    ).withColumn("m", m_expr)
-    prefix = F.slice("toks", F.lit(1), F.col("m"))
-    suffix = F.slice("toks", F.col("n_tok") - F.col("m") + 1, F.col("m"))
-    # cand feeds THREE consumers (anchors_df distinct, prefix join,
-    # suffix join) — pin it or the corpus tokenize + 4-hash projection
-    # re-executes per consumer; pinned rows are ids + ints + hashes only
-    cand = cand.select(
+    ).withColumn("m", m_expr).select(
         F.col("_id").alias("contained_id"),
         F.col("n_tok").alias("len"),
         "m",
-        F.xxhash64(F.concat_ws("\x1f", prefix)).alias("pwh"),
-        F.md5(F.concat_ws("\x1f", prefix)).alias("pwh2"),
-        F.xxhash64(F.concat_ws("\x1f", suffix)).alias("swh"),
-        F.md5(F.concat_ws("\x1f", suffix)).alias("swh2"),
-    ).localCheckpoint(eager=False)
+        F.xxhash64(prefix).alias("pwh"),
+        F.xxhash64(full).alias("fwh"),
+        F.md5(full).alias("fwh2"),
+    )
     # Anchor lengths stay a (tiny, <= log2(substring_max_tokens)+1 row)
     # FRAME broadcast-joined against the corpus — no driver collect, no
     # extra Spark job, and window emission covers exactly the anchor
     # lengths that can match.
     anchors_df = cand.select("m").distinct()
-    # The window frame is consumed twice (prefix join + aligned suffix
-    # self-join); without a pin the explode+hash emission — the dominant
-    # cost — executes twice. Lazy localCheckpoint materializes it on first
-    # use; the pinned rows are (id, m, int, 64-bit, 128-bit) only.
-    windows = _anchor_windows(toks, anchors_df).localCheckpoint(eager=False)
-    half1 = windows.join(
-        cand,
-        (windows["m"] == cand["m"])
-        & (windows["wh"] == cand["pwh"])
-        & (windows["wh2"] == cand["pwh2"]),
-    ).select(
-        "container_id",
-        "contained_id",
-        windows["m"].alias("m"),
-        # where the suffix window must begin for this (start, len) match
-        (F.col("_s") + F.col("len") - windows["m"]).alias("_s2"),
-    )
-    return (
-        half1.join(
-            windows.select(
-                "container_id",
-                "m",
-                F.col("_s").alias("_s2"),
-                F.col("wh").alias("swh"),
-                F.col("wh2").alias("swh2"),
-            ),
-            ["container_id", "m", "_s2"],
-        )
-        .join(
-            # one row per contained_id already (no distinct: it would add a
-            # full exchange; the final distinct below owns set semantics)
-            cand.select("contained_id", "swh", "swh2"),
-            ["contained_id", "swh", "swh2"],
+    windows = _anchor_windows(toks, anchors_df)
+    hits = (
+        windows.join(
+            cand, (windows["m"] == cand["m"]) & (windows["wh"] == cand["pwh"])
         )
         .filter(F.col("contained_id") != F.col("container_id"))
+        .select("container_id", "contained_id", "_s", "len", "fwh", "fwh2")
+    )
+    span = F.concat_ws("\x1f", F.slice("toks", F.col("_s"), F.col("len")))
+    return (
+        hits.join(
+            toks.select(F.col("_id").alias("container_id"), "toks"),
+            "container_id",
+        )
+        .filter(
+            (F.xxhash64(span) == F.col("fwh")) & (F.md5(span) == F.col("fwh2"))
+        )
         .select("contained_id", "container_id")
         .distinct()
     )
 
 
 def _anchor_windows(toks: DataFrame, anchors_df: DataFrame) -> DataFrame:
-    """(container_id, m, _s, wh, wh2) for every contiguous m-token window
-    of every text, for each anchor length m in `anchors_df` (broadcast —
-    at most log2(substring_max_tokens)+1 rows). Emission is therefore
-    O(n_tok * |anchors|) per container. Split out so the planted-long-
-    document test can assert the bound directly."""
+    """(container_id, m, _s, wh): xxhash64 of every contiguous m-token
+    window of every text, for each anchor length m in `anchors_df`
+    (broadcast — at most log2(substring_max_tokens)+1 rows). Emission is
+    therefore O(n_tok * |anchors|) per container. No md5, no tokens: the
+    prefix join's hits are checked on their full span afterwards. Split
+    out so the planted-long-document test can assert the bound directly."""
     win_slice = F.slice("toks", F.col("_s"), F.col("m"))
     return (
         toks.join(F.broadcast(anchors_df), F.col("m") <= F.col("n_tok"))
@@ -326,7 +306,6 @@ def _anchor_windows(toks: DataFrame, anchors_df: DataFrame) -> DataFrame:
             "m",
             "_s",
             F.xxhash64(F.concat_ws("\x1f", win_slice)).alias("wh"),
-            F.md5(F.concat_ws("\x1f", win_slice)).alias("wh2"),
         )
     )
 

@@ -1606,7 +1606,8 @@ WHERE inter / (sa.sz + sb.sz - inter) >= 0.2
 # Substring containment (the suffix-array pass's contract): contained's
 # full token sequence appears contiguously inside container's. With
 # single-space-joined tokens this is exactly delimited string containment,
-# so DuckDB's position() is a true oracle for the window-hash join.
+# so DuckDB's position() is a true oracle for the operator's one pass:
+# a prefix-anchor window join whose hits are checked on the full span.
 # (The string_split(text,' ') below is the symmetric DATA-PREP step on
 # both engines — the derived corpus is single-space-joined, so the
 # operator's contract tokenizer sees identical tokens either way.)

@@ -18,6 +18,12 @@ cluster the same role is played by the object store's conditional put /
 Iceberg's atomic metadata swap.) A stage is "committed" only if both the
 manifest entry and `_SUCCESS` exist.
 
+Shared-filesystem caveat: flock is advisory and only as strong as the
+filesystem's lock support. Several drivers on different hosts resuming
+from one stage root need cross-host advisory locks (e.g. NFSv4); on NFSv3
+without a lock manager, or a mount that ignores flock, they can lose each
+other's manifest entries. One driver per stage root is always safe.
+
 Per-stage, per-partition metrics (north rule) are appended to a `_metrics`
 table: stage, spark partition id, row count, wall-clock.
 """
@@ -64,7 +70,8 @@ class StageStore:
 
         flock is per-open-file and released on close, so a crashed
         holder never wedges the store; lock scope is the manifest swap
-        only (milliseconds), never a data write."""
+        only (milliseconds), never a data write. Cross-host: see the
+        module docstring's shared-filesystem caveat."""
         with open(self._manifest_path + ".lock", "w") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
             try:

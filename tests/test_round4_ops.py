@@ -6,6 +6,8 @@ O(n_tok x distinct candidate lengths) per container)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -85,26 +87,12 @@ def test_substring_pairs_long_container_planted_oracle(spark):
     assert not (decoy_ids & contained_in_0)
 
 
-def test_substring_pairs_random_corpus_definitional_oracle(spark):
-    """Randomized parity against the definitional oracle (contiguous
-    token-sequence containment, brute force): a tiny 3-token vocabulary
-    makes repeated tokens, periodic runs, and exact-power-of-two lengths
-    common — the adversarial regime for the prefix+suffix anchor
-    combination (a wrong alignment of two half-windows would show up
-    here as a false pair; a missed anchor length as a false negative)."""
-    rng = np.random.default_rng(29)
-    vocab = ["a", "b", "c"]
-    texts = [
-        " ".join(rng.choice(vocab, size=L).tolist())
-        for L in rng.integers(1, 40, size=30)
-    ]
-    # plant exact-power-of-two and unit lengths explicitly
-    texts += [texts[0].split(" ", 1)[0], " ".join(texts[1].split()[:2])]
-    toks = [t.split() for t in texts]
-    cfg = DedupConfig()
+def _containment_truth(toks, max_tokens):
+    """Definitional oracle: (i, j) where toks[i] is a contiguous token
+    run of toks[j], brute force."""
     truth = set()
     for i, ta in enumerate(toks):
-        if not (1 <= len(ta) <= cfg.substring_max_tokens):
+        if not (1 <= len(ta) <= max_tokens):
             continue
         for j, tb in enumerate(toks):
             if i == j or len(ta) > len(tb):
@@ -114,13 +102,160 @@ def test_substring_pairs_random_corpus_definitional_oracle(spark):
                 for s in range(len(tb) - len(ta) + 1)
             ):
                 truth.add((i, j))
+    return truth
+
+
+def _expand_collapsed(collapsed, rows):
+    """Expand collapse_identical=True output through its identical-text
+    groups (min id per text is the representative) into the full pair
+    set; asserts the bidirectional identity stars on the way."""
+    rep: dict = {}
+    for i, t in rows:
+        rep[t] = min(rep.get(t, i), i)
+    rep_of = {i: rep[t] for i, t in rows}
+    for i, _ in rows:
+        if rep_of[i] != i:
+            assert (i, rep_of[i]) in collapsed and (rep_of[i], i) in collapsed
+    rep_edges = {
+        (u, v) for u, v in collapsed if rep_of[u] == u and rep_of[v] == v
+    }
+    ids = [i for i, _ in rows]
+    return {
+        (x, y)
+        for x in ids
+        for y in ids
+        if x != y
+        and (rep_of[x] == rep_of[y] or (rep_of[x], rep_of[y]) in rep_edges)
+    }
+
+
+def _pairs(spark, texts, cfg, collapse):
     got = {
         (int(r["contained_id"]), int(r["container_id"]))
         for r in dedup_text.substring_pairs(
-            _mk_docs(spark, texts), cfg, id_col="id", text_col="text"
+            _mk_docs(spark, texts), cfg, id_col="id", text_col="text",
+            collapse_identical=collapse,
         ).collect()
     }
-    assert got == truth
+    if collapse:
+        got = _expand_collapsed(got, list(enumerate(texts)))
+    return got
+
+
+def test_substring_pairs_random_corpus_definitional_oracle(spark):
+    """Randomized parity against the definitional oracle (contiguous
+    token-sequence containment, brute force), over several seeds and in
+    both collapse_identical modes (the collapsed edge set expanded
+    through its identical-text groups): a tiny 3-token vocabulary makes
+    repeated tokens, periodic runs, identical short texts and
+    exact-power-of-two lengths common — the adversarial regime for
+    prefix anchoring (a prefix hit whose full span differs would show up
+    here as a false pair; a missed anchor length as a false negative)."""
+    cfg = DedupConfig()
+    vocab = ["a", "b", "c"]
+    for seed in (29, 3, 7, 13):
+        rng = np.random.default_rng(seed)
+        texts = [
+            " ".join(rng.choice(vocab, size=L).tolist())
+            for L in rng.integers(1, 40, size=30)
+        ]
+        # plant exact-power-of-two and unit lengths explicitly
+        texts += [texts[0].split(" ", 1)[0], " ".join(texts[1].split()[:2])]
+        truth = _containment_truth(
+            [t.split() for t in texts], cfg.substring_max_tokens
+        )
+        for collapse in (False, True):
+            got = _pairs(spark, texts, cfg, collapse)
+            assert got == truth, (seed, collapse)
+
+
+@pytest.mark.parametrize("collapse", [False, True])
+def test_substring_prefix_anchor_decoys_fail_span_check(spark, collapse):
+    """Decoys share a planted candidate's whole m-token prefix anchor
+    (m = 2^floor(log2 L)) and differ at exactly one token past it, so
+    every decoy is a prefix-join hit inside the long container; only the
+    full-span check can reject it. Non-powers of two (3, 5, 7, 33, 63)
+    leave 1..31 tokens past the anchor."""
+    n_tok = 3_000
+    rng = np.random.default_rng(41)
+    base = [str(x) for x in rng.integers(0, 1_000_000, n_tok)]
+    texts = [" ".join(base)]
+    planted, decoys = [], []
+    for L, off in [(3, 11), (5, 200), (7, 700), (33, 1400), (63, 2500)]:
+        seg = base[off : off + L]
+        m = 1 << (L.bit_length() - 1)
+        planted.append(len(texts))
+        texts.append(" ".join(seg))
+        # first token past the anchor, and the last token
+        for k in sorted({m, L - 1}):
+            d = seg[:k] + [f"decoy-{L}-{k}"] + seg[k + 1 :]
+            assert d[:m] == seg[:m]
+            decoys.append(len(texts))
+            texts.append(" ".join(d))
+    cfg = DedupConfig()
+    got = _pairs(spark, texts, cfg, collapse)
+    assert got == _containment_truth(
+        [t.split() for t in texts], cfg.substring_max_tokens
+    )
+    contained_in_0 = {a for a, b in got if b == 0}
+    assert set(planted) <= contained_in_0
+    assert not (set(decoys) & contained_in_0)
+
+
+@pytest.mark.parametrize("collapse", [False, True])
+def test_substring_periodic_container_partial_prefix_hits(spark, collapse):
+    """A periodic container (a b a b ...) where each candidate's prefix
+    anchor matches at many starts but the full span completes at only
+    some of them (or none): the span check must keep exactly the
+    completing starts' pairs."""
+    container = ["a", "b"] * 20 + ["a", "c"] + ["a", "b"] * 5
+    cands = [
+        ["a", "b", "a", "b", "a", "c"],          # L=6, m=4: one start
+        ["a", "b", "a", "b", "a", "d"],          # prefix at 20 starts, none
+        ["b", "a", "b", "a", "b", "a", "b"],      # L=7: many starts
+        ["a", "b"] * 5 + ["a", "c", "a", "b"],    # L=14, m=8: one start
+        ["a", "b"] * 21,                          # L=42, m=32: none
+        ["b", "a", "c", "a", "b", "a", "b", "a", "b", "a", "b", "a", "b", "x"],
+    ]
+    texts = [" ".join(container)] + [" ".join(c) for c in cands]
+    toks = [t.split() for t in texts]
+    for c in cands:
+        m = 1 << (len(c).bit_length() - 1)
+        assert sum(
+            container[s : s + m] == c[:m] for s in range(len(container) - m + 1)
+        ) >= 1
+    cfg = DedupConfig()
+    truth = _containment_truth(toks, cfg.substring_max_tokens)
+    assert {i for i, j in truth if j == 0} == {1, 3, 4}
+    assert _pairs(spark, texts, cfg, collapse) == truth
+
+
+def test_substring_pairs_single_windows_pass_plan(spark):
+    """Plan shape of the one-pass design: the anchor windows are the
+    narrow (container_id, m, _s, wh) rows, they are generated exactly once
+    in substring_pairs' optimized plan (consumed by one prefix join, no
+    aligned self-join), and no pinned frame carries the window hash. With
+    collapse_identical the identical-text Window is pinned instead, so
+    its text exchange runs once for its several consumers."""
+    df = _mk_docs(spark, ["a b c d e", "b c d", "c d", "a b c d e"])
+    toks = df.select(
+        F.col("id").alias("_id"), F.split("text", " ").alias("toks")
+    ).withColumn("n_tok", F.size("toks"))
+    anchors = spark.createDataFrame([(2,)], "m int")
+    assert dedup_text._anchor_windows(toks, anchors).columns == [
+        "container_id", "m", "_s", "wh",
+    ]
+    for collapse in (False, True):
+        out = dedup_text.substring_pairs(
+            df, DedupConfig(), collapse_identical=collapse
+        )
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Generate explode(") == 1, (collapse, plan)
+        pinned = re.findall(r"LogicalRDD \[([^\]]*)\]", plan)
+        assert pinned and not any(
+            re.search(r"\bwh#", cols) for cols in pinned
+        ), (collapse, pinned)
+        assert "Window [" not in plan, (collapse, plan)
 
 
 # ---------------------------------------------------------------------------
@@ -202,29 +337,7 @@ def test_substring_collapse_identical_expansion_equivalence(spark):
         ).collect()
     }
 
-    text_of = dict(rows)
-    rep: dict[str, str] = {}
-    for i, t in rows:
-        rep[t] = min(rep.get(t, i), i)
-    rep_of = {i: rep[t] for i, t in rows}
-
-    # identity stars present, both directions
-    for i, t in rows:
-        if rep_of[i] != i:
-            assert (i, rep_of[i]) in collapsed and (rep_of[i], i) in collapsed
-
-    rep_edges = {
-        (u, v) for u, v in collapsed if rep_of[u] == u and rep_of[v] == v
-    }
-    ids = [i for i, _ in rows]
-    expanded = {
-        (x, y)
-        for x in ids
-        for y in ids
-        if x != y
-        and (rep_of[x] == rep_of[y] or (rep_of[x], rep_of[y]) in rep_edges)
-    }
-    assert expanded == full
+    assert _expand_collapsed(collapsed, rows) == full
     # and the quadratic identical-text group emits stars, not all pairs:
     # g1 contributes 4 identity edges + rep rows, never the 6 ordered pairs
     g1 = {"t1", "t2", "t3"}

@@ -140,3 +140,86 @@ def test_stateful_flagging_annotates_instead_of_dropping(spark, tmp_path):
         F.max("seen_before").alias("mx"), F.count("*").alias("n")
     )
     assert mx.filter(F.col("mx") != F.col("n") - 1).count() == 0
+
+
+def test_two_drop_stream_flags_and_drops_batch1_hash_in_batch2(spark, tmp_path):
+    """Two source files read one per micro-batch (maxFilesPerTrigger=1):
+    a hash first seen in batch 1 that arrives again in batch 2 is flagged
+    with batch 1's row as representative by flag_duplicates_stateful, and
+    dropped by dedup_stream — the key state crosses the batch boundary.
+    A new hash in batch 2 passes both."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from arhivum_spark.streaming.ingest import flag_duplicates_stateful
+
+    schema = "event_id long, content_sha256 string, event_time timestamp"
+    src = tmp_path / "drops"
+    src.mkdir()
+    t0 = 1_700_000_000_000_000  # microseconds; one minute between drops
+    drops = [
+        [(1, "h1", t0), (2, "h2", t0)],
+        [(3, "h1", t0 + 60_000_000), (4, "h3", t0 + 60_000_000)],
+    ]
+    now = time.time()
+    for k, rows in enumerate(drops):
+        path = src / f"drop-{k}.parquet"
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "content_sha256": [r[1] for r in rows],
+                    "event_time": pa.array(
+                        [r[2] for r in rows], pa.timestamp("us", tz="UTC")
+                    ),
+                }
+            ),
+            path,
+        )
+        # the file source orders new files by modification time
+        os.utime(path, (now - 100 + 50 * k, now - 100 + 50 * k))
+
+    def two_drops():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+    q = (
+        flag_duplicates_stateful(two_drops())
+        .writeStream.format("memory")
+        .queryName("two_drop_flags")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_flags"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    batch_rows = [p["numInputRows"] for p in q.recentProgress]
+    assert [n for n in batch_rows if n] == [2, 2]  # two micro-batches
+    flags = {
+        r["event_id"]: (r["is_duplicate"], r["representative_id"], r["seen_before"])
+        for r in spark.sql("SELECT * FROM two_drop_flags").collect()
+    }
+    assert flags == {
+        1: (False, 1, 0),
+        2: (False, 2, 0),
+        3: (True, 1, 1),
+        4: (False, 4, 0),
+    }
+
+    out_dir = tmp_path / "out"
+    q = ingest_stream(
+        dedup_stream(two_drops()), str(out_dir), str(tmp_path / "ckpt_drop")
+    )
+    q.awaitTermination(180)
+    kept = {
+        b: {r["event_id"] for r in spark.read.parquet(str(out_dir / b)).collect()}
+        for b in sorted(os.listdir(out_dir))
+        if b.startswith("batch-")
+    }
+    assert kept["batch-0000"] == {1, 2}
+    assert set().union(*(v for b, v in kept.items() if b != "batch-0000")) == {4}
