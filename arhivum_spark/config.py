@@ -121,6 +121,12 @@ class DedupConfig:
                 "simhash_max_hamming must be in [0, 63], got "
                 f"{self.simhash_max_hamming}"
             )
+        if self.cc_max_iters < 1:
+            # connected_components rejects it too, but only in s4 — after
+            # s1..s3b have been computed and committed
+            raise ValueError(
+                f"cc_max_iters must be >= 1, got {self.cc_max_iters}"
+            )
 
 
 DEFAULT_CONFIG = DedupConfig()

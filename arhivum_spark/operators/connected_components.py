@@ -4,49 +4,41 @@ Replaces the reference's greedy O(n^2) transitive grouping with a
 processed-set (CodeProjectDuplicateDetectionService.java:48-95) — that loop
 IS small-scale connected components; here it's the distributed version.
 
-Two algorithms:
+One algorithm: min-label propagation with a pointer jump in every round.
 
-- min-label propagation with ADAPTIVE pointer jumping
-  (`connected_components`, the default): each round does
-      label(v) <- min(label(v), min_{(u,v) in E} label(u))   (hop)
-  and, from round `jump_after` on,
-      label(v) <- label(label(v))                            (jump)
-  iterated to fixpoint — joins + one aggregation per round,
-  `localCheckpoint()` truncates lineage (north rule: checkpointed
-  lineage). The jump step halves the remaining label-path each round,
-  so convergence is O(log diameter) rounds, not O(diameter) — measured:
-  a diameter-63 chain converges in 7 all-jump rounds vs ~63 hop-only.
-  The jump is a full self-join (one extra shuffle of the labels frame
-  per round), which is pure cost on our dominant workload — hub-star
-  candidate edges (operators/lsh.py) converge in <= 3 hop-only rounds —
-  so the first `jump_after` rounds skip it and only a graph that is
-  still moving afterwards (deep components) pays for the logarithmic
-  gear. Labels are always ids of touched vertices and only ever
-  decrease, so the jump self-join is total and monotone.
-- alternating large-star / small-star (`connected_components_star`,
-  Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14): O(log^2 n) rounds regardless of diameter — the adversarial
-  long-chain fallback. When label propagation exhausts max_iters it
-  DELEGATES here (never returns partial labels); pass
-  fallback_star=False to get a ConvergenceError instead.
+- Round 0 is one aggregate over the symmetric edges,
+      label(v) <- least(v, min_{(u,v) in E} u)
+  followed by the jump label(v) <- label(label(v)) in the same plan.
+- Every later round is a hop then a jump,
+      hop(v)   <- min(label(v), min_{(u,v) in E} label(u))
+      label(v) <- label_prev(hop(v))
+  where label_prev is the previous round's checkpointed labels frame, so
+  the round pins nothing but its own result. Labels are always ids of
+  touched vertices and never increase, so the jump join is total and
+  monotone (label_prev(u) <= u).
+
+Each round is ONE `localCheckpoint()` of the labels frame (north rule:
+checkpointed lineage), and the count of labels it changed is an
+`Observation` filled in by that same checkpoint — no separate count job.
+The jump halves the remaining label-path every round, so a component of
+diameter d converges in O(log d) rounds; the hub-star graphs the dedup
+pipelines feed in (operators/lsh.py) finish in 2-3, the last of them a
+round that changes nothing. Labels still changing after `max_iters`
+rounds raise `ConvergenceError` — partial labels are never returned.
 """
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-log = logging.getLogger(__name__)
 
 
 class ConvergenceError(RuntimeError):
     """Label propagation exhausted max_iters with labels still changing.
 
     Returning the partial labels silently would hand the caller WRONG
-    components (a chain longer than max_iters hops from its min vertex is
-    the failure mode); raising makes non-convergence impossible to miss.
+    components (a chain deeper than the round budget can resolve is the
+    failure mode); raising makes non-convergence impossible to miss.
     """
 
 
@@ -55,228 +47,100 @@ def connected_components(
     edges: DataFrame,
     max_iters: int = 50,
     id_col: str = "id",
-    fallback_star: bool = True,
-    jump_after: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """vertices(id), edges(src,dst) -> (id, component) with component =
     min vertex id reachable. Vertices absent from edges keep component=id.
 
-    Output is restricted to `vertices`: edge endpoints outside it still
-    PROPAGATE labels (so an out-of-vertex node can bridge two vertices)
-    but are not emitted.
+    Output is restricted to `vertices` (one row per vertices row; callers
+    pass distinct ids): edge endpoints outside it still PROPAGATE labels
+    (so an out-of-vertex node can bridge two vertices) but are not
+    emitted.
 
-    Rounds 0..jump_after-1 are plain min-label hops (enough for the
-    hub-star graphs the dedup pipelines feed in); afterwards each round
-    adds a pointer jump, giving O(jump_after + log diameter) rounds on
-    deep components.
+    Raises ConvergenceError if labels still change after `max_iters`
+    rounds (round 0 included).
 
-    If max_iters rounds pass with labels still changing (component
-    diameter too deep for the round budget), the partial labels
-    are NEVER returned: with fallback_star=True (default) the computation
-    is redone by the O(log^2 n)-round star algorithm
-    (connected_components_star, identical output contract); otherwise
-    ConvergenceError is raised.
-
-    If `stats` is a dict it receives {"rounds": n, "fallback": bool} —
-    observability for benchmarks and ops, no effect on the result.
+    If `stats` is a dict it receives {"rounds": n}, n counting round 0
+    and the final round that changed nothing — observability for
+    benchmarks and ops, no effect on the result.
     """
     if max_iters < 1:
         # a zero-round run would return all-self labels — exactly the
         # partial-labels outcome the ConvergenceError guard exists to stop
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
+    # Pinned lazily: materialized by round 0's checkpoint job, read again
+    # by every later hop. No distinct(): duplicate edges cannot change a
+    # minimum. A null endpoint connects nothing; dropping it here also
+    # spares round 0 an inferred isnotnull(a) under one side of its jump
+    # join, so both sides share one aggregate exchange.
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint()
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .localCheckpoint(eager=False)
     )
-    # Only vertices incident to an edge can ever change labels; isolated
-    # vertices (the vast majority in a dedup graph) are appended afterwards
-    # with component = their own id. The loop then iterates over the edge
-    # endpoint set, not the full vertex set.
-    touched = sym.select(F.col("a").alias(id_col)).distinct()
-    isolated = vertices.join(touched, id_col, "left_anti").select(
-        F.col(id_col), F.col(id_col).alias("component")
+    # Only edge endpoints ever get a label; every other vertex keeps its
+    # own id at emit time.
+    first = (
+        sym.groupBy("a")
+        .agg(F.min("b").alias("_m"))
+        .select(
+            F.col("a").alias("v"),
+            F.least("a", "_m").alias("_hop"),
+            F.col("a").alias("_old"),
+        )
     )
-    labels = touched.select(
-        F.col(id_col).alias("v"), F.col(id_col).alias("component")
-    ).localCheckpoint()
-    n_changed = 0
-    for it in range(max_iters):
-        neighbor_min = (
-            sym.join(labels, sym.a == labels.v)
-            .groupBy(F.col("b").alias("v2"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        hopped = labels.join(
-            neighbor_min, labels.v == neighbor_min.v2, "left"
-        ).select(
-            "v",
-            F.col("component").alias("_old"),
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_component"), F.col("component")),
-            ).alias("_hop"),
-        )
-        if it < jump_after:
-            # hop-only: hub-star graphs finish here without ever paying
-            # for the jump's extra labels-frame shuffle
-            stepped = hopped.select(
-                "v", F.col("_hop").alias("component"), "_old"
+    step = _jump(first, first.select("v", F.col("_hop").alias("component")))
+    for rnd in range(max_iters):
+        if rnd:
+            step = _jump(_hop(sym, labels), labels)
+        obs = Observation()
+        labels = (
+            step.observe(
+                obs,
+                F.count_if(F.col("component") < F.col("_old")).alias("changed"),
             )
-        else:
-            # pointer jump: component <- component(component). Every
-            # label is the id of a touched vertex (mins over sym
-            # endpoints + self), so the self-join is total; labels are
-            # monotone non-increasing, so the jump can only improve.
-            # Halves remaining label-path length per round => O(log
-            # diameter) rounds from here on. Pin hopped first: the
-            # self-join references it twice and the static plan
-            # duplicates the hop aggregation under both inputs —
-            # exchange reuse is not guaranteed across AQE stages.
-            hopped = hopped.localCheckpoint()
-            jump_map = hopped.select(
-                F.col("v").alias("_jv"), F.col("_hop").alias("_jc")
-            )
-            stepped = hopped.join(
-                jump_map, hopped._hop == jump_map._jv, "left"
-            ).select(
-                "v",
-                F.least(
-                    F.col("_hop"), F.coalesce(F.col("_jc"), F.col("_hop"))
-                ).alias("component"),
-                F.col("_old"),
-            )
-        updated = (
-            stepped.withColumn("_changed", F.col("component") < F.col("_old"))
-            .drop("_old")
-        ).localCheckpoint()
-        n_changed = updated.filter(F.col("_changed")).count()
-        labels = updated.drop("_changed")
-        if n_changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = it + 1
-        stats["fallback"] = n_changed != 0
-    if n_changed != 0:
-        if fallback_star:
-            log.warning(
-                "connected_components: label propagation did not converge "
-                "in %d iterations (%d labels still changing) — falling "
-                "back to the large-star/small-star algorithm",
-                max_iters, n_changed,
-            )
-            # forward stats so "rounds" reports the star pass that
-            # actually produced the result (star overwrites it; the
-            # fallback=True set above survives)
-            return connected_components_star(
-                vertices, edges, id_col=id_col, stats=stats
-            )
-        raise ConvergenceError(
-            f"connected_components did not converge in {max_iters} "
-            f"iterations ({n_changed} labels still changing); component "
-            "diameter exceeds max_iters — raise cc_max_iters or use "
-            "connected_components_star"
-        )
-    emitted = labels.select(F.col("v").alias(id_col), "component").join(
-        vertices.select(id_col), id_col, "left_semi"
-    )
-    return emitted.unionByName(isolated)
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    max_rounds: int = 64,
-    id_col: str = "id",
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components
-    (Kiveris et al., SoCC'14) — O(log^2 n) rounds independent of
-    component diameter. Same contract as connected_components.
-
-    One round = large-star (every node hooks its larger neighbors onto
-    its minimum neighbor) then small-star (every node contracts its
-    smaller-or-equal neighbors onto the minimum). Each phase is a
-    groupBy(min) + join — partial-aggregated map-side, no windows, skew
-    bounded because a hot hub's neighbor list only ever aggregates to
-    one min per node. Convergence = the oriented edge set stops changing
-    (count + order-insensitive hash compared per round, both computed on
-    the checkpointed frame). At the fixpoint every edge is (member ->
-    component-min), i.e. the final star.
-    """
-    # oriented edges (a > b), self-loops dropped
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("a"),
-            F.least("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def signature(df: DataFrame) -> tuple:
-        # bit_xor: order-insensitive and wrap-free (a SUM of hashes
-        # overflows LongType under ANSI arithmetic)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    sig = signature(e)
-    for _round in range(max_rounds):
-        # large-star: for each node u (over the SYMMETRIC view), let
-        # m = min(N(u) + {u}); hook every STRICTLY LARGER neighbor onto m
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = (
-            sym.groupBy("a")
-            .agg(F.min("b").alias("mn"))
-            .select("a", F.least("a", "mn").alias("m"))
-        )
-        large = (
-            sym.filter(F.col("b") > F.col("a"))
-            .join(mins, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star: edges are (a > b); for each a, m = min neighbor;
-        # hook every neighbor (and a itself) onto m
-        smins = large.groupBy("a").agg(F.min("b").alias("m"))
-        small = (
-            large.join(smins, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .unionByName(smins.select("a", F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
+            .select("v", "component")
             .localCheckpoint()
         )
-        new_sig = signature(small)
-        e = small
-        if new_sig == sig:
-            if stats is not None:
-                stats["rounds"] = _round + 1
+        changed = obs.get["changed"]
+        if changed == 0:
             break
-        sig = new_sig
     else:
         raise ConvergenceError(
-            f"connected_components_star did not converge in {max_rounds} "
-            "rounds — this exceeds the O(log^2 n) bound for any realistic "
-            "graph and indicates a bug or adversarial input"
+            f"connected_components did not converge in {max_iters} rounds "
+            f"({changed} labels still changing); component diameter exceeds "
+            "the round budget — raise cc_max_iters"
         )
-
-    labels = e.select(F.col("a").alias(id_col), F.col("b").alias("component"))
-    hubs = e.select(F.col("b").alias(id_col)).distinct().join(
-        e.select(F.col("a").alias(id_col)), id_col, "left_anti"
-    ).select(id_col, F.col(id_col).alias("component"))
-    touched = labels.unionByName(hubs)
-    emitted = touched.join(vertices.select(id_col), id_col, "left_semi")
-    isolated = vertices.join(touched, id_col, "left_anti").select(
-        F.col(id_col), F.col(id_col).alias("component")
+    if stats is not None:
+        stats["rounds"] = rnd + 1
+    comp = labels.select(F.col("v").alias(id_col), "component")
+    return vertices.select(id_col).join(comp, id_col, "left").select(
+        id_col, F.coalesce("component", id_col).alias("component")
     )
-    return emitted.unionByName(isolated)
+
+
+def _hop(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """(v, _hop = min label over v and its neighbours, _old = label(v)),
+    one aggregate: the labels frame rides along in the union instead of
+    being joined back."""
+    nbr = sym.join(labels, sym.a == labels.v).select(
+        F.col("b").alias("v"), "component", F.lit(None).alias("_old")
+    )
+    own = labels.select("v", "component", F.col("component").alias("_old"))
+    return (
+        nbr.unionByName(own)
+        .groupBy("v")
+        .agg(F.min("component").alias("_hop"), F.max("_old").alias("_old"))
+    )
+
+
+def _jump(hopped: DataFrame, prev: DataFrame) -> DataFrame:
+    """(v, _hop, _old) -> (v, component = prev(_hop), _old). `prev` maps
+    every touched vertex to a label <= its own id, so the join is total
+    and the jump can only lower a label."""
+    return (
+        hopped.alias("h")
+        .join(prev.alias("p"), F.col("h._hop") == F.col("p.v"))
+        .select("h.v", "p.component", "h._old")
+    )

@@ -345,13 +345,15 @@ def _run_pipeline_stages(
         # byte-identical duplicates inherit their representative's component
         # through one join afterwards — they never enter label propagation
         # (at 10^12 rows the exact-dup star edges would dominate the CC
-        # graph while carrying zero connectivity information).
-        edges = near_edges.select("src", "dst").distinct()
+        # graph while carrying zero connectivity information). No
+        # distinct() on the edges: duplicate edges cannot change a
+        # component minimum.
         reps = exact.filter(~F.col("is_duplicate")).select(
             F.col("image_id").alias("id")
         )
         comp = connected_components(
-            reps, edges, max_iters=cfg.cc_max_iters, id_col="id"
+            reps, near_edges.select("src", "dst"),
+            max_iters=cfg.cc_max_iters, id_col="id",
         )
         # every row -> its exact-representative's component
         rows = exact.select("image_id", F.col("representative_id").alias("_rep"))

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Connected-components round/wall benchmark on a DEEP ~1M-edge graph
-(round-4 VERDICT #6): the adaptive pointer-jump gear is property-tested on
-diameter-63 chains, but its O(log diameter) claim needed a at-scale
-measurement beyond the hub-star regime the image pipeline feeds.
+"""Connected-components benchmark on a DEEP ~1M-edge graph: the pointer
+jump's O(log diameter) round count measured at scale, beyond the hub-star
+regime the image pipeline feeds.
 
 Graph: `--chains` disjoint paths of `--depth` edges each (default
 10,000 x 100 = 1,000,000 edges, diameter 100), vertex ids scrambled by a
@@ -10,12 +9,13 @@ multiplicative bijection so id order carries no information about chain
 position (consecutive ids would let a single hop round do diameter-long
 work along the id ordering).
 
-Variants:
-  adaptive  — connected_components(jump_after=3)  [the default gear]
-  hop-only  — connected_components(jump_after=inf): O(diameter) rounds
-  star      — connected_components_star: O(log^2 n) rounds
+Reports the rounds, Spark jobs and shuffle bytes of one
+`connected_components` call (tagged with a job group and read back from
+`statusTracker()`, as perfbench does), its wall time, and the component
+count plus an order-insensitive checksum bit_xor(xxhash64(id, component))
+to compare outputs across commits.
 
-Usage: python bench_cc.py [--chains N] [--depth D] [--skip-hop]
+Usage: python bench_cc.py [--chains N] [--depth D] [--cores C]
 Prints one JSON line; paste the table into BENCH.md by hand.
 """
 
@@ -23,12 +23,17 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import sys
 import time
 
 from pyspark.sql import functions as F
 
 from arhivum_spark.operators import connected_components as cc
 from arhivum_spark.session import get_spark
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+from harness import SparkCounters  # noqa: E402
 
 MULT = 2654435761  # Knuth multiplicative hash; odd => bijection mod 2^62
 
@@ -57,26 +62,25 @@ def edge_frame(spark, n_chains: int, depth: int):
     return v, e
 
 
-def run(variant: str, v, e, depth: int) -> dict:
+def run(spark, v, e) -> dict:
+    counters = SparkCounters(spark)
     stats: dict = {}
     t0 = time.time()
-    if variant == "adaptive":
-        out = cc.connected_components(
-            v, e, max_iters=2 * depth + 10, fallback_star=False, stats=stats
-        )
-    elif variant == "hop-only":
-        out = cc.connected_components(
-            v, e, max_iters=2 * depth + 10, fallback_star=False,
-            jump_after=10**9, stats=stats,
-        )
-    elif variant == "star":
-        out = cc.connected_components_star(v, e, stats=stats)
-    n_comp = out.select("component").distinct().count()
+    with counters.group("bench_cc"):
+        out = cc.connected_components(v, e, stats=stats)
+        row = out.agg(
+            F.countDistinct("component").alias("n"),
+            F.expr("bit_xor(xxhash64(id, component))").alias("h"),
+        ).collect()[0]
+    wall = time.time() - t0
+    spark_counters = counters.read("bench_cc")
     return {
-        "variant": variant,
-        "wall_sec": round(time.time() - t0, 1),
+        "wall_sec": round(wall, 1),
         "rounds": stats.get("rounds"),
-        "n_components": n_comp,
+        "jobs": spark_counters["jobs"],
+        "shuffle_write_mb": round(spark_counters["shuffle_write_mb"], 1),
+        "n_components": row["n"],
+        "components_xor": row["h"],
     }
 
 
@@ -84,7 +88,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--chains", type=int, default=10_000)
     ap.add_argument("--depth", type=int, default=100)
-    ap.add_argument("--skip-hop", action="store_true")
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
@@ -96,9 +99,6 @@ def main() -> None:
     e = e.localCheckpoint()
     n_edges = e.count()
 
-    variants = ["adaptive", "star"] + ([] if args.skip_hop else ["hop-only"])
-    results = [run(x, v, e, args.depth) for x in variants]
-    comps = {r["n_components"] for r in results}
     print(
         json.dumps(
             {
@@ -106,8 +106,7 @@ def main() -> None:
                 "n_edges": n_edges,
                 "n_chains": args.chains,
                 "depth": args.depth,
-                "results": results,
-                "identical_components": len(comps) == 1,
+                **run(spark, v, e),
             }
         )
     )

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,6 +23,23 @@ def get_shared_spark():
     core (get_spark). Shuffle partitions stay 8 whatever the core count,
     so partition-dependent test inputs do not change with the host."""
     return get_spark("arhivum_spark_tests", shuffle_partitions=8)
+
+
+def run_counting_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), read back from
+    statusTracker() through a job group unique to this call (the way
+    perfbench/harness.SparkCounters tags stages)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

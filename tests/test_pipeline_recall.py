@@ -12,6 +12,7 @@ from arhivum_spark.config import DedupConfig
 from arhivum_spark.plans.image_dedup import caption_pairs, run_pipeline
 from arhivum_spark.functions.signatures import attach_signatures
 from arhivum_spark.sources.checkpoints import StageStore
+from tests.conftest import run_counting_jobs
 
 P = datagen.GenParams(n=2000, seed=42, img_hw=64)
 CFG = DedupConfig()
@@ -24,9 +25,24 @@ def images(spark):
     return df
 
 
+class _JobCountingStore(StageStore):
+    """StageStore that records how many Spark jobs each stage starts."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.jobs: dict[str, int] = {}
+
+    def read_or_compute(self, stage, compute, materialize_first=False):
+        parent = super().read_or_compute
+        out, self.jobs[stage] = run_counting_jobs(
+            self.spark, lambda: parent(stage, compute, materialize_first)
+        )
+        return out
+
+
 @pytest.fixture(scope="module")
 def clusters(spark, images, tmp_path_factory):
-    store = StageStore(spark, str(tmp_path_factory.mktemp("stages")))
+    store = _JobCountingStore(spark, str(tmp_path_factory.mktemp("stages")))
     out = run_pipeline(images, store, CFG)
     return out.toPandas(), store
 
@@ -54,6 +70,14 @@ def test_recall_gate(clusters):
         ]
     )
     assert recall >= 0.99, f"dup-pair recall {recall:.4f} < 0.99"
+
+
+def test_cluster_stage_job_budget(clusters):
+    """s4 is one checkpointed labels frame per CC round (2 on this
+    corpus) plus the emit and the snapshot write, and every Spark job
+    pays a fixed scheduling cost: the stage gets at most 16 jobs."""
+    _, store = clusters
+    assert 0 < store.jobs["s4_clusters"] <= 16, store.jobs
 
 
 def test_exact_byte_dups_share_cluster_and_flag(clusters):

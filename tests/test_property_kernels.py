@@ -118,62 +118,6 @@ def test_gram_hash_batch_equals_reference(docs, ngram):
         assert set(int(x) for x in g) == _gram_ref(text, ngram)
 
 
-@settings(max_examples=15, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=40),
-            st.integers(min_value=0, max_value=40),
-        ),
-        max_size=60,
-    )
-)
-def test_star_cc_equals_union_find(edges):
-    """connected_components_star AND the default label-prop+pointer-jump
-    algorithm against a classic driver-side union-find on arbitrary small
-    graphs (run on a shared local session)."""
-    from tests.conftest import get_shared_spark
-    from arhivum_spark.operators.connected_components import (
-        connected_components,
-        connected_components_star,
-    )
-
-    spark = get_shared_spark()
-    n = 41
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expect = {i: find(i) for i in range(n)}
-
-    vertices = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    e = [(a, b) for a, b in edges if a != b]
-    if e:
-        edf = spark.createDataFrame(e, ["src", "dst"])
-    else:
-        edf = spark.createDataFrame([], "src int, dst int")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_star(vertices, edf, id_col="id").collect()
-    }
-    assert got == expect
-    got_lp = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            vertices, edf, id_col="id", fallback_star=False
-        ).collect()
-    }
-    assert got_lp == expect
-
-
 # ---------------------------------------------------------------------------
 # Suffix array kernels vs naive oracles (arbitrary small inputs)
 

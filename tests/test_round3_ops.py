@@ -1,4 +1,4 @@
-"""Round-3 operator tests: CC convergence guard, PSNR join fallback,
+"""Round-3 operator tests: PSNR join fallback,
 embedding-LSH degenerate-bucket valve + star edges, mixed-zone group skip,
 vectorized SimHash parity, and the approximate-operator recall guards
 (the last: re-measure recall of every approximate path that is registered
@@ -12,73 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE_DIR
-
-
-# ---------------------------------------------------------------------------
-# Connected components: non-convergence must raise, not return wrong labels
-
-
-def _chain(spark, n):
-    vertices = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["src", "dst"]
-    )
-    return vertices, edges
-
-
-def test_cc_long_chain_never_returns_partial_labels(spark):
-    from arhivum_spark.operators.connected_components import (
-        ConvergenceError,
-        connected_components,
-    )
-
-    # pointer jumping halves label-path length per round, so a diameter-d
-    # chain converges in ~log2(d) rounds; with max_iters=2 a chain of 40
-    # (diameter 39) cannot finish.
-    n = 40
-    vertices, edges = _chain(spark, n)
-    with pytest.raises(ConvergenceError):
-        connected_components(
-            vertices, edges, max_iters=2, id_col="id", fallback_star=False
-        )
-    # default: delegates to the star algorithm, result still correct
-    comp = connected_components(vertices, edges, max_iters=2, id_col="id")
-    assert {r["component"] for r in comp.collect()} == {0}
-    # with pointer jumping, O(log d) iterations suffice on their own
-    comp = connected_components(vertices, edges, max_iters=9, id_col="id")
-    assert {r["component"] for r in comp.collect()} == {0}
-
-
-def test_cc_star_matches_label_propagation(spark):
-    import random
-
-    from arhivum_spark.operators.connected_components import (
-        connected_components,
-        connected_components_star,
-    )
-
-    random.seed(23)
-    n = 300
-    # random sparse graph: many components of varying shapes + isolates
-    edges = [
-        (random.randrange(n), random.randrange(n)) for _ in range(200)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    vertices = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    edf = spark.createDataFrame(edges, ["src", "dst"])
-    lab = {
-        r["id"]: r["component"]
-        for r in connected_components(vertices, edf, id_col="id").collect()
-    }
-    star = {
-        r["id"]: r["component"]
-        for r in connected_components_star(vertices, edf, id_col="id").collect()
-    }
-    assert lab == star
-    # star handles a pathological chain in O(log n) rounds
-    v2, e2 = _chain(spark, 200)
-    comp = connected_components_star(v2, e2, max_rounds=20, id_col="id")
-    assert {r["component"] for r in comp.collect()} == {0}
 
 
 # ---------------------------------------------------------------------------

@@ -784,7 +784,7 @@ def test_psnr_kernel_raises_on_codec_infra_error(spark):
 
 
 # ---------------------------------------------------------------------------
-# dedup_text / connected_components review fixes
+# dedup_text review fixes
 
 
 def test_collapse_identical_skips_tokenless_texts(spark):
@@ -854,27 +854,6 @@ def test_simhash_exact_match_blocking_and_config_bounds(spark):
 
     with _pytest.raises(ValueError, match="simhash_max_hamming"):
         DedupConfig(simhash_max_hamming=64)
-
-
-def test_cc_fallback_stats_report_star_rounds(spark):
-    from arhivum_spark.operators.connected_components import (
-        connected_components,
-    )
-
-    n = 10
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    stats: dict = {}
-    out = connected_components(
-        vertices, edges, max_iters=1, jump_after=99, stats=stats
-    )
-    assert {r.component for r in out.collect()} == {0}
-    assert stats["fallback"] is True
-    # rounds must describe the star pass that produced the result, not
-    # the abandoned 1-round propagation
-    assert stats["rounds"] > 1
 
 
 # ---------------------------------------------------------------------------
