@@ -46,24 +46,20 @@ class DedupConfig:
     # stays the per-row codec invariant (tests/test_pipeline_recall.py).
     psnr_verify_enabled: bool = True
     psnr_edge_min_db: float = 14.0
-    # the PSNR stage broadcasts its (id -> edge, side) map onto the images
-    # scan while the surviving edge set is small (the common case after
-    # signature verification); past this many edges the map would blow the
-    # broadcast limit, so the stage falls back to a shuffle hash join keyed
-    # on id (2 rows/edge either way — only the join strategy changes)
-    psnr_broadcast_max_edges: int = 2_000_000
     # bound on the PSNR stage's in-flight byte shuffle: the stage moves
     # ~2 encoded payloads per edge, so an unbounded edge set makes the
     # shuffle high-water proportional to the surviving-edge count
     # (measured: ~58 GB at 4.8M images with the retry pass — past the
-    # box's storage and OOM-killed; BENCH.md cliff #5). Edge sets larger
-    # than this are verified in ceil(n/bound) batches: each batch's
-    # side map is broadcast-small, its payload shuffle is released
-    # before the next batch starts, and the trade is one extra images
-    # scan per extra batch (scans are cheap relative to shuffle
-    # high-water; at cluster scale this caps per-executor shuffle-disk
-    # the same way). None disables batching.
-    psnr_max_inflight_edges: int | None = 600_000
+    # box's storage and OOM-killed; BENCH.md cliff #5). The edges are
+    # verified in ceil(n/bound) hash-batches: each batch's payload
+    # shuffle is released before the next batch starts, and the trade is
+    # one extra images scan per extra batch (scans are cheap relative to
+    # shuffle high-water; at cluster scale this caps per-executor
+    # shuffle-disk the same way). Each batch's (id -> edge, side) side
+    # map is always broadcast, so the bound also caps the broadcast at
+    # two rows per edge: a bound too large to broadcast fails in Spark
+    # instead of switching to a join that shuffles every image.
+    psnr_max_inflight_edges: int = 600_000
 
     # parquet vectorized-reader batch rows for the binary-heavy images
     # scan. The reader reserves a contiguous column buffer of
@@ -120,6 +116,14 @@ class DedupConfig:
             raise ValueError(
                 "simhash_max_hamming must be in [0, 63], got "
                 f"{self.simhash_max_hamming}"
+            )
+        bound = self.psnr_max_inflight_edges
+        if not isinstance(bound, int) or bound < 1:
+            # checked here, not in s3b: there 0 fails only after s1..s3
+            # have been computed and committed, and None would silently
+            # drop the only bound on the payload shuffle
+            raise ValueError(
+                f"psnr_max_inflight_edges must be an int >= 1, got {bound!r}"
             )
         if self.cc_max_iters < 1:
             # connected_components rejects it too, but only in s4 — after

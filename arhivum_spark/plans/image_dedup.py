@@ -24,6 +24,7 @@ appends per-partition metrics. All joins on ids/signatures only.
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -55,15 +56,12 @@ def psnr_verify_edges(
     Plan shape (the naive version — join bytes for src, then again for
     dst — sort-merge-shuffles the multi-GB bytes table TWICE and
     anti-scales; measured 67s@local[8] -> 130s@local[32] at 600k images):
-    instead, broadcast the tiny (id -> edge, side) map onto ONE streaming
+    instead, broadcast the small (id -> edge, side) map onto ONE streaming
     pass over the images table, hash-shuffle exactly two byte payloads
     per edge on the pair key, and pair rows inside each partition with a
     sort-within-partitions + carry-aware mapInPandas — shuffle traffic is
-    2 payloads/edge total and nothing byte-sized is ever sorted globally.
-    When the edge set exceeds cfg.psnr_broadcast_max_edges the side map
-    would blow the broadcast limit, so the map join falls back to a
-    shuffle hash join keyed on id (same 2-payloads/edge bound; only the
-    join strategy changes — identical output on both paths, test-gated).
+    2 payloads/edge total, the images table itself is never shuffled and
+    nothing byte-sized is ever sorted globally.
 
     This is the only stage after s1 that touches pixels. Pairs whose
     decoded shapes differ are dropped (not a duplicate), identical pixels
@@ -72,66 +70,39 @@ def psnr_verify_edges(
     In-flight shuffle bound (cliff #5, BENCH.md): the payload shuffle is
     ~2 encoded images per edge, so its high-water mark grows with the
     surviving-edge count — measured ~58 GB at 4.8M images, past a single
-    box's storage (kernel OOM). Edge sets above
-    cfg.psnr_max_inflight_edges are verified in ceil(n/bound) hash-split
-    batches: each batch's side map is broadcast-small, each batch's
-    scored result is pinned (DISK_ONLY) and its payload-shuffle files
-    released (lineage truncated + JVM GC -> ContextCleaner) before the
-    next batch shuffles. The trade is one extra images scan per extra
-    batch; identical output to the single-shot path (test-gated).
+    box's storage (kernel OOM). The edges are verified in
+    n = ceil(edges / cfg.psnr_max_inflight_edges) hash-batches, batch k
+    being the edges with pmod(xxhash64(src, dst), n) == k; the bound also
+    caps each batch's broadcast side map at two rows per edge. Every
+    batch but the last has its scored result pinned (DISK_ONLY) and its
+    payload-shuffle files released (lineage truncated + JVM GC ->
+    ContextCleaner) before the next batch shuffles. The trade is one
+    extra images scan per extra batch. A single batch (every edge set up
+    to the bound) is never pinned, so it keeps its lineage and recomputes
+    on executor loss.
+
+    `edges` is scanned once to count it and once per batch: callers pass
+    a materialized frame (the pipeline passes the committed s3 snapshot).
     """
-    pairs = edges.select("src", "dst")
-    n_edges = pairs.count()
-    bound = cfg.psnr_max_inflight_edges
-    if bound is not None and bound <= 0:
-        raise ValueError(
-            "psnr_max_inflight_edges must be >= 1 (or None to disable "
-            f"batching), got {bound}"
+    n_batches = max(1, -(-edges.count() // cfg.psnr_max_inflight_edges))
+    batch_of = F.pmod(F.xxhash64("src", "dst"), F.lit(n_batches))
+    parts = []
+    for b in range(n_batches):
+        part = _psnr_scored(
+            edges.filter(batch_of == b).select("src", "dst"),
+            images, cfg, id_col, bytes_col,
         )
-    if bound is not None and n_edges > bound:
-        n_batches = -(-n_edges // bound)
-        # broadcast-vs-shuffle is a per-BATCH decision: each batch holds
-        # ~ceil(n_edges/n_batches) edges, which may fit the broadcast
-        # bound even when the configured in-flight bound does not
-        batch_edges = -(-n_edges // n_batches)
-        # DISK_ONLY like every other pin in this stage: the batching
-        # path only activates on multi-million-edge sets, and parking
-        # the pair frame on-heap would erode the contiguous-allocation
-        # headroom the byte-bearing batch scans need (cliff #4/#5)
-        split = pairs.withColumn(
-            "_pb", F.pmod(F.xxhash64("src", "dst"), F.lit(n_batches))
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        parts = []
-        for b in range(n_batches):
-            part = _psnr_scored(
-                split.filter(F.col("_pb") == b).drop("_pb"),
-                images,
-                cfg,
-                id_col,
-                bytes_col,
-                use_broadcast=batch_edges <= cfg.psnr_broadcast_max_edges,
-            ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-            parts.append(part)
+        if b < n_batches - 1:
+            part = part.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.DISK_ONLY
+            )
             # the finished batch's payload shuffle is unreachable now
             # (the checkpoint truncated its lineage); one JVM GC lets
             # ContextCleaner delete its files before the next batch
             # shuffles — this is what bounds the high-water mark
             edges.sparkSession._jvm.System.gc()
-        scored = parts[0]
-        for p in parts[1:]:
-            scored = scored.unionByName(p)
-        return edges.join(scored, ["src", "dst"])
-    return edges.join(
-        _psnr_scored(
-            pairs,
-            images,
-            cfg,
-            id_col,
-            bytes_col,
-            use_broadcast=n_edges <= cfg.psnr_broadcast_max_edges,
-        ),
-        ["src", "dst"],
-    )
+        parts.append(part)
+    return edges.join(reduce(DataFrame.unionByName, parts), ["src", "dst"])
 
 
 def _psnr_scored(
@@ -140,11 +111,12 @@ def _psnr_scored(
     cfg: DedupConfig,
     id_col: str,
     bytes_col: str,
-    use_broadcast: bool,
 ) -> DataFrame:
     """One PSNR verification pass over an edge subset: returns
     (src, dst, psnr_db) for the pairs clearing cfg.psnr_edge_min_db.
-    See psnr_verify_edges for the plan shape."""
+    The (id -> edge, side) side map is always broadcast onto the images
+    scan; the caller bounds its size. See psnr_verify_edges for the plan
+    shape."""
     from collections.abc import Iterator
 
     from arhivum_spark import codec
@@ -163,27 +135,12 @@ def _psnr_scored(
             )
         )
     )
-    # Side-map join strategy: broadcast while the edge subset is small
-    # (the common case — signature verification already filtered, and the
-    # inflight-edge batching keeps subsets below the bound); past it the
-    # map outgrows broadcast, so switch to a shuffle hash join keyed on
-    # id. Identical output either way.
-    # (NEVER dedup/shuffle the images frame itself here — that moves every
+    # NEVER dedup/shuffle the images frame itself here — that moves every
     # byte payload; duplicate image_ids are instead handled side-aware in
-    # the pair walk below.)
-    if use_broadcast:
-        joined = images.select(id_col, bytes_col).join(
-            F.broadcast(side_map), id_col
-        )
-    else:
-        # the hint matters: without it Catalyst picks sort-merge
-        # (preferSortMergeJoin defaults true), which SORTS the multi-GB
-        # byte payloads on id — the exact anti-scaling pattern this
-        # function exists to avoid. SHUFFLE_HASH builds the hash table
-        # from the small side-map side and streams the bytes through.
-        joined = images.select(id_col, bytes_col).join(
-            side_map.hint("shuffle_hash"), id_col
-        )
+    # the pair walk below.
+    joined = images.select(id_col, bytes_col).join(
+        F.broadcast(side_map), id_col
+    )
     payload = joined.select(
         "src", "dst", "_side", F.col(bytes_col).alias("_b")
     )

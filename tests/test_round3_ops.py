@@ -1,4 +1,4 @@
-"""Round-3 operator tests: PSNR join fallback,
+"""Round-3 operator tests:
 embedding-LSH degenerate-bucket valve + star edges, mixed-zone group skip,
 vectorized SimHash parity, and the approximate-operator recall guards
 (the last: re-measure recall of every approximate path that is registered
@@ -12,58 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE_DIR
-
-
-# ---------------------------------------------------------------------------
-# PSNR side-map: broadcast and shuffle-join fallback produce identical edges
-
-
-def _mini_images_and_edges(spark):
-    from arhivum_spark import codec
-
-    rng = np.random.default_rng(11)
-    rows, edges = [], []
-    for i in range(8):
-        px = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-        rows.append((f"img{i}", codec.encode_lossless(px)))
-        # a lossy re-encode partner: high PSNR, keeps the edge
-        rows.append((f"img{i}x", codec.encode_lossy(px, 8)))
-        edges.append((f"img{i}", f"img{i}x"))
-    # one unrelated pair: low PSNR, dropped
-    edges.append(("img0", "img5"))
-    images = spark.createDataFrame(rows, ["image_id", "bytes"])
-    edf = spark.createDataFrame(edges, ["src", "dst"])
-    return images, edf
-
-
-def test_psnr_fallback_join_matches_broadcast(spark):
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.plans.image_dedup import psnr_verify_edges
-
-    images, edges = _mini_images_and_edges(spark)
-    bcast = psnr_verify_edges(edges, images, DedupConfig())
-    fall = psnr_verify_edges(
-        edges, images, DedupConfig(psnr_broadcast_max_edges=0)
-    )
-    a = {(r.src, r.dst, round(r.psnr_db, 6)) for r in bcast.collect()}
-    b = {(r.src, r.dst, round(r.psnr_db, 6)) for r in fall.collect()}
-    assert a == b
-    assert len(a) == 8  # re-encode pairs kept, unrelated pair dropped
-
-
-def test_psnr_ignores_duplicate_image_ids(spark):
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.plans.image_dedup import psnr_verify_edges
-
-    images, edges = _mini_images_and_edges(spark)
-    # re-ingested copy of one id: without the id-dedup guard the pair walk
-    # could compare a row against its own copy (PSNR=inf false pass)
-    dup = images.filter(F.col("image_id") == "img0").limit(1)
-    scored = psnr_verify_edges(edges, images.unionByName(dup), DedupConfig())
-    base = psnr_verify_edges(edges, images, DedupConfig())
-    assert {(r.src, r.dst, round(r.psnr_db, 6)) for r in scored.collect()} == {
-        (r.src, r.dst, round(r.psnr_db, 6)) for r in base.collect()
-    }
 
 
 # ---------------------------------------------------------------------------

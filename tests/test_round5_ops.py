@@ -668,41 +668,6 @@ def test_session_raises_gclocker_retry_bound(spark):
         assert "-XX:+UnlockDiagnosticVMOptions" in opts
 
 
-def test_psnr_inflight_batching_matches_single_shot(spark):
-    """Round-5 cliff #5 regression: the PSNR stage's in-flight shuffle
-    bound (cfg.psnr_max_inflight_edges) splits the edge set into
-    hash-batches verified sequentially — output must be identical to the
-    unbatched path (same edges, same psnr_db), across batch counts, and
-    compose with the shuffle-join side-map fallback."""
-    from tests.test_round3_ops import _mini_images_and_edges
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.plans.image_dedup import psnr_verify_edges
-
-    images, edges = _mini_images_and_edges(spark)
-
-    def run(cfg):
-        return {
-            (r.src, r.dst, round(r.psnr_db, 6))
-            for r in psnr_verify_edges(edges, images, cfg).collect()
-        }
-
-    base = run(DedupConfig(psnr_max_inflight_edges=None))
-    assert len(base) == 8
-    # 9 edges -> 2, 3, 5 batches; plus batching with the non-broadcast map
-    for cfg in (
-        DedupConfig(psnr_max_inflight_edges=5),
-        DedupConfig(psnr_max_inflight_edges=3),
-        DedupConfig(psnr_max_inflight_edges=2),
-        DedupConfig(psnr_max_inflight_edges=4, psnr_broadcast_max_edges=0),
-    ):
-        assert run(cfg) == base
-
-    # 0 is not a valid bound (None is the documented "disable batching"
-    # spelling) — must fail fast, not ZeroDivisionError mid-pipeline
-    with pytest.raises(ValueError, match="psnr_max_inflight_edges"):
-        psnr_verify_edges(edges, images, DedupConfig(psnr_max_inflight_edges=0))
-
-
 def test_required_java_opts_survive_caller_extra_conf():
     """extra_conf supplying its own extraJavaOptions must not silently
     drop the GCLocker workaround (BENCH.md cliff #4) — the flags merge,
@@ -720,8 +685,7 @@ def test_required_java_opts_survive_caller_extra_conf():
 
 
 # ---------------------------------------------------------------------------
-# round-5 close: retry completeness, SHJ fallback plan shape, infra-error
-# propagation in the PSNR kernel
+# round-5 close: retry completeness
 
 
 def test_bucket_pairs_recover_pass_fail_asymmetric_pair(spark):
@@ -741,46 +705,6 @@ def test_bucket_pairs_recover_pass_fail_asymmetric_pair(spark):
         {1: 0, 2: 0, 3: 1},
     )
     assert sorted(got) == [(1, 2), (2, 3)]
-
-
-def test_psnr_fallback_join_is_shuffle_hash(spark):
-    """The non-broadcast side-map fallback must plan as a shuffled hash
-    join — a sort-merge join would SORT the multi-GB byte payloads on
-    id, the anti-scaling pattern psnr_verify_edges exists to avoid."""
-    from arhivum_spark.plans.image_dedup import _psnr_scored
-
-    images = spark.createDataFrame(
-        [("a", bytearray(b"x")), ("b", bytearray(b"y"))],
-        "image_id string, bytes binary",
-    )
-    pairs = spark.createDataFrame([("a", "b")], "src string, dst string")
-    out = _psnr_scored(
-        pairs, images, DedupConfig(), "image_id", "bytes",
-        use_broadcast=False,
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_psnr_kernel_raises_on_codec_infra_error(spark):
-    """Undecodable-by-the-in-repo-codec bytes route to decode_external,
-    which raises NotImplementedError (the documented external-codec
-    swap-in point). That is an infrastructure failure, not a 'not a
-    duplicate' verdict: it must fail the stage loudly instead of
-    silently scoring every edge PSNR=-1 and committing an empty
-    snapshot."""
-    import pytest as _pytest
-
-    from arhivum_spark.plans.image_dedup import psnr_verify_edges
-
-    images = spark.createDataFrame(
-        [("a", bytearray(b"\x89PNGnotreally")), ("b", bytearray(b"junk"))],
-        "image_id string, bytes binary",
-    )
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with _pytest.raises(Exception, match="NotImplementedError"):
-        psnr_verify_edges(edges, images, DedupConfig()).collect()
 
 
 # ---------------------------------------------------------------------------
