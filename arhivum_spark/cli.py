@@ -76,7 +76,15 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--min-signature-agreement", type=float, default=None)
     p.add_argument("--psnr-edge-min-db", type=float, default=None)
     p.add_argument("--no-psnr-verify", action="store_true")
-    p.add_argument("--hot-band-threshold", type=int, default=None)
+    p.add_argument(
+        "--hot-band-threshold",
+        type=int,
+        default=None,
+        help=(
+            "LSH band-key bucket size at which s3 salts the bucket "
+            "(detected on a 3/N sample of band keys; default 300)"
+        ),
+    )
     p.add_argument("--max-pairs-per-band", type=int, default=None)
     return p
 

@@ -25,8 +25,7 @@ class DedupConfig:
     bands: int = 32
     rows_per_band: int = 4
 
-    # SimHash over caption tokens
-    simhash_bits: int = 64
+    # SimHash (64-bit) over caption tokens
     simhash_max_hamming: int = 3  # near-dup caption threshold
 
     # candidate verification
@@ -34,7 +33,6 @@ class DedupConfig:
     # shingles is dup pairs J >= ~0.7 (re-encoded worst case) vs random
     # pairs J <= ~0.06; 0.5 sits >5 sigma from both (k=128 estimator)
     min_signature_agreement: float = 0.5
-    psnr_verify_db: float = 40.0           # lossy re-encode roundtrip invariant
     # decoded-pixel PSNR re-check of surviving candidate edges; runs as its
     # own pipeline stage re-joining bytes by id for the (few)
     # post-signature-verification edges. The EDGE bound is looser than the
@@ -42,8 +40,8 @@ class DedupConfig:
     # replaced sits near 10*log10(255^2 / (0.05 * 255^2/6)) ~= 20.8 dB,
     # while an UNRELATED pair sits at ~7.8 dB (MSE ~= 255^2/6) — 14 dB
     # separates the classes with margin on both sides. Lossy re-encodes of
-    # identical content still clear psnr_verify_db and that stricter bound
-    # stays the per-row codec invariant (tests/test_pipeline_recall.py).
+    # identical content clear a stricter 40 dB, the per-row codec
+    # invariant (tests/test_pipeline_recall.py).
     psnr_verify_enabled: bool = True
     psnr_edge_min_db: float = 14.0
     # bound on the PSNR stage's in-flight byte shuffle: the stage moves
@@ -68,21 +66,17 @@ class DedupConfig:
     # row reserves ~95 MB per thread — 32 local task threads OOMed a
     # 16 GB heap at 2.4M images (measured, round 4). 256 rows (aligned
     # with the pandas-UDF Arrow batch bound, session.py) keeps it at
-    # ~6 MB per thread. None leaves the session default untouched.
-    parquet_batch_rows: int | None = 256
+    # ~6 MB per thread.
+    parquet_batch_rows: int = 256
 
-    # skew handling: bands whose key frequency exceeds this get salted
-    hot_band_threshold: int = 64
-    # heavy-hitter detection sample fraction (1.0 = exact full count);
-    # sampled detection skips a rows*bands-sized shuffle and only needs to
-    # catch keys hot enough to matter (see lsh.salted_candidate_edges).
-    # NOTE the sampled-count floor of 3 makes the EFFECTIVE salting
-    # threshold ~ceil(3 / hot_detect_sample) members (~300 at the 0.01
-    # default), not hot_band_threshold itself — keys between the two are
-    # usually left unsalted, which is correctness-neutral (star edges still
-    # link them) and only relaxes per-partition size bounds.
-    hot_detect_sample: float = 0.01
-    salt_buckets: int = 16
+    # skew handling: (band, key) buckets of about this many members get
+    # salted. Detection counts a Bernoulli sample at rate 3/threshold
+    # (1% at the default) instead of shuffling every rows x bands row, so
+    # a key this large expects 3 sampled rows; keys near the threshold are
+    # salted or not by the draw, which is correctness-neutral (star edges
+    # and the hub chain both link them) and only moves partition sizes
+    # (see lsh.salted_candidate_edges).
+    hot_band_threshold: int = 300
     max_pairs_per_band: int = 4096         # hard cap per (band,key) group
     # bucket-local pairs (lsh.salted_candidate_edges): buckets of 3 up to
     # this many members emit every non-hub member pair (<= g^2/2 per
@@ -117,14 +111,19 @@ class DedupConfig:
                 "simhash_max_hamming must be in [0, 63], got "
                 f"{self.simhash_max_hamming}"
             )
-        bound = self.psnr_max_inflight_edges
-        if not isinstance(bound, int) or bound < 1:
-            # checked here, not in s3b: there 0 fails only after s1..s3
-            # have been computed and committed, and None would silently
-            # drop the only bound on the payload shuffle
-            raise ValueError(
-                f"psnr_max_inflight_edges must be an int >= 1, got {bound!r}"
-            )
+        for name in (
+            # checked here, not where used: a bad psnr_max_inflight_edges
+            # fails in s3b and a 0 hot_band_threshold divides by zero in
+            # s3, both after earlier stages are committed; None would
+            # silently drop the payload-shuffle bound or the reader-batch
+            # OOM guard
+            "psnr_max_inflight_edges",
+            "hot_band_threshold",
+            "parquet_batch_rows",
+        ):
+            value = getattr(self, name)
+            if not isinstance(value, int) or value < 1:
+                raise ValueError(f"{name} must be an int >= 1, got {value!r}")
         if self.cc_max_iters < 1:
             # connected_components rejects it too, but only in s4 — after
             # s1..s3b have been computed and committed
@@ -132,5 +131,3 @@ class DedupConfig:
                 f"cc_max_iters must be >= 1, got {self.cc_max_iters}"
             )
 
-
-DEFAULT_CONFIG = DedupConfig()

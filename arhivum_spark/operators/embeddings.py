@@ -67,7 +67,7 @@ def _rhp_capped_buckets(
     base, multi-table bucketing, cap valve. Returns (capped, id_type) —
     capped is None for an empty/all-null corpus. payload=True re-joins
     (vecd, norm) onto the capped bucket rows for in-bucket verification.
-    EAGER (dim probe + _cap_buckets' max-bucket probe)."""
+    EAGER (the dim probe)."""
     id_type = dict(df.dtypes)[id_col]
     dim = _probe_dim(df, vec_col)
     if dim is None:
@@ -214,50 +214,34 @@ def rhp_table_buckets(
 
 def _cap_buckets(bucketed: DataFrame, cap: int) -> DataFrame:
     """Degenerate-bucket valve (the embedding twin of the image LSH
-    max_pairs_per_band, operators/lsh.py:166-188): buckets with more than
-    `cap` members keep an EXPECTED `cap` of them by deterministic hash
-    draw, so a pathological cohort (zero vectors, boilerplate embeddings)
-    that lands 10^9 rows in one (table, bucket) contributes O(cap^2)
-    candidate pairs instead of O(n^2). Singleton buckets are dropped
-    map-side (they can't produce pairs). The bucket-size frame has at most
-    n_tables * 2^nbits rows — always broadcastable.
-
-    Both paths drop singleton buckets and feed IDENTICAL candidate frames;
-    the un-skewed fast path (no bucket over the cap — the common case)
-    skips only the cap arithmetic, filtering singletons with a broadcast
-    left-semi join (map-side, fused into the consumer stage — no extra
-    pass over the bucketed frame, and no `_bn` column). The skewed path
-    adds `_bn` (pre-cap bucket population); callers must not rely on it
-    (`df.drop("_bn")` is a no-op when absent).
-
-    EAGER: the max-bucket probe runs a Spark job at call time (it also
-    materializes the lazy localCheckpoint below), so merely CONSTRUCTING
-    a plan through this valve computes the full signature/bucketing pass.
-    Public callers document this."""
+    max_pairs_per_band, lsh.salted_candidate_edges): buckets with more
+    than `cap` members keep an EXPECTED `cap` of them by deterministic
+    hash draw, so a pathological cohort (zero vectors, boilerplate
+    embeddings) that lands 10^9 rows in one (table, bucket) contributes
+    O(cap^2) candidate pairs instead of O(n^2). Singleton buckets are
+    dropped map-side (they can't produce pairs). The bucket-size frame
+    has at most n_tables * 2^nbits rows — always broadcastable, and the
+    join against it fuses into the consumer stage. Lazy; returns
+    (table, bucket, _cid)."""
     # two consumers (size count + the join below) — pin the signature-UDF
-    # output once or the Arrow kernel runs twice; the max-size probe below
-    # materializes the lazy checkpoint, so the main query reads the pinned
-    # frame either way
+    # output once or the Arrow kernel runs twice: the broadcast size job
+    # runs first and fills the checkpoint the join then reads
     bucketed = bucketed.localCheckpoint(eager=False)
     sizes = bucketed.groupBy("table", "bucket").agg(F.count("*").alias("_bn"))
-    # sizes has <= n_tables * 2^nbits rows — the probe is one scalar
-    max_bn = sizes.agg(F.max("_bn")).first()[0]
     multi = sizes.filter(F.col("_bn") >= 2)
-    if max_bn is None or max_bn <= cap:
-        return bucketed.join(
-            F.broadcast(multi.select("table", "bucket")),
-            ["table", "bucket"],
-            "left_semi",
-        )
-    return bucketed.join(F.broadcast(multi), ["table", "bucket"]).filter(
-        (F.col("_bn") <= cap)
-        | (
-            F.pmod(
-                F.xxhash64("_cid", F.col("table"), F.col("bucket")),
-                F.col("_bn"),
+    return (
+        bucketed.join(F.broadcast(multi), ["table", "bucket"])
+        .filter(
+            (F.col("_bn") <= cap)
+            | (
+                F.pmod(
+                    F.xxhash64("_cid", F.col("table"), F.col("bucket")),
+                    F.col("_bn"),
+                )
+                < cap
             )
-            < cap
         )
+        .select("table", "bucket", "_cid")
     )
 
 
@@ -281,9 +265,7 @@ def rhp_bucket_candidates(
     `max_bucket_members` are down-sampled by deterministic draw
     (_cap_buckets) — the O(k^2)-per-bucket blowup valve.
 
-    EAGER: constructing this plan runs Spark jobs (the dim probe and
-    _cap_buckets' max-bucket-size probe, which materializes the full
-    signature/bucketing pass) — do not build it speculatively.
+    EAGER: constructing this plan runs a Spark job (the dim probe).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -331,8 +313,7 @@ def rhp_neardup_pairs(
     carries a payload. Degenerate buckets are capped by _cap_buckets, so
     per-task work is bounded by max_bucket_members^2 regardless of skew.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs a Spark job (the dim probe).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -407,8 +388,7 @@ def rhp_star_neardup_edges(
     keep/drop where the threshold is well inside the cluster diameter.
     Output: (src, dst, cosine) with src = bucket hub.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs a Spark job (the dim probe).
     """
     capped, id_type = _rhp_capped_buckets(
         df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
@@ -505,8 +485,7 @@ def rhp_ann_topk(
     use the exact `cosine_topk`; ivf_probe_topk (nprobe>=1 cells per
     query) never drops a query and is the engine's covering-search path.
 
-    EAGER: constructing this plan runs Spark jobs (dim probe +
-    _cap_buckets' max-bucket probe materializing the signature pass).
+    EAGER: constructing this plan runs a Spark job (the dim probe).
     """
     dim = _probe_dim(df, vec_col)
     if dim is None:
@@ -525,7 +504,7 @@ def rhp_ann_topk(
         _cap_buckets(
             rhp_table_buckets(base, dim, nbits, n_tables, seed),
             max_bucket_members,
-        ).drop("_bn"),
+        ),
         "_cid",
     ).select("_cid", "vecd", "norm", "table", "bucket").localCheckpoint(
         eager=False

@@ -22,8 +22,10 @@ Scale design (the parts Catalyst can't do for us — SURVEY.md §4):
   only. One verification pass scores the whole candidate set;
   connected components restores the full cluster. No collect_list, no
   un-gated quadratic pair blowup on hot bands.
-- **Two-pass hot-key salting**: band-key frequencies are counted, keys above
-  `hot_band_threshold` get a salt = hash(image_id) % salt_buckets appended,
+- **Two-pass hot-key salting**: band-key frequencies are counted on a
+  Bernoulli sample at rate 3 / `hot_band_threshold`, so a key with
+  `hot_band_threshold` members expects 3 sampled rows; keys with 3 sampled
+  rows get a salt = hash(image_id, band, key) % SALT_BUCKETS appended,
   splitting a hot bucket's window into bounded partitions. Buckets of a
   salted key are re-linked by CC through the exact-dup and multi-band
   overlap edges (and a per-key hub chain emitted from the count pass).
@@ -36,6 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arhivum_spark.config import DedupConfig
+
+# salt buckets per hot (band, key): a hot bucket's rows split this many ways
+SALT_BUCKETS = 16
 
 
 def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> DataFrame:
@@ -112,7 +117,11 @@ def salted_candidate_edges(
     """(band,key) buckets -> candidate edges (src < dst), salt-split.
 
     Two passes:
-      1. count band-key frequencies; keys above hot_band_threshold are 'hot'
+      1. count band-key frequencies on a Bernoulli sample at rate
+         min(1, 3 / hot_band_threshold); a key is 'hot' when its sampled
+         count reaches min(3, hot_band_threshold). A key with exactly
+         hot_band_threshold members expects 3 sampled rows; a threshold
+         of 3 or less samples at rate 1, so every row is counted.
       2. hot keys get per-row salt; each (band, key, salt) bucket emits
          hub->member star edges; for hot keys an extra bucket-hub chain
          edge set links the salt buckets of the same (band, key) together.
@@ -145,42 +154,30 @@ def salted_candidate_edges(
     # pass 1: hot-band detection on a SAMPLE. Band keys are mostly unique
     # (near-dup pairs are rare), so a full groupBy(band,key) count shuffles
     # nearly all rows x bands — a 19M-row shuffle at 600k images just to
-    # find a handful of heavy hitters. A 1% sample finds every key above
-    # ~100x the per-row sample odds; moderately-populated keys that slip
-    # through are harmless (a few hundred rows in one window partition),
-    # and salting a falsely-flagged key is also harmless (the hub chain
-    # reconnects its buckets). A window count over raw (band,key) would
-    # funnel a whole hot band into one partition — never do that.
-    frac = cfg.hot_detect_sample
-    if frac < 1.0:
-        sample_threshold = max(3.0, cfg.hot_band_threshold * frac)
-        counts = (
-            bands.sample(fraction=frac, seed=cfg.minhash_seed)
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("cnt"))
-        )
-        hot = counts.filter(F.col("cnt") >= sample_threshold).select(
-            "band", "key", F.lit(True).alias("is_hot")
-        )
-    else:
-        counts = bands.groupBy("band", "key").agg(F.count("*").alias("cnt"))
-        hot = counts.filter(F.col("cnt") > cfg.hot_band_threshold).select(
-            "band", "key", F.lit(True).alias("is_hot")
-        )
+    # find a handful of heavy hitters. At the default threshold of 300 the
+    # rate is 1%; keys that slip through are harmless (a few hundred rows
+    # in one window partition), and salting a falsely-flagged key is also
+    # harmless (the hub chain reconnects its buckets). A window count over
+    # raw (band,key) would funnel a whole hot band into one partition —
+    # never do that.
+    threshold = cfg.hot_band_threshold
+    hot = (
+        bands.sample(fraction=min(1.0, 3 / threshold), seed=cfg.minhash_seed)
+        .groupBy("band", "key")
+        .agg(F.count("*").alias("cnt"))
+        .filter(F.col("cnt") >= min(3, threshold))
+        .select("band", "key", F.lit(True).alias("hot"))
+    )
     # pass 2: salt hot keys; localCheckpoint so edges + hub chain reuse one
     # materialization instead of re-deriving the band explode three times
     salted = (
         bands.join(F.broadcast(hot), ["band", "key"], "left")
-        .withColumn(
-            "cnt",
-            F.when(F.col("is_hot").isNotNull(), cfg.hot_band_threshold + 1)
-            .otherwise(F.lit(0)),
-        )
+        .withColumn("hot", F.col("hot").isNotNull())
         .withColumn(
             # the salt hash MUST mix in (band, key), not just the id: a
             # per-id-only salt gives a true pair the SAME split/co-salt
             # outcome in every hot bucket they share (P[split everywhere]
-            # = 1 - 1/salt_buckets, correlated), whereas per-(band,key)
+            # = 1 - 1/SALT_BUCKETS, correlated), whereas per-(band,key)
             # salting makes the draws independent — P[co-salted in at
             # least one of k shared hot bands] = 1-(1-1/s)^k. Residual
             # recall gap (documented): a true pair whose shared band keys
@@ -191,10 +188,10 @@ def salted_candidate_edges(
             # hot keys).
             "salt",
             F.when(
-                F.col("is_hot").isNotNull(),
+                F.col("hot"),
                 F.pmod(
                     F.xxhash64("image_id", F.col("band"), F.col("key")),
-                    F.lit(cfg.salt_buckets),
+                    F.lit(SALT_BUCKETS),
                 ),
             ).otherwise(F.lit(0)),
         )
@@ -212,7 +209,7 @@ def salted_candidate_edges(
     hub_agg = salted.groupBy("band", "key", "salt").agg(
         F.min("image_id").alias("hub"),
         F.count("*").alias("bucket_n"),
-        F.max("cnt").alias("_cnt"),
+        F.max("hot").alias("hot"),
     )
     # Two consumers (star join + hot-key chain) — materialize ONCE, and
     # only the buckets either can use (>=2 members or hot): singleton
@@ -220,7 +217,7 @@ def salted_candidate_edges(
     # checkpoint so the stored frame is tiny. Without this the rows x
     # bands groupBy runs twice (measured: s3 doubled at local[2]).
     hub_small = hub_agg.filter(
-        (F.col("bucket_n") >= 2) | (F.col("_cnt") > cfg.hot_band_threshold)
+        (F.col("bucket_n") >= 2) | F.col("hot")
     ).localCheckpoint(eager=False)
     pair_hubs = hub_small.filter(F.col("bucket_n") >= 2).select(
         "band", "key", "salt", "hub", "bucket_n"
@@ -234,7 +231,7 @@ def salted_candidate_edges(
     # expected cap of them). Exact-dedup-first already collapsed identical
     # content, so a bucket this big means pathological near-identical
     # variety; sampled-out members may cost recall there, which is the
-    # documented trade. Per (band, key) the bound is salt_buckets * cap.
+    # documented trade. Per (band, key) the bound is SALT_BUCKETS * cap.
     cap = cfg.max_pairs_per_band
     edges = (
         members.filter(
@@ -276,7 +273,7 @@ def salted_candidate_edges(
     # link salt buckets of the same hot (band,key): min bucket-hub per key
     # joins every other bucket hub (replaces the per-key ordering window —
     # bucket_hubs is tiny, one broadcastable self-aggregation)
-    bucket_hubs = hub_small.filter(F.col("_cnt") > cfg.hot_band_threshold)
+    bucket_hubs = hub_small.filter(F.col("hot"))
     key_hubs = bucket_hubs.groupBy("band", "key").agg(
         F.min("hub").alias("key_hub")
     )

@@ -50,8 +50,8 @@ def psnr_verify_edges(
     """Decoded-pixel PSNR re-check of candidate edges: keep pairs with
     PSNR >= cfg.psnr_edge_min_db (separates near-dups, ~20 dB worst case
     for the 5%-blocks-perturbed class, from unrelated pairs at ~8 dB; see
-    config.py). Same-content lossy re-encodes additionally clear the
-    strict cfg.psnr_verify_db roundtrip invariant.
+    config.py). Same-content lossy re-encodes additionally clear a
+    strict 40 dB roundtrip invariant.
 
     Plan shape (the naive version — join bytes for src, then again for
     dst — sort-merge-shuffles the multi-GB bytes table TWICE and
@@ -214,7 +214,7 @@ def _psnr_scored(
 
 
 @contextmanager
-def pinned_reader_batch(spark, rows: int | None):
+def pinned_reader_batch(spark, rows: int):
     """Bound the session's parquet vectorized-reader batch
     (``spark.sql.parquet.columnarReaderBatchSize``) to ``rows`` for the
     duration of the block, restoring the prior value on exit.
@@ -226,11 +226,7 @@ def pinned_reader_batch(spark, rows: int | None):
     caption-only harness path that called attach_signatures without the
     pipeline's pin — hence this shared guard). ANY plan that scans an
     image-bytes parquet with pandas UDFs downstream must run inside this.
-    ``rows=None`` is a no-op passthrough.
     """
-    if rows is None:
-        yield
-        return
     conf = spark.conf
     key = "spark.sql.parquet.columnarReaderBatchSize"
     prior = conf.get(key, None)

@@ -16,8 +16,10 @@ HOT_N = 4000
 def _bucket(spark, lo, hi, band, key, phash=None):
     """band_keys rows for ids [lo, hi) in one (band, key). phash defaults
     to a hash of the id: spread ~32 bits apart, so the bucket-local pair
-    gate passes no pair and only star edges remain."""
-    return spark.range(lo, hi).select(
+    gate passes no pair and only star edges remain. The partition count
+    is pinned: the seeded hot-key sample draws per partition, so this
+    keeps the sampled rows the same on every host."""
+    return spark.range(lo, hi, numPartitions=2).select(
         F.col("id").alias("image_id"),
         F.xxhash64("id").alias("phash") if phash is None
         else F.lit(phash).cast("long").alias("phash"),
@@ -33,14 +35,14 @@ def _bands(spark):
     )
 
 
-@pytest.mark.parametrize("sample", [1.0, 0.05])
-def test_hot_band_salted_but_connected(spark, sample):
-    cfg = DedupConfig(hot_detect_sample=sample, hot_band_threshold=64,
-                      salt_buckets=16)
+@pytest.mark.parametrize("threshold", [3, 64])
+def test_hot_band_salted_but_connected(spark, threshold):
+    """threshold 3 samples at rate 1 (every row counted), 64 at 3/64."""
+    cfg = DedupConfig(hot_band_threshold=threshold)
     edges = salted_candidate_edges(_bands(spark), cfg)
 
     # skew split: no hub carries the whole hot bucket (the quadratic/straggler
-    # guard) — max star degree ~ HOT_N/salt_buckets plus the hub chain
+    # guard) — max star degree ~ HOT_N/SALT_BUCKETS plus the hub chain
     deg = (
         edges.select(F.col("src").alias("v"))
         .groupBy("v").count().agg(F.max("count")).first()[0]
@@ -67,10 +69,7 @@ def test_max_pairs_per_band_caps_bucket_edges(spark):
     """A bucket above max_pairs_per_band emits ~cap star edges, not one per
     member (SURVEY §4 per-band pair cap); buckets below the cap are
     untouched."""
-    cfg = DedupConfig(
-        hot_detect_sample=1.0, hot_band_threshold=100_000,
-        max_pairs_per_band=50,
-    )
+    cfg = DedupConfig(hot_band_threshold=100_000, max_pairs_per_band=50)
     big = _bucket(spark, 0, 500, 0, 7)
     small = _bucket(spark, 1000, 1030, 1, 8)
     # equal phashes: the pair gate passes every non-hub member pair
@@ -89,12 +88,65 @@ def test_max_pairs_per_band_caps_bucket_edges(spark):
 
 
 def test_sampled_detection_misses_small_buckets_harmlessly(spark):
-    """Keys below the sampled-detection floor stay unsalted — star edges
+    """Keys well below the default threshold stay unsalted — star edges
     still link their members (correctness unaffected; only partition size
     guarantees relax)."""
-    cfg = DedupConfig(hot_detect_sample=0.01)
+    cfg = DedupConfig()
     small = _bucket(spark, 0, 40, 0, 5)
     edges = salted_candidate_edges(small, cfg)
     vertices = small.select(F.col("image_id").alias("id"))
     comp = connected_components(vertices, edges, id_col="id")
     assert comp.select("component").distinct().count() == 1
+
+
+def _salted_bucket_count(spark, threshold, n_buckets=20, size=200):
+    """How many of n_buckets size-member (band, key) buckets get salted at
+    this threshold, and whether each bucket stays one CC component. An
+    unsalted bucket is one star whose hub carries size - 1 edges; a salted
+    one splits into salt buckets whose hubs are linked by the hub chain."""
+    bands = spark.range(0, n_buckets * size, numPartitions=2).select(
+        F.col("id").alias("image_id"),
+        F.xxhash64("id").alias("phash"),
+        F.lit(0).alias("band"),
+        (F.col("id") / size).cast("long").alias("key"),
+    )
+    edges = salted_candidate_edges(
+        bands, DedupConfig(hot_band_threshold=threshold)
+    )
+    deg = (
+        edges.groupBy((F.col("src") / size).cast("long").alias("key"), "src")
+        .count()
+        .groupBy("key")
+        .agg(F.max("count").alias("deg"))
+    )
+    salted = deg.filter(F.col("deg") < size - 1).count()
+    vertices = bands.select(F.col("image_id").alias("id"))
+    comp = connected_components(vertices, edges, id_col="id")
+    components = comp.select("component").distinct().count()
+    return salted, components
+
+
+def test_hot_band_threshold_salts_moderate_bucket(spark):
+    """hot_band_threshold is live below the default. A 200-member bucket
+    expects 9.4 sampled rows at threshold 64 (rate 3/64), so it is salted
+    almost surely (P[< 3 sampled] ~ 0.005); at the default 300 (rate 1%)
+    it expects 2 and is salted only when the draw reaches 3 (P ~ 0.32).
+    Twenty such buckets keep both bounds far from the seeded draw's
+    noise. Salted or not, every bucket stays one component: star and
+    pair edges stay inside one salt bucket, so only the hub-chain edges
+    link a salted bucket's parts."""
+    salted, components = _salted_bucket_count(spark, 64)
+    assert salted >= 18, f"only {salted}/20 buckets salted at threshold 64"
+    assert components == 20
+    salted, components = _salted_bucket_count(spark, 300)
+    assert salted <= 12, f"{salted}/20 buckets salted at the default"
+    assert components == 20
+
+
+def test_config_rejects_hot_band_threshold_below_one():
+    """0 would divide by zero only once s3 runs, after s1 and s2 are
+    committed."""
+    for bad in (0, -1, None):
+        with pytest.raises(ValueError, match="hot_band_threshold"):
+            DedupConfig(hot_band_threshold=bad)
+    assert DedupConfig(hot_band_threshold=1).hot_band_threshold == 1

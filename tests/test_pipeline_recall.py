@@ -16,6 +16,8 @@ from tests.conftest import run_counting_jobs
 
 P = datagen.GenParams(n=2000, seed=42, img_hw=64)
 CFG = DedupConfig()
+# lossy re-encode roundtrip invariant: same content decodes >= 40 dB
+ROUNDTRIP_MIN_DB = 40.0
 
 
 @pytest.fixture(scope="module")
@@ -140,10 +142,10 @@ def test_per_row_invariants_decode_psnr_and_caption(spark, images):
             if r["fmt"] == "png":
                 assert np.array_equal(dec, src)
             else:
-                assert codec.psnr(src, dec) >= CFG.psnr_verify_db
+                assert codec.psnr(src, dec) >= ROUNDTRIP_MIN_DB
         elif cohort == "reenc":
             src = datagen.base_pixels(datagen.base_of(i, P), P)
-            assert codec.psnr(src, dec) >= CFG.psnr_verify_db
+            assert codec.psnr(src, dec) >= ROUNDTRIP_MIN_DB
 
 
 def test_caption_pairs_cover_planted_caption_dups(spark, images, tmp_path_factory):

@@ -15,6 +15,9 @@ from arhivum_spark.config import DedupConfig
 from arhivum_spark.plans import image_dedup
 from arhivum_spark.plans.image_dedup import psnr_verify_edges
 
+# lossy re-encode roundtrip invariant: same content decodes >= 40 dB
+ROUNDTRIP_MIN_DB = 40.0
+
 
 def _mini_images_and_edges(spark):
     rng = np.random.default_rng(11)
@@ -57,7 +60,7 @@ def test_psnr_verify_filters_false_edges(spark):
     out = psnr_verify_edges(edges, images, cfg)
     got = {(r.src, r.dst): r.psnr_db for r in out.collect()}
     assert set(got) == {(1, 2), (1, 5)}
-    assert got[(1, 2)] >= cfg.psnr_verify_db  # strict roundtrip invariant
+    assert got[(1, 2)] >= ROUNDTRIP_MIN_DB
     assert got[(1, 5)] >= cfg.psnr_edge_min_db
 
 

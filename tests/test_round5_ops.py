@@ -9,8 +9,8 @@
 2. The DuckDB oracle tokenizer (queries._TOKS_SQL) implements the same
    contract, so oracle parity holds on corpora the driver could ever
    grow whitespace into.
-3. _cap_buckets fast path (ADVICE): both paths drop singleton buckets
-   and feed identical candidate frames.
+3. _cap_buckets (ADVICE): singleton buckets are dropped whether or not
+   any bucket is over the cap.
 4. q_st_first_wins with spark.arhivum.scratchDir set (ADVICE medium):
    re-invocable in one process, fresh staging root each time — no
    makedirs crash, no stale-row accumulation in the append-mode sink.
@@ -156,10 +156,10 @@ def test_substring_pairs_whitespace_captions_definitional_oracle(spark):
     assert (1, 0) in truth and (2, 1) in truth  # the cases that regressed
 
 
-def test_cap_buckets_fast_path_drops_singletons(spark):
-    """ADVICE fix: the un-skewed fast path must feed the SAME candidate
-    frame as the skewed path — singleton buckets dropped, no _bn column
-    leaked."""
+def test_cap_buckets_drops_singletons(spark):
+    """ADVICE fix: the cap valve drops singleton buckets with or without a
+    bucket over the cap, leaks no _bn column, and down-samples only the
+    over-cap bucket."""
     from arhivum_spark.operators.embeddings import _cap_buckets
 
     rows = (
@@ -170,17 +170,19 @@ def test_cap_buckets_fast_path_drops_singletons(spark):
     bucketed = spark.createDataFrame(
         rows, schema="table int, bucket int, _cid long"
     )
-    out = _cap_buckets(bucketed, cap=100)  # max bucket 3 <= cap: fast path
-    assert "_bn" not in out.columns
+    out = _cap_buckets(bucketed, cap=100)  # max bucket 3 <= cap
+    assert out.columns == ["table", "bucket", "_cid"]
     got = {(r["table"], r["bucket"], r["_cid"]) for r in out.collect()}
     assert got == {(t, b, c) for t, b, c in rows if (t, b) != (0, 9) and (t, b) != (1, 7)}
 
-    skew = _cap_buckets(bucketed, cap=2)  # bucket (0,7) over cap: skew path
-    kept = {(r["table"], r["bucket"], r["_cid"]) for r in skew.drop("_bn").collect()}
-    # singletons dropped on this path too; hot bucket down-sampled to <= cap
+    skew = _cap_buckets(bucketed, cap=2)  # bucket (0,7) over cap
+    assert skew.columns == ["table", "bucket", "_cid"]
+    kept = {(r["table"], r["bucket"], r["_cid"]) for r in skew.collect()}
+    # singletons dropped here too; only the hot bucket is down-sampled
     assert all((t, b) not in {(0, 9), (1, 7)} for t, b, _ in kept)
     hot = [r for r in kept if (r[0], r[1]) == (0, 7)]
     assert 1 <= len(hot) <= 2
+    assert {r for r in kept if (r[0], r[1]) == (0, 8)} == {(0, 8, 10), (0, 8, 11)}
 
 
 def test_st_first_wins_scratch_dir_reinvocable(spark, tmp_path):
@@ -301,7 +303,7 @@ def test_pinned_reader_batch_contextmanager(spark):
     """Round-5 regression: the reader-batch pin must be usable by ANY
     image-bytes scan (the caption-only harness hit the round-4 OOM by
     calling attach_signatures outside run_pipeline's pin): set inside the
-    block, restore-to-prior or restore-to-unset after, None = no-op."""
+    block, restore-to-prior or restore-to-unset after."""
     from arhivum_spark.plans.image_dedup import pinned_reader_batch
 
     key = "spark.sql.parquet.columnarReaderBatchSize"
@@ -314,11 +316,17 @@ def test_pinned_reader_batch_contextmanager(spark):
         with pinned_reader_batch(spark, 64):
             assert spark.conf.get(key) == "64"
         assert spark.conf.get(key) == "999"
-        with pinned_reader_batch(spark, None):
-            assert spark.conf.get(key) == "999"
-        assert spark.conf.get(key) == "999"
     finally:
         spark.conf.unset(key)
+
+
+def test_config_rejects_parquet_batch_rows_below_one():
+    """None would leave the session's wide default batch in place,
+    silently dropping the reader-batch OOM guard; 0 is no batch at all."""
+    for bad in (None, 0, -1):
+        with pytest.raises(ValueError, match="parquet_batch_rows"):
+            DedupConfig(parquet_batch_rows=bad)
+    assert DedupConfig(parquet_batch_rows=1).parquet_batch_rows == 1
 
 
 def _sig_rows(spark, sigs, phash):
