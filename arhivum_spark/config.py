@@ -59,18 +59,8 @@ class DedupConfig:
     # instead of switching to a join that shuffles every image.
     psnr_max_inflight_edges: int = 600_000
 
-    # parquet vectorized-reader batch rows for the binary-heavy images
-    # scan. The reader reserves a contiguous column buffer of
-    # batch_rows x avg cell bytes PER TASK THREAD: at Spark's default
-    # 4096 rows, an images table averaging ~23 KB of encoded bytes per
-    # row reserves ~95 MB per thread — 32 local task threads OOMed a
-    # 16 GB heap at 2.4M images (measured, round 4). 256 rows (aligned
-    # with the pandas-UDF Arrow batch bound, session.py) keeps it at
-    # ~6 MB per thread.
-    parquet_batch_rows: int = 256
-
     # skew handling: (band, key) buckets of about this many members get
-    # salted. Detection counts a Bernoulli sample at rate 3/threshold
+    # salted. Detection counts a per-row hash draw at rate 3/threshold
     # (1% at the default) instead of shuffling every rows x bands row, so
     # a key this large expects 3 sampled rows; keys near the threshold are
     # salted or not by the draw, which is correctness-neutral (star edges
@@ -115,11 +105,9 @@ class DedupConfig:
             # checked here, not where used: a bad psnr_max_inflight_edges
             # fails in s3b and a 0 hot_band_threshold divides by zero in
             # s3, both after earlier stages are committed; None would
-            # silently drop the payload-shuffle bound or the reader-batch
-            # OOM guard
+            # silently drop the payload-shuffle bound
             "psnr_max_inflight_edges",
             "hot_band_threshold",
-            "parquet_batch_rows",
         ):
             value = getattr(self, name)
             if not isinstance(value, int) or value < 1:

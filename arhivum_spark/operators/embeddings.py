@@ -61,13 +61,12 @@ def _rhp_capped_buckets(
     id_col: str,
     vec_col: str,
     max_bucket_members: int,
-    payload: bool,
 ):
-    """Shared preamble of every rhp_* operator: dim probe, with_norm
-    base, multi-table bucketing, cap valve. Returns (capped, id_type) —
-    capped is None for an empty/all-null corpus. payload=True re-joins
-    (vecd, norm) onto the capped bucket rows for in-bucket verification.
-    EAGER (the dim probe)."""
+    """Shared preamble of the rhp_* operators: dim probe, with_norm base,
+    multi-table bucketing, cap valve, and (vecd, norm) re-joined onto the
+    capped bucket rows for verification. Returns (capped, id_type) —
+    capped is None for an empty/all-null corpus, else (_cid, table,
+    bucket, vecd, norm). EAGER (the dim probe)."""
     id_type = dict(df.dtypes)[id_col]
     dim = _probe_dim(df, vec_col)
     if dim is None:
@@ -78,10 +77,31 @@ def _rhp_capped_buckets(
     bucketed = rhp_table_buckets(
         base.select("_cid", "vecd"), dim, nbits, n_tables, seed
     )
-    capped = _cap_buckets(bucketed, max_bucket_members)
-    if payload:
-        capped = capped.join(base, "_cid")
+    capped = _cap_buckets(bucketed, max_bucket_members).join(base, "_cid")
     return capped, id_type
+
+
+def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Shared ranking tail of the top-k operators. `cands` pairs each
+    query (query_id, qvec, qnorm) with a candidate row (_cid, vecd, norm);
+    self-matches are dropped, cosine is rounded to 6 decimals, and each
+    query keeps its first k by (cosine desc, _cid asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("_cid"))
+    return (
+        cands.filter(F.col("_cid") != F.col("query_id"))
+        .withColumn(
+            "cosine",
+            F.round(_dot("vecd", "qvec") / (F.col("norm") * F.col("qnorm")), 6),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(
+            "query_id",
+            F.col("_cid").alias("neighbor_id"),
+            "cosine",
+            F.col("rk").alias("rank"),
+        )
+    )
 
 
 def cosine_topk(
@@ -95,9 +115,9 @@ def cosine_topk(
 
     query_ids: DataFrame with column `id_col` selecting the query rows out
     of `df`. The query side is broadcast — the corpus side streams, so the
-    plan is a single broadcast nested-loop + per-query top-k window. At
-    10^12 rows the same code runs with a bucketed-LSH prefilter
-    (`rhp_bucket_candidates`) replacing the crossJoin.
+    plan is a single broadcast nested-loop + per-query top-k window. The
+    scale path is `rhp_ann_topk`: the same ranking tail over an equi-join
+    on LSH buckets instead of the crossJoin.
     """
     base = with_norm(df, vec_col).select(
         F.col(id_col).alias("_cid"), "vecd", "norm"
@@ -116,29 +136,7 @@ def cosine_topk(
             F.col("norm").alias("qnorm"),
         )
     )
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col("_cid") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("vecd", "qvec") / (F.col("norm") * F.col("qnorm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("_cid")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("_cid").alias("neighbor_id"),
-            "cosine",
-            F.col("rk").alias("rank"),
-        )
-    )
+    return _rank_topk(base.crossJoin(F.broadcast(q)), k)
 
 
 def cosine_neardup_pairs(
@@ -148,9 +146,8 @@ def cosine_neardup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — exact O(n^2)
-    verify. Small-scale oracle / post-blocking verify step; the scale path
-    prefilters with `rhp_bucket_candidates` so only bucket-mates are
-    compared."""
+    verify. Small-scale oracle; the scale path `rhp_neardup_pairs` blocks
+    by LSH bucket so only bucket-mates are compared."""
     base = with_norm(df, vec_col).select(
         F.col(id_col).alias("_id"), "vecd", "norm"
     )
@@ -245,46 +242,6 @@ def _cap_buckets(bucketed: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def rhp_bucket_candidates(
-    df: DataFrame,
-    nbits: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_members: int = 4096,
-) -> DataFrame:
-    """Candidate near-dup id pairs: rows sharing an LSH bucket in ANY of
-    `n_tables` hyperplane tables (id_a < id_b, distinct).
-
-    Scale shape: the pair join is an equi-join on (table, bucket) — never a
-    crossJoin — and only compact ids ride the shuffle (vectors are re-joined
-    by the caller AFTER cross-table dedup, so each surviving pair carries
-    its payload exactly once). Bucket population is ~n/2^nbits per table;
-    nbits tunes the blocking factor against recall. Buckets above
-    `max_bucket_members` are down-sampled by deterministic draw
-    (_cap_buckets) — the O(k^2)-per-bucket blowup valve.
-
-    EAGER: constructing this plan runs a Spark job (the dim probe).
-    """
-    capped, id_type = _rhp_capped_buckets(
-        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
-        payload=False,
-    )
-    if capped is None:
-        return df.sparkSession.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}"
-        )
-    a = capped.select("table", "bucket", F.col("_cid").alias("id_a"))
-    b = capped.select("table", "bucket", F.col("_cid").alias("id_b"))
-    return (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def rhp_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -301,7 +258,8 @@ def rhp_neardup_pairs(
     small-scale oracle) but blocked by the (table, bucket) LSH keys; recall
     depends on (nbits, n_tables) vs the threshold's angle — the registered
     query pins a config measured at recall 1.0 on its corpus
-    (tests/test_oracle_guard.py re-measures it).
+    (tests/test_round3_ops.py::test_recall_guard_emb_neardup re-measures
+    it).
 
     Scale shape (round-3 rewrite): verification happens INSIDE each
     bucket via one applyInPandas einsum over the bucket's member matrix,
@@ -316,8 +274,7 @@ def rhp_neardup_pairs(
     EAGER: constructing this plan runs a Spark job (the dim probe).
     """
     capped, id_type = _rhp_capped_buckets(
-        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
-        payload=True,
+        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members
     )
     if capped is None:
         return df.sparkSession.createDataFrame(
@@ -362,65 +319,6 @@ def rhp_neardup_pairs(
         capped.groupBy("table", "bucket")
         .applyInPandas(per_bucket, schema=schema)
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def rhp_star_neardup_edges(
-    df: DataFrame,
-    threshold: float = 0.95,
-    nbits: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_members: int = 4096,
-) -> DataFrame:
-    """Scale path for near-dup DEDUP: verified STAR edges per LSH bucket.
-
-    The dedup variant runs connected components over the pair graph
-    anyway, so full within-bucket pair enumeration is wasted work — within
-    each (table, bucket) this emits only (hub = min id, member) edges that
-    clear the cosine threshold: O(m) per bucket instead of O(m^2), one
-    einsum row per bucket. Same trade as the image pipeline's star edges
-    (operators/lsh.py): clusters whose members all clear the threshold
-    against the hub are fully restored by CC; borderline members linked
-    only member-to-member can be missed, so use it for SemDeDup-style
-    keep/drop where the threshold is well inside the cluster diameter.
-    Output: (src, dst, cosine) with src = bucket hub.
-
-    EAGER: constructing this plan runs a Spark job (the dim probe).
-    """
-    capped, id_type = _rhp_capped_buckets(
-        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members,
-        payload=True,
-    )
-    if capped is None:
-        return df.sparkSession.createDataFrame(
-            [], f"src {id_type}, dst {id_type}, cosine double"
-        )
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf["_cid"].to_numpy().argsort(kind="stable")
-        ids = pdf["_cid"].to_numpy()[order]
-        x = np.array(pdf["vecd"].tolist(), dtype=np.float64)[order]
-        nrm = pdf["norm"].to_numpy(dtype=np.float64)[order]
-        cos = _round_half_up6(
-            np.einsum("d,jd->j", x[0], x[1:]) / (nrm[0] * nrm[1:])
-        )
-        keep = cos >= threshold
-        return pd.DataFrame(
-            {
-                "src": np.repeat(ids[0], int(keep.sum())),
-                "dst": ids[1:][keep],
-                "cosine": cos[keep],
-            }
-        )
-
-    schema = f"src {id_type}, dst {id_type}, cosine double"
-    return (
-        capped.groupBy("table", "bucket")
-        .applyInPandas(per_bucket, schema=schema)
-        .dropDuplicates(["src", "dst"])
     )
 
 
@@ -487,28 +385,18 @@ def rhp_ann_topk(
 
     EAGER: constructing this plan runs a Spark job (the dim probe).
     """
-    dim = _probe_dim(df, vec_col)
-    if dim is None:
-        id_type = dict(df.dtypes)[id_col]
+    capped, id_type = _rhp_capped_buckets(
+        df, nbits, n_tables, seed, id_col, vec_col, max_bucket_members
+    )
+    if capped is None:
         return df.sparkSession.createDataFrame(
             [],
             f"query_id {id_type}, neighbor_id {id_type}, "
             "cosine double, rank int",
         )
-    base = with_norm(df, vec_col).select(
-        F.col(id_col).alias("_cid"), "vecd", "norm"
-    )
     # two consumers below (query projection + candidate side) — pin once
-    # or the base scan + payload join run twice
-    bucketed = base.join(
-        _cap_buckets(
-            rhp_table_buckets(base, dim, nbits, n_tables, seed),
-            max_bucket_members,
-        ),
-        "_cid",
-    ).select("_cid", "vecd", "norm", "table", "bucket").localCheckpoint(
-        eager=False
-    )
+    # or the bucketing pass + payload join run twice
+    bucketed = capped.localCheckpoint(eager=False)
     q = (
         bucketed.join(query_ids.select(F.col(id_col).alias("_cid")), "_cid")
         .select(
@@ -521,25 +409,10 @@ def rhp_ann_topk(
     )
     cands = (
         bucketed.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("_cid") != F.col("query_id"))
         .select("query_id", "qvec", "qnorm", "_cid", "vecd", "norm")
         .dropDuplicates(["query_id", "_cid"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("_cid"))
-    return (
-        cands.withColumn(
-            "cosine",
-            F.round(_dot("vecd", "qvec") / (F.col("norm") * F.col("qnorm")), 6),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("_cid").alias("neighbor_id"),
-            "cosine",
-            F.col("rk").alias("rank"),
-        )
-    )
+    return _rank_topk(cands, k)
 
 
 def _assign_udf(cents: np.ndarray):
@@ -626,8 +499,8 @@ def fixed_centroid_assign(
     `n_cells` rows by id (cell i = i-th smallest id). Deterministic and
     SQL-expressible (argmin of c.c - 2 x.c over k literal centroids), so it
     carries the DuckDB oracle for the IVF operator; the iterative Lloyd's
-    refinement (`centroid_assign`) shares the same assignment kernel and is
-    pytest-gated instead."""
+    refinement (`_lloyd_refine`, run by ivf_probe_topk) shares the same
+    assignment kernel and is pytest-gated instead."""
     base = with_norm(df, vec_col).select(F.col(id_col).alias("_id"), "vecd")
     init = (
         base.orderBy("_id").limit(n_cells).select("vecd").collect()
@@ -652,8 +525,8 @@ def ivf_probe_topk(
     """IVF-probe approximate top-k: the inverted-file search path that
     complements brute force (exact baseline) and hyperplane LSH.
 
-    Corpus rows are assigned to `n_cells` Lloyd's cells (centroid_assign's
-    kernel); each query ranks ONLY the rows in the `nprobe` cells whose
+    Corpus rows are assigned to `n_cells` Lloyd's cells (_lloyd_refine,
+    then the _assign_udf kernel); each query ranks ONLY the rows in the `nprobe` cells whose
     centroids are nearest to it — candidates per query ~ nprobe/n_cells of
     the corpus. Scale shape: the driver holds k x d centroids and the
     (tiny) query set; the corpus is touched by one cell-assignment pass
@@ -711,57 +584,7 @@ def ivf_probe_topk(
         )
         .join(F.broadcast(probes), "query_id")
     )
-    cands = (
-        celled.join(F.broadcast(q), "cell")
-        .filter(F.col("_cid") != F.col("query_id"))
-        .dropDuplicates(["query_id", "_cid"])
+    cands = celled.join(F.broadcast(q), "cell").dropDuplicates(
+        ["query_id", "_cid"]
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("_cid"))
-    return (
-        cands.withColumn(
-            "cosine",
-            F.round(_dot("vecd", "qvec") / (F.col("norm") * F.col("qnorm")), 6),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("_cid").alias("neighbor_id"),
-            "cosine",
-            F.col("rk").alias("rank"),
-        )
-    )
-
-
-def centroid_assign(
-    df: DataFrame,
-    n_iters: int = 5,
-    n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantizer: distributed Lloyd's k-means over the embedding
-    column (init = deterministic sample), returning (id, cell).
-
-    Each iteration: broadcast centroids -> one mapInPandas pass fusing
-    vectorized argmin assignment with per-partition partial sums
-    (_lloyd_refine; a Column-expression argmin over k centroids x d dims
-    compiles a huge nested-when codegen tree, and a per-dimension
-    F.sum(element_at) agg compiles d aggregate expressions — both dwarf
-    the data work at production dims). Centroids live on the driver
-    (n_cells x dim floats — trivially small); only O(partitions * cells)
-    partial-sum rows ever leave executors."""
-    base = with_norm(df, vec_col).select(F.col(id_col).alias("_id"), "vecd")
-    init = (
-        base.withColumn("_h", F.xxhash64(F.col("_id").cast("string"), F.lit(seed)))
-        .orderBy("_h")
-        .limit(n_cells)
-        .select("vecd")
-        .collect()
-    )
-    centroids = np.array([list(r[0]) for r in init], dtype=np.float64)
-    centroids = _lloyd_refine(base.select("vecd"), centroids, n_iters)
-    return base.withColumn("cell", _assign_udf(centroids)("vecd")).select(
-        F.col("_id").alias(id_col), "cell"
-    )
+    return _rank_topk(cands, k)

@@ -23,7 +23,7 @@ Scale design (the parts Catalyst can't do for us — SURVEY.md §4):
   connected components restores the full cluster. No collect_list, no
   un-gated quadratic pair blowup on hot bands.
 - **Two-pass hot-key salting**: band-key frequencies are counted on a
-  Bernoulli sample at rate 3 / `hot_band_threshold`, so a key with
+  per-row hash draw at rate 3 / `hot_band_threshold`, so a key with
   `hot_band_threshold` members expects 3 sampled rows; keys with 3 sampled
   rows get a salt = hash(image_id, band, key) % SALT_BUCKETS appended,
   splitting a hot bucket's window into bounded partitions. Buckets of a
@@ -41,6 +41,9 @@ from arhivum_spark.config import DedupConfig
 
 # salt buckets per hot (band, key): a hot bucket's rows split this many ways
 SALT_BUCKETS = 16
+# hot-key detection keeps a row when a hash of it, mod this range, falls
+# below rate * range
+HOT_DRAW_RANGE = 1 << 20
 
 
 def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> DataFrame:
@@ -117,7 +120,7 @@ def salted_candidate_edges(
     """(band,key) buckets -> candidate edges (src < dst), salt-split.
 
     Two passes:
-      1. count band-key frequencies on a Bernoulli sample at rate
+      1. count band-key frequencies on a per-row hash draw at rate
          min(1, 3 / hot_band_threshold); a key is 'hot' when its sampled
          count reaches min(3, hot_band_threshold). A key with exactly
          hot_band_threshold members expects 3 sampled rows; a threshold
@@ -160,9 +163,16 @@ def salted_candidate_edges(
     # harmless (the hub chain reconnects its buckets). A window count over
     # raw (band,key) would funnel a whole hot band into one partition —
     # never do that.
+    # The draw is a per-row hash, not DataFrame.sample: Spark seeds a
+    # sample per partition, so the hot set would depend on how the band
+    # rows happen to be partitioned (input files, core count).
     threshold = cfg.hot_band_threshold
+    draw = F.pmod(
+        F.xxhash64("image_id", "band", "key", F.lit(cfg.minhash_seed)),
+        F.lit(HOT_DRAW_RANGE),
+    )
     hot = (
-        bands.sample(fraction=min(1.0, 3 / threshold), seed=cfg.minhash_seed)
+        bands.filter(draw < min(1.0, 3 / threshold) * HOT_DRAW_RANGE)
         .groupBy("band", "key")
         .agg(F.count("*").alias("cnt"))
         .filter(F.col("cnt") >= min(3, threshold))

@@ -1692,8 +1692,9 @@ FROM labels
 # ANN with (nbits=2, n_tables=16): measured recall 1.0 vs the exact top-k
 # on this corpus (max pairwise cosine ~= 0.51 => wide-margin neighbors), so
 # exact-kNN SQL is a true oracle for the approximate operator here
-# (tests/test_oracle_guard.py re-measures the recall so a corpus/config
-# drift fails with a number, not an opaque hash mismatch). The SQL is a
+# (tests/test_round3_ops.py::test_recall_guard_emb_ann_topk re-measures
+# the recall so a corpus/config drift fails with a number, not an opaque
+# hash mismatch). The SQL is a
 # standalone string — textually distinct from SQL_EMB_KNN — so nothing in
 # the driver can key/dedup the two entries together.
 def q_emb_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1816,7 +1817,7 @@ SELECT doc_id, is_duplicate, representative_id FROM flagged
 #    to exact top-k independent of the learned centroids, so DuckDB's
 #    exact kNN is a true oracle while the real probe plan executes.
 # Iterative Lloyd's cell QUALITY stays pytest-gated
-# (tests/test_training_ops.py); here its kernel runs inside the checked
+# (tests/test_embeddings.py); here its kernel runs inside the checked
 # plan (n_iters=2 mapInPandas partial-sum passes).
 def q_emb_ivf_cells_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)

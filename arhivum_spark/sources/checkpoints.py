@@ -45,6 +45,7 @@ class StageStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._compute_started: dict[str, float] = {}
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -107,7 +108,9 @@ class StageStore:
         directly: one pass, half the constant cost.
         """
         path = os.path.join(self.root, stage, "data")
-        t0 = time.time()
+        # the recorded seconds start at read_or_compute's compute() call,
+        # so they include the eager work inside it (counts, checkpoints)
+        t0 = self._compute_started.pop(stage, None) or time.time()
         if materialize_first:
             df = df.persist()
             df.count()
@@ -170,9 +173,10 @@ class StageStore:
         """Resume point: reuse the committed snapshot, else compute+commit."""
         if self.is_committed(stage):
             return self.read(stage)
-        return self.write(
-            stage, compute(), materialize_first=materialize_first
-        )
+        t0 = time.time()
+        df = compute()
+        self._compute_started[stage] = t0
+        return self.write(stage, df, materialize_first=materialize_first)
 
     def metrics(self) -> DataFrame | None:
         path = os.path.join(self.root, "_metrics")

@@ -63,7 +63,7 @@ def caption_recall(spark, images, p, workdir: str) -> dict:
     # (108 GB) the doubled in-flight scan state is a Java-heap OOM
     # (cliff #6, found by this gate; the 2.4M input merely fit).
     sig_cols = os.path.join(workdir, "caption_sig_cols.parquet")
-    with pinned_reader_batch(spark, cfg.parquet_batch_rows):
+    with pinned_reader_batch(spark):
         attach_signatures(images, cfg).select(
             "image_id", "simhash", "caption"
         ).write.mode("overwrite").parquet(sig_cols)

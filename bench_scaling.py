@@ -72,7 +72,7 @@ def timed_run(cores: int) -> dict:
     # pandas UDFs downstream (the module contract; unpinned, 32 threads
     # each reserve ~95 MB contiguous at the 4096-row default)
     warm = images.limit(64 * cores).repartition(2 * cores)
-    with pinned_reader_batch(spark, DedupConfig().parquet_batch_rows):
+    with pinned_reader_batch(spark):
         attach_signatures(warm, DedupConfig()).write.format("noop").mode(
             "overwrite"
         ).save()

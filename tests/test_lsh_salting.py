@@ -16,10 +16,8 @@ HOT_N = 4000
 def _bucket(spark, lo, hi, band, key, phash=None):
     """band_keys rows for ids [lo, hi) in one (band, key). phash defaults
     to a hash of the id: spread ~32 bits apart, so the bucket-local pair
-    gate passes no pair and only star edges remain. The partition count
-    is pinned: the seeded hot-key sample draws per partition, so this
-    keeps the sampled rows the same on every host."""
-    return spark.range(lo, hi, numPartitions=2).select(
+    gate passes no pair and only star edges remain."""
+    return spark.range(lo, hi).select(
         F.col("id").alias("image_id"),
         F.xxhash64("id").alias("phash") if phash is None
         else F.lit(phash).cast("long").alias("phash"),
@@ -104,7 +102,7 @@ def _salted_bucket_count(spark, threshold, n_buckets=20, size=200):
     this threshold, and whether each bucket stays one CC component. An
     unsalted bucket is one star whose hub carries size - 1 edges; a salted
     one splits into salt buckets whose hubs are linked by the hub chain."""
-    bands = spark.range(0, n_buckets * size, numPartitions=2).select(
+    bands = spark.range(0, n_buckets * size).select(
         F.col("id").alias("image_id"),
         F.xxhash64("id").alias("phash"),
         F.lit(0).alias("band"),
@@ -141,6 +139,24 @@ def test_hot_band_threshold_salts_moderate_bucket(spark):
     salted, components = _salted_bucket_count(spark, 300)
     assert salted <= 12, f"{salted}/20 buckets salted at the default"
     assert components == 20
+
+
+def test_hot_key_detection_ignores_partitioning(spark):
+    """The hot-key draw is a per-row hash, so the same rows give the same
+    edges however they are partitioned. A 200-member bucket at the default
+    threshold sits near the salting decision (3 of an expected 2 sampled
+    rows); a per-partition seeded sample salted it at 2 partitions only."""
+    results = []
+    for parts in (1, 2, 3, 8):
+        bands = spark.range(0, 200, numPartitions=parts).select(
+            F.col("id").alias("image_id"),
+            F.xxhash64("id").alias("phash"),
+            F.lit(0).alias("band"),
+            F.lit(5).cast("long").alias("key"),
+        )
+        edges = salted_candidate_edges(bands, DedupConfig())
+        results.append(sorted(tuple(r) for r in edges.collect()))
+    assert all(r == results[0] for r in results[1:])
 
 
 def test_config_rejects_hot_band_threshold_below_one():

@@ -11,6 +11,7 @@ from arhivum_spark import codec, datagen
 from arhivum_spark.config import DedupConfig
 from arhivum_spark.plans.image_dedup import caption_pairs, run_pipeline
 from arhivum_spark.functions.signatures import attach_signatures
+from arhivum_spark.session import ARROW_BATCH_FOR_BINARY
 from arhivum_spark.sources.checkpoints import StageStore
 from tests.conftest import run_counting_jobs
 
@@ -190,7 +191,7 @@ def test_pipeline_bounds_parquet_reader_batch(
     batch_rows x avg-cell-bytes contiguous PER TASK THREAD; the 4096-row
     default on a ~23 KB/row binary column OOMed a 16 GB heap with 32 task
     threads at 2.4M images. run_pipeline must pin the session's reader
-    batch to cfg.parquet_batch_rows for every scan it performs — and
+    batch to ARROW_BATCH_FOR_BINARY rows for every scan it performs — and
     (round 5, ADVICE) restore the prior session value on return so
     unrelated queries sharing the session keep wide scan batches."""
     from arhivum_spark.plans import image_dedup as mod
@@ -208,7 +209,7 @@ def test_pipeline_bounds_parquet_reader_batch(
     spark.conf.set(key, "4096")
     run_pipeline(images.limit(50), store, CFG)
     # pinned while the pipeline's scans run ...
-    assert seen == [str(CFG.parquet_batch_rows)]
+    assert seen == [str(ARROW_BATCH_FOR_BINARY)]
     # ... and the caller's session value restored afterwards
     assert spark.conf.get(key) == "4096"
     # restore-to-unset when there was no prior value

@@ -1,5 +1,5 @@
 """Round-3 operator tests:
-embedding-LSH degenerate-bucket valve + star edges, mixed-zone group skip,
+embedding-LSH stacked-planes bucketing, mixed-zone group skip,
 vectorized SimHash parity, and the approximate-operator recall guards
 (the last: re-measure recall of every approximate path that is registered
 against an EXACT oracle, so a corpus/seed/config drift fails with a recall
@@ -15,24 +15,7 @@ from tests.conftest import SF_ORACLE_DIR
 
 
 # ---------------------------------------------------------------------------
-# Embedding LSH: degenerate-bucket valve + star edges
-
-
-def test_emb_valve_bounds_identical_vector_cohort(spark):
-    from arhivum_spark.operators import embeddings as E
-
-    n, cap = 5000, 64
-    ident = spark.createDataFrame(
-        [(i, [1.0] * 8) for i in range(n)], "vec_id int, embedding array<float>"
-    )
-    cand = E.rhp_bucket_candidates(
-        ident, nbits=2, n_tables=2, max_bucket_members=cap
-    )
-    c = cand.count()
-    # every row lands in ONE bucket per table; the draw keeps an expected
-    # `cap` members -> O(n_tables * cap^2) pairs, nowhere near n^2/2
-    assert 0 < c <= 2 * cap * cap
-    assert c < n * (n - 1) // 2 / 100
+# Embedding LSH: stacked-planes bucketing
 
 
 def test_stacked_planes_match_per_table_reference(spark):
@@ -62,42 +45,6 @@ def test_stacked_planes_match_per_table_reference(spark):
         }
         for cid, b in ref.items():
             assert stacked[(cid, t)] == b
-
-
-def test_emb_star_edges_recover_planted_clusters(spark):
-    from arhivum_spark.operators import embeddings as E
-    from arhivum_spark.operators.connected_components import (
-        connected_components,
-    )
-
-    rng = np.random.default_rng(5)
-    rows = []
-    for c in range(4):  # 4 tight clusters of 6 near-identical vectors
-        center = rng.standard_normal(16)
-        center /= np.linalg.norm(center)
-        for j in range(6):
-            v = center + rng.standard_normal(16) * 0.01
-            rows.append((c * 6 + j, [float(x) for x in v]))
-    for i in range(40):  # noise rows, far from everything
-        v = rng.standard_normal(16) * 3
-        rows.append((100 + i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    edges = E.rhp_star_neardup_edges(
-        df, threshold=0.98, nbits=4, n_tables=8, seed=3
-    )
-    comp = connected_components(
-        df.select(F.col("vec_id").alias("id")),
-        edges.select("src", "dst"),
-        id_col="id",
-    )
-    got = {
-        r["id"]: r["component"] for r in comp.collect()
-    }
-    for c in range(4):
-        members = {got[c * 6 + j] for j in range(6)}
-        assert members == {c * 6}, f"cluster {c} split: {members}"
-    for i in range(40):
-        assert got[100 + i] == 100 + i  # noise stays isolated
 
 
 # ---------------------------------------------------------------------------

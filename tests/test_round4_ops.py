@@ -281,7 +281,9 @@ def test_rhp_blocking_prunes_clustered_corpus(spark, d):
     """Candidate pairs must be <5% of n^2/2 (measured: ~0.2%) while
     verified recall stays >= 0.99 vs the exact numpy oracle — the
     evidence that LSH blocking genuinely prunes on realistically-shaped
-    (clustered, high-dim) embedding corpora."""
+    (clustered, high-dim) embedding corpora. The candidate count is the
+    sum of C(m, 2) over the capped (table, bucket) sizes rhp_neardup_pairs
+    verifies: an upper bound on its distinct candidate pairs."""
     p = EmbParams(n=2000, d=d, n_clusters=60, cluster_size=10)
     pdf = clustered_embeddings_pandas(p)
     mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
@@ -295,9 +297,15 @@ def test_rhp_blocking_prunes_clustered_corpus(spark, d):
     df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
     df = df.cache()
     n = df.count()
-    n_candidates = embeddings.rhp_bucket_candidates(
-        df, nbits=LSH_NBITS, n_tables=LSH_TABLES
-    ).count()
+    capped, _ = embeddings._rhp_capped_buckets(
+        df, LSH_NBITS, LSH_TABLES, 42, "vec_id", "embedding", 4096
+    )
+    n_candidates = (
+        capped.groupBy("table", "bucket")
+        .agg((F.count("*") * (F.count("*") - 1) / 2).alias("pairs"))
+        .agg(F.sum("pairs"))
+        .first()[0]
+    )
     ratio = n_candidates / (n * (n - 1) / 2)
     assert ratio < 0.05, f"candidate ratio {ratio:.4f} (no pruning)"
 

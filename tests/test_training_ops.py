@@ -64,82 +64,6 @@ def test_ann_recovers_planted_near_duplicates(spark, emb):
     assert np.allclose(merged["cosine_ann"], merged["cosine_exact"])
 
 
-def test_ivf_centroid_assign_deterministic_and_total(spark, emb):
-    cells = embeddings.centroid_assign(emb, n_iters=2, n_cells=8).toPandas()
-    assert len(cells) == emb.count()
-    assert cells["cell"].between(0, 7).all()
-    again = embeddings.centroid_assign(emb, n_iters=2, n_cells=8).toPandas()
-    assert cells.sort_values("vec_id")["cell"].tolist() == (
-        again.sort_values("vec_id")["cell"].tolist()
-    )
-
-
-def test_lloyd_refine_matches_local_numpy_oracle(spark, emb):
-    """_lloyd_refine (distributed mapInPandas partial sums) vs a
-    definitional single-process numpy Lloyd's on the collected corpus:
-    centroids allclose after each of 3 iterations (summation ORDER
-    differs across partitions, so exact bit-equality is not the
-    contract) and the final assignment is identical."""
-    base = embeddings.with_norm(emb).select(
-        F.col("vec_id").alias("_id"), "vecd"
-    )
-    init = (
-        base.withColumn("_h", F.xxhash64(F.col("_id").cast("string"), F.lit(42)))
-        .orderBy("_h")
-        .limit(8)
-        .select("vecd")
-        .collect()
-    )
-    cents = np.array([list(r[0]) for r in init], dtype=np.float64)
-    x = np.array(
-        [list(r[0]) for r in base.orderBy("_id").select("vecd").collect()],
-        dtype=np.float64,
-    )
-    ref = cents.copy()
-    got = cents.copy()
-    for _ in range(3):
-        # definitional oracle iteration
-        d2 = ((x[:, None, :] - ref[None, :, :]) ** 2).sum(axis=2)
-        cell = np.argmin(d2, axis=1)
-        for c in range(len(ref)):
-            if (cell == c).any():
-                ref[c] = x[cell == c].mean(axis=0)
-        got = embeddings._lloyd_refine(base.select("vecd"), got, 1)
-        assert np.allclose(got, ref, atol=1e-8), "centroids diverged"
-    d2 = ((x[:, None, :] - ref[None, :, :]) ** 2).sum(axis=2)
-    ref_cell = np.argmin(d2, axis=1)
-    got_cell = (
-        embeddings.centroid_assign(emb, n_iters=3, n_cells=8)
-        .toPandas()
-        .sort_values("vec_id")["cell"]
-        .to_numpy()
-    )
-    assert (got_cell == ref_cell).all()
-
-
-def test_lloyd_refine_high_dim_no_codegen_blowup(spark):
-    """d=1024: the old per-dimension F.sum(element_at) agg compiled ~1000
-    aggregate expressions per iteration; the partial-sum path must handle
-    production dims in ordinary time. 400 rows x 1024 dims, 2 iterations,
-    plus empty-cell preservation (16 cells, clustered data -> some cells
-    can empty out and must keep their previous centroid)."""
-    import pandas as pd
-
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((400, 1024)).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"vec_id": range(400), "embedding": list(map(list, vecs))}
-        ),
-        schema="vec_id long, embedding array<float>",
-    )
-    cells = embeddings.centroid_assign(
-        df, n_iters=2, n_cells=16, vec_col="embedding"
-    ).toPandas()
-    assert len(cells) == 400
-    assert cells["cell"].between(0, 15).all()
-
-
 def test_doc_lsh_recall_vs_exact_jaccard(spark):
     """MinHash+LSH doc pairs must recover every exact pair with 3-gram
     Jaccard >= 0.5 (bands=32, r=4 -> P[detect] ~ 1-(1-0.5^4)^32 ~ 0.87 per
