@@ -32,7 +32,8 @@ bytes binary, w int, h int, fmt string, caption string, phash long) —
 extra columns are ignored.
 
 Prints ONE JSON line of run metrics on success (rows, clusters,
-duplicates, wall seconds, per-stage seconds).
+duplicates, wall seconds, per-stage seconds of this run, and the stages
+it reused from --stage-dir).
 """
 
 from __future__ import annotations
@@ -144,6 +145,14 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     try:
         images = spark.read.parquet(args.input)
         store = StageStore(spark, args.stage_dir)
+        # only this pipeline's stages: a reused --stage-dir can hold
+        # entries an earlier, differently-configured run committed
+        ran = {"s1_signatures", "s2_exact", "s3_candidates", "s4_clusters"}
+        if cfg.psnr_verify_enabled:
+            ran.add("s3b_psnr")
+        if args.captions_out:
+            ran.add("s5_captions")
+        reused = sorted(s for s in ran if store.is_committed(s))
         clusters = run_pipeline(images, store, cfg)
         clusters.write.mode("overwrite").parquet(args.output)
 
@@ -161,20 +170,15 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
                 args.captions_out
             )
 
-        # per-stage seconds from the manifest: exactly one value per
-        # stage, the wall of the run that produced the COMMITTED
-        # snapshot (a resumed stage reports its original write time —
-        # the _metrics table would report the max over every historical
-        # generation instead). Only this pipeline's stages: a reused
-        # --stage-dir can hold entries an earlier, differently-configured
-        # run committed.
-        ran = {"s1_signatures", "s2_exact", "s3_candidates", "s4_clusters"}
-        if cfg.psnr_verify_enabled:
-            ran.add("s3b_psnr")
-        if args.captions_out:
-            ran.add("s5_captions")
+        # per-stage seconds of THIS run: the manifest's write seconds for
+        # a stage it computed, 0 for one it reused (the manifest entry
+        # keeps the original write time and committed_at, which resume
+        # checks rely on)
         stage_secs = {
-            stage: round(entry.get("write_seconds", 0.0), 1)
+            stage: (
+                0.0 if stage in reused
+                else round(entry.get("write_seconds", 0.0), 1)
+            )
             for stage, entry in sorted(store._manifest()["stages"].items())
             if stage in ran
         }
@@ -184,6 +188,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
             "duplicates": int(row["dups"] or 0),
             "wall_seconds": round(time.time() - t0, 1),
             "stage_seconds": stage_secs,
+            "reused_stages": reused,
             "output": args.output,
         }
     finally:

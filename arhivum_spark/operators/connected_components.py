@@ -20,11 +20,14 @@ One algorithm: min-label propagation with a pointer jump in every round.
 Each round is ONE `localCheckpoint()` of the labels frame (north rule:
 checkpointed lineage), and the count of labels it changed is an
 `Observation` filled in by that same checkpoint — no separate count job.
-The jump halves the remaining label-path every round, so a component of
-diameter d converges in O(log d) rounds; the hub-star graphs the dedup
-pipelines feed in (operators/lsh.py) finish in 2-3, the last of them a
-round that changes nothing. Labels still changing after `max_iters`
-rounds raise `ConvergenceError` — partial labels are never returned.
+The hub-star graphs the dedup pipelines feed in (operators/lsh.py)
+finish in 2-3 rounds, the last of them a round that changes nothing. One
+jump per round does NOT bound the rounds by O(log diameter) for every id
+order: when ids are scrambled along a chain, the round count can grow
+with the chain length (up to 29 rounds on a 29-vertex chain; see
+ROADMAP's open item on the `connected_components` planning hang). Labels
+still changing after `max_iters` rounds raise `ConvergenceError` —
+partial labels are never returned.
 """
 
 from __future__ import annotations

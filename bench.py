@@ -2,14 +2,15 @@
 """Per-round benchmark harness (driver contract).
 
 Runs the full query registry at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` plus the headline
-image near-duplicate pipeline on a deterministically generated image+caption
-table, and prints ONE JSON line::
+``/root/testdata/sf0.1``) plus the headline image near-duplicate job
+(bench_common.timed_job: pipeline + caption stage) on a deterministically
+generated ``$SPARK_GRAFT_BENCH_IMAGES``-row (default 20000) 64 px table,
+on ``local[$SPARK_GRAFT_CPUS]``, and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys carry the graft's own north-rule numbers (images/sec on the dedup
-pipeline). Scaling (N vs 4N cores) evidence lives in bench_scaling.py /
+job). Scaling (N vs 4N cores) evidence lives in bench_scaling.py /
 BENCH.md — this script is the single-config per-round run.
 
 Only the JSON line goes to stdout; Spark chatter stays on stderr.
@@ -20,25 +21,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
-
-from arhivum_spark import datagen  # noqa: E402
-from arhivum_spark.config import DedupConfig  # noqa: E402
-from arhivum_spark.plans.image_dedup import run_pipeline  # noqa: E402
-from arhivum_spark.queries import REGISTRY  # noqa: E402
-from arhivum_spark.session import get_spark  # noqa: E402
-from arhivum_spark.sources.checkpoints import StageStore  # noqa: E402
+import bench_common as bc
+from arhivum_spark import datagen
+from arhivum_spark.queries import REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "20000"))
-
 
 
 def _sf_from_dir(d: str) -> float:
@@ -50,70 +41,44 @@ def _sf_from_dir(d: str) -> float:
 
 
 def main() -> None:
-    spark = get_spark("arhivum_bench", cores=CPUS, shuffle_partitions=CPUS)
+    spark = bc.session("arhivum_bench")
+    cores = bc.cores()
+    params = datagen.GenParams(n=N_IMAGES, seed=42, img_hw=64)
+    images = datagen.images_df(spark, params, partitions=2 * cores)
 
-    # Warm the Python-UDF worker pool BEFORE the query loop, exactly as the
-    # pipeline section below and bench_scaling.py already do — otherwise
-    # the first registry query absorbs ~4-5 s of per-process numpy/pandas
-    # import cost that a long-lived cluster amortizes to zero, and
-    # round-over-round per-query comparisons are skewed by registry order.
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm_udf(x):
-        import numpy as _np  # noqa: F401
-
-        return x * 1.0
-
-    warm_df = spark.range(64 * CPUS).repartition(2 * CPUS).select(
-        _warm_udf(F.col("id").cast("double")).alias("v")
-    )
-    warm_df.write.format("noop").mode("overwrite").save()
-
+    # warm the Python-UDF workers before the query loop too: otherwise the
+    # first registry query absorbs the per-process numpy/pandas import
+    # cost, and per-query comparisons are skewed by registry order
+    bc.warm_up(images)
     query_secs: dict[str, float] = {}
     for name, (fn, _sql) in REGISTRY.items():
         t0 = time.time()
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         query_secs[name] = round(time.time() - t0, 3)
 
-    # headline: image near-dup pipeline (signatures -> exact -> LSH -> CC)
-    params = datagen.GenParams(n=N_IMAGES, seed=42, img_hw=64)
-    images = datagen.images_df(spark, params, partitions=CPUS * 2)
     images = images.persist()
     images.count()  # materialize generation outside the timed window
-    # warm the Python-UDF worker pool (cold-start is a per-process constant
-    # that a long-lived cluster amortizes; steady-state is the honest number)
-    from arhivum_spark.functions.signatures import attach_signatures
-
-    warm = images.limit(64 * CPUS).repartition(2 * CPUS)
-    attach_signatures(warm, DedupConfig()).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
+    bc.warm_up(images)
     stage_root = tempfile.mkdtemp(prefix="arhivum_bench_stages_")
     try:
-        t0 = time.time()
-        clusters = run_pipeline(images, StageStore(spark, stage_root), DedupConfig())
-        n_out = clusters.count()
-        dedup_sec = time.time() - t0
+        run = bc.timed_job(spark, images, stage_root)
     finally:
         shutil.rmtree(stage_root, ignore_errors=True)
-    query_secs["image_dedup_pipeline"] = round(dedup_sec, 3)
+    query_secs["image_dedup_pipeline"] = run["wall_sec"]
 
-    total = round(sum(query_secs.values()), 3)
     print(
         json.dumps(
             {
                 "metric": "total_bench_seconds",
-                "value": total,
+                "value": round(sum(query_secs.values()), 3),
                 "unit": "sec",
                 "queries": query_secs,
                 "sf": _sf_from_dir(SF_DIR),
                 "dedup_images": N_IMAGES,
-                "dedup_rows_out": n_out,
-                "dedup_images_per_sec": round(N_IMAGES / dedup_sec, 1),
-                "cores": CPUS,
+                "dedup_rows_out": run["rows"],
+                "dedup_images_per_sec": round(N_IMAGES / run["wall_sec"], 1),
+                "dedup_stage_sec": run["stage_sec"],
+                "cores": cores,
             }
         )
     )

@@ -1,7 +1,11 @@
 #!/usr/bin/env python
-"""Connected-components benchmark on a DEEP ~1M-edge graph: the pointer
-jump's O(log diameter) round count measured at scale, beyond the hub-star
-regime the image pipeline feeds.
+"""Connected-components benchmark on a DEEP ~1M-edge graph: the round
+count of label propagation with a pointer jump every round, measured at
+scale, beyond the hub-star regime the image pipeline feeds. The rounds are
+not bounded by O(log diameter) for every id order: with scrambled ids
+they can grow with chain length (see ROADMAP's open item on the
+`connected_components` planning hang), and
+`cc_max_iters` turns a run that exhausts them into `ConvergenceError`.
 
 Graph: `--chains` disjoint paths of `--depth` edges each (default
 10,000 x 100 = 1,000,000 edges, diameter 100), vertex ids scrambled by a
@@ -15,8 +19,9 @@ Reports the rounds, Spark jobs and shuffle bytes of one
 count plus an order-insensitive checksum bit_xor(xxhash64(id, component))
 to compare outputs across commits.
 
-Usage: python bench_cc.py [--chains N] [--depth D] [--cores C]
-Prints one JSON line; paste the table into BENCH.md by hand.
+Usage: python bench_cc.py [--chains N] [--depth D]
+Runs on bench_common's session (SPARK_GRAFT_CPUS cores). Prints one JSON
+line; paste the table into BENCH.md by hand.
 """
 
 from __future__ import annotations
@@ -29,10 +34,10 @@ import time
 
 from pyspark.sql import functions as F
 
+import bench_common as bc
 from arhivum_spark.operators import connected_components as cc
-from arhivum_spark.session import get_spark
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+sys.path.insert(0, os.path.join(bc.REPO, "perfbench"))
 from harness import SparkCounters  # noqa: E402
 
 MULT = 2654435761  # Knuth multiplicative hash; odd => bijection mod 2^62
@@ -88,11 +93,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--chains", type=int, default=10_000)
     ap.add_argument("--depth", type=int, default=100)
-    ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    spark = get_spark("bench_cc", cores=args.cores,
-                      shuffle_partitions=2 * args.cores)
+    spark = bc.session("bench_cc")
     spark.sparkContext.setLogLevel("ERROR")
     v, e = edge_frame(spark, args.chains, args.depth)
     v = v.localCheckpoint()

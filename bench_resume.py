@@ -1,24 +1,29 @@
-"""Mid-pipeline kill + resume at 600k images (north-rule evidence).
+"""Kill/resume matrix on the bench corpus (north-rule evidence).
 
 The north rule requires that "every stage writes per-partition metrics and
 checkpoints so the job resumes mid-pipeline after executor loss". The unit
 test (tests/test_pipeline_recall.py::test_resume_reuses_committed_stages)
-proves stage reuse with a poisoned input at toy scale; this bench proves the
-same contract at bench scale with a REAL process death:
+proves stage reuse with a poisoned input at toy scale; this bench proves
+it with a REAL process death inside every stage:
 
-  phase 1  full run on a fresh stage root          -> wall_full, clusters
-  phase 2  fresh root; SIGKILL the whole process
-           group mid-stage-3 (driver + local JVM)  -> partial stage root
-  phase 3  rerun the identical job on that root    -> wall_resume, clusters
+  reference  one timed job (bench_common.timed_job: pipeline + caption
+             stage) on a fresh stage root -> value-level checksums
+  per stage  a child runs the same job on a fresh root and the whole
+             process group (driver + local JVM) is SIGKILLed inside the
+             target stage: RESUME_S1_DELAY s after child start for s1,
+             RESUME_MATRIX_DELAY s after the previous stage's commit for
+             s2..s5 (cut to a third, up to twice, when the kill lands
+             after the target's commit); then the job reruns in-process
+             on that root.
 
-Pass criteria, printed as one JSON line:
-  - phase-3 clusters == phase-1 clusters (resume is semantics-preserving)
-  - manifest committed_at timestamps for the stages that survived the kill
-    are IDENTICAL before and after phase 3 (they were reused, not rewritten)
-  - wall_resume < wall_full (the reused stages' cost was actually skipped)
+A point passes when the kill landed before the target stage's commit, the
+resume reproduces the reference's rows, clusters, cluster_xor,
+caption_rows and caption_xor, and every stage committed at the kill is
+reused verbatim (manifest committed_at unchanged).
 
-Run alone in its window (shared box):  python bench_resume.py
-Reuses bench_scaling.py's 600k input at /dev/shm/arhivum_scale.
+Knobs: SPARK_GRAFT_RESUME_S1_DELAY (default 30),
+SPARK_GRAFT_RESUME_MATRIX_DELAY (default 3), plus the bench_common
+corpus spec. Prints one JSON line:  python bench_resume.py
 """
 
 from __future__ import annotations
@@ -31,169 +36,66 @@ import subprocess
 import sys
 import time
 
-WORKDIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/dev/shm/arhivum_scale")
-N_IMAGES = int(os.environ.get("SPARK_GRAFT_RESUME_N", "600000"))
-IMG_HW = 96
-CORES = int(os.environ.get("SPARK_GRAFT_RESUME_CORES", "32"))
-# kill this long after s2_exact commits — lands inside stage 3 (LSH
-# candidates), whose 600k/local[32] wall is ~20-30 s
-KILL_DELAY_AFTER_S2 = float(os.environ.get("SPARK_GRAFT_RESUME_KILL_DELAY", "8"))
+import bench_common as bc
 
-INPUT = os.path.join(WORKDIR, f"images_n{N_IMAGES}_hw{IMG_HW}.parquet")
+S1_DELAY = float(os.environ.get("SPARK_GRAFT_RESUME_S1_DELAY", "30"))
+DELAY = float(os.environ.get("SPARK_GRAFT_RESUME_MATRIX_DELAY", "3"))
+CHECKSUMS = ("rows", "clusters", "cluster_xor", "caption_rows", "caption_xor")
 
 
-def _manifest(root: str) -> dict:
+def job(stage_root: str) -> dict:
+    """One timed job in its own session (the reference, each resume, and
+    the killed child)."""
+    spark = bc.session("resume")
     try:
-        with open(os.path.join(root, "manifest.json")) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {"stages": {}}
+        return bc.timed_job(spark, spark.read.parquet(bc.corpus(spark)), stage_root)
+    finally:
+        spark.stop()
 
 
-def run_job(stage_root: str) -> dict:
-    """One full pipeline attempt (called in-process for phases 1 and 3,
-    as a child process for phase 2)."""
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.plans.image_dedup import run_pipeline
-    from arhivum_spark.session import get_spark
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    spark = get_spark(
-        f"resume_{CORES}", cores=CORES, shuffle_partitions=4 * CORES
-    )
-    images = spark.read.parquet(INPUT)
-    t0 = time.time()
-    out = run_pipeline(images, StageStore(spark, stage_root), DedupConfig())
-    n_rows = out.count()
-    wall = time.time() - t0
-    n_clusters = out.select("cluster_id").distinct().count()
-    spark.stop()
-    return {"wall_sec": round(wall, 1), "rows": n_rows, "clusters": n_clusters}
-
-
-# pipeline stage commit order (plans/image_dedup.py) + the caption stage
-STAGES = [
-    "s1_signatures",
-    "s2_exact",
-    "s3_candidates",
-    "s3b_psnr",
-    "s4_clusters",
-    "s5_captions",
-]
-
-
-def run_job_full(stage_root: str) -> dict:
-    """Matrix-mode job: pipeline + caption stage, with order-independent
-    bit_xor checksums so 'identical output' is value-level, not just
-    row-count-level. Used in-process for the reference/resume phases and
-    as the child for every kill point (the child must attempt ALL stages
-    so a kill can land in any of them; s1 and s3b cover the
-    materialize_first=True persist+count commit sequence, s2-s5 the
-    pure-JVM direct-write path)."""
-    from pyspark.sql import functions as F
-
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.plans.image_dedup import caption_pairs, run_pipeline
-    from arhivum_spark.session import get_spark
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    spark = get_spark(
-        f"resume_{CORES}", cores=CORES, shuffle_partitions=4 * CORES
-    )
-    images = spark.read.parquet(INPUT)
-    store = StageStore(spark, stage_root)
-    cfg = DedupConfig()
-    t0 = time.time()
-    out = run_pipeline(images, store, cfg)
-    csum = out.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(image_id, cluster_id))").alias("x"),
-        F.countDistinct("cluster_id").alias("k"),
-    ).first()
-    caps = caption_pairs(store.read("s1_signatures"), store, cfg)
-    cap_csum = caps.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(id_a, id_b, pair_class))").alias("x"),
-    ).first()
-    wall = time.time() - t0
-    spark.stop()
-    return {
-        "wall_sec": round(wall, 1),
-        "rows": csum["n"],
-        "clusters": csum["k"],
-        "cluster_xor": csum["x"],
-        "caption_rows": cap_csum["n"],
-        "caption_xor": cap_csum["x"],
-    }
-
-
-def killed_run(
-    stage_root: str,
-    trigger_stage: str | None = "s2_exact",
-    delay: float | None = None,
-    child_mode: str = "--child",
-) -> dict:
+def killed_run(stage_root: str, trigger_stage: str | None, delay: float) -> dict:
     """Launch the job in a child process group; SIGKILL the whole group
     (python driver AND the local-mode JVM) `delay` seconds after
-    `trigger_stage` commits (None: after child start — lands inside s1,
-    before any commit)."""
-    if delay is None:
-        delay = KILL_DELAY_AFTER_S2
-    env = dict(os.environ)
-    env.setdefault("SPARK_LOCAL_DIRS", os.path.join(WORKDIR, "spark_local"))
+    `trigger_stage` commits (None: after child start)."""
     errlog = os.path.join(stage_root, "_child_stderr.log")
     os.makedirs(stage_root, exist_ok=True)
-    child = subprocess.Popen(
-        [sys.executable, __file__, child_mode, stage_root],
-        env=env,
-        start_new_session=True,  # own process group -> killpg reaps the JVM
-        stdout=subprocess.DEVNULL,
-        stderr=open(errlog, "w"),
-    )
+    with open(errlog, "w") as err:
+        child = subprocess.Popen(
+            [sys.executable, __file__, "--child", stage_root],
+            start_new_session=True,  # own process group -> killpg reaps the JVM
+            stdout=subprocess.DEVNULL,
+            stderr=err,
+        )
     t0 = time.time()
     trig_at = t0 if trigger_stage is None else None
-    completed = False
-    while True:
-        if child.poll() is not None:
-            completed = True
-            break
-        stages = _manifest(stage_root)["stages"]
-        if trig_at is None and trigger_stage in stages:
+    while child.poll() is None:
+        if trig_at is None and trigger_stage in bc.read_manifest(stage_root)["stages"]:
             trig_at = time.time()
         if trig_at is not None and time.time() - trig_at >= delay:
             break
         if time.time() - t0 > 1800:
             os.killpg(child.pid, signal.SIGKILL)
-            raise RuntimeError(
-                f"child never reached {trigger_stage} in 30 min"
-            )
+            raise RuntimeError(f"child never reached {trigger_stage} in 30 min")
         time.sleep(0.2)  # fine-grained: sub-second kill delays must land
-    if completed:
-        # distinguish "job too fast for the kill window" (rc 0) from a
-        # CRASHED child — the old message sent operators tuning timing
-        # when the job had actually died at startup, with stderr gone
-        tail = ""
-        try:
-            with open(errlog) as f:
-                tail = f.read()[-2000:]
-        except OSError:
-            pass
+    else:
+        # "job too fast for the kill window" (rc 0) vs a CRASHED child
+        with open(errlog) as f:
+            tail = f.read()[-2000:]
         if child.returncode != 0:
             raise RuntimeError(
                 f"child CRASHED (rc={child.returncode}) before the kill "
                 f"fired (trigger={trigger_stage}); stderr tail:\n{tail}"
             )
         raise RuntimeError(
-            f"child finished before the kill fired (trigger="
-            f"{trigger_stage}, delay={delay}) — raise SPARK_GRAFT_RESUME_N "
-            "or lower the delay"
+            f"child finished before the kill fired (trigger={trigger_stage}, "
+            f"delay={delay}) — raise SPARK_GRAFT_SCALE_IMAGES or lower the delay"
         )
     os.killpg(child.pid, signal.SIGKILL)
     child.wait()
     killed_after = round(time.time() - t0, 1)
-    # give the OS a beat to reap the JVM before phase 3 starts its own
+    # give the OS a beat to reap the JVM before the resume starts its own
     time.sleep(3)
-    stages = _manifest(stage_root)["stages"]
+    stages = bc.read_manifest(stage_root)["stages"]
     return {
         "killed_after_sec": killed_after,
         "committed_at_kill": sorted(stages),
@@ -201,74 +103,46 @@ def killed_run(
     }
 
 
-def matrix_main() -> None:
-    """Kill/resume at EVERY stage boundary (round-5 VERDICT task 4): one
-    reference run, then one kill point inside each stage — s1 (no commit
-    yet; materialize_first commit path), s2..s5 (pure-JVM write path),
-    s3b (pandas-UDF stage, materialize_first) — each followed by a
-    resume that
-    must reproduce the reference's value-level checksums and reuse every
-    stage committed at kill verbatim (manifest timestamps unchanged).
-    Prints one JSON line."""
-    os.environ.setdefault(
-        "SPARK_LOCAL_DIRS", os.path.join(WORKDIR, "spark_local")
-    )
-    root_full = os.path.join(WORKDIR, "resume_matrix_full")
+def main() -> None:
+    if len(sys.argv) == 3 and sys.argv[1] == "--child":
+        job(sys.argv[2])
+        return
+
+    root_full = os.path.join(bc.WORKDIR, "resume_matrix_full")
     shutil.rmtree(root_full, ignore_errors=True)
-    full = run_job_full(root_full)
+    full = job(root_full)
     shutil.rmtree(root_full, ignore_errors=True)
 
-    # kill inside stage k = trigger on the previous stage's commit (None
-    # for s1). Delay after trigger is small so the kill lands early in
-    # the next stage; s1's own delay must clear session startup.
-    s1_delay = float(os.environ.get("SPARK_GRAFT_RESUME_S1_DELAY", "30"))
-    delay = float(os.environ.get("SPARK_GRAFT_RESUME_MATRIX_DELAY", "3"))
-    points = [(STAGES[0], None, s1_delay)] + [
-        (STAGES[i + 1], STAGES[i], delay) for i in range(len(STAGES) - 1)
+    stages = bc.STAGES
+    points = [(stages[0], None, S1_DELAY)] + [
+        (stages[i + 1], stages[i], DELAY) for i in range(len(stages) - 1)
     ]
     rows = []
-    all_ok = True
-    for kill_in, trigger, d in points:
-        root = os.path.join(WORKDIR, f"resume_matrix_{kill_in}")
-        # self-correcting kill timing: a stage faster than the
-        # post-trigger delay means the kill lands AFTER its commit and
-        # the point tests nothing (enforced below) — retry with the
-        # delay cut to a third, up to twice, instead of depending on a
-        # hand-tuned constant per machine speed
-        attempt_delay = d
-        for _attempt in range(3):
+    for kill_in, trigger, delay in points:
+        root = os.path.join(bc.WORKDIR, f"resume_matrix_{kill_in}")
+        expected = sorted(stages[: stages.index(kill_in)])
+        # a stage faster than the post-trigger delay commits before the
+        # kill and the point tests nothing (checked below): retry with the
+        # delay cut to a third, up to twice
+        for attempt in range(3):
             shutil.rmtree(root, ignore_errors=True)
-            kill = killed_run(
-                root, trigger, attempt_delay, child_mode="--child-full"
-            )
-            expected_try = sorted(STAGES[: STAGES.index(kill_in)])
-            if kill["committed_at_kill"] == expected_try or _attempt == 2:
+            kill = killed_run(root, trigger, delay)
+            if kill["committed_at_kill"] == expected or attempt == 2:
                 break
-            attempt_delay = max(0.3, attempt_delay / 3)
-        resumed = run_job_full(root)
-        after = _manifest(root)["stages"]
+            delay = max(0.3, delay / 3)
+        resumed = job(root)
+        after = bc.read_manifest(root)["stages"]
         reused = sorted(
             s
-            for s in kill["committed_ts"]
-            if after.get(s, {}).get("committed_at")
-            == kill["committed_ts"][s]
+            for s, ts in kill["committed_ts"].items()
+            if after.get(s, {}).get("committed_at") == ts
         )
-        # the kill must have landed BEFORE the target stage's commit —
-        # committed_at_kill must be exactly the preceding stages, or the
-        # point silently tested nothing (e.g. a fast s2 completing
-        # inside the post-trigger delay)
-        expected = sorted(STAGES[: STAGES.index(kill_in)])
         landed_ok = kill["committed_at_kill"] == expected
         ok = (
             landed_ok
-            and resumed["clusters"] == full["clusters"]
-            and resumed["cluster_xor"] == full["cluster_xor"]
-            and resumed["rows"] == full["rows"]
-            and resumed["caption_rows"] == full["caption_rows"]
-            and resumed["caption_xor"] == full["caption_xor"]
+            and all(resumed[k] == full[k] for k in CHECKSUMS)
             and reused == kill["committed_at_kill"]
         )
-        all_ok = all_ok and ok
         rows.append(
             {
                 "kill_in": kill_in,
@@ -283,79 +157,22 @@ def matrix_main() -> None:
         if ok:
             shutil.rmtree(root, ignore_errors=True)
         else:
-            # keep the stage root: manifest timestamps + committed
-            # parquet are the only evidence for debugging a failed
-            # resume — deleting them forces a full matrix re-run under
-            # instrumentation
-            print(
-                f"kill point {kill_in} FAILED — stage root kept at {root}",
-                file=sys.stderr,
-            )
+            # the manifest timestamps and committed parquet are the only
+            # evidence for debugging a failed resume
+            print(f"kill point {kill_in} FAILED — stage root kept at {root}",
+                  file=sys.stderr)
     print(
         json.dumps(
             {
                 "metric": "resume_kill_matrix",
-                "n_images": N_IMAGES,
-                "cores": CORES,
+                "n_images": bc.N_IMAGES,
+                "cores": bc.cores(),
                 "reference": full,
                 "kill_points": rows,
-                "all_match": all_ok,
+                "all_match": all(r["matches_reference"] for r in rows),
             }
         )
     )
-
-
-def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--child":
-        run_job(sys.argv[2])
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--child-full":
-        run_job_full(sys.argv[2])
-        return
-
-    if not os.path.exists(os.path.join(INPUT, "_SUCCESS")):
-        raise SystemExit(
-            f"input {INPUT} missing — run bench_scaling.py's generate_input "
-            "first (or set SPARK_GRAFT_RESUME_N to an existing size)"
-        )
-    if os.environ.get("SPARK_GRAFT_RESUME_MATRIX") == "1":
-        matrix_main()
-        return
-    os.environ.setdefault(
-        "SPARK_LOCAL_DIRS", os.path.join(WORKDIR, "spark_local")
-    )
-
-    root_full = os.path.join(WORKDIR, "resume_full")
-    root_kill = os.path.join(WORKDIR, "resume_killed")
-    shutil.rmtree(root_full, ignore_errors=True)
-    shutil.rmtree(root_kill, ignore_errors=True)
-
-    full = run_job(root_full)
-    kill = killed_run(root_kill)
-    resumed = run_job(root_kill)
-    stages_after = _manifest(root_kill)["stages"]
-
-    reused = [
-        s
-        for s in kill["committed_ts"]
-        if stages_after.get(s, {}).get("committed_at")
-        == kill["committed_ts"][s]
-    ]
-    result = {
-        "metric": "resume_after_kill",
-        "n_images": N_IMAGES,
-        "cores": CORES,
-        "full": full,
-        "killed": kill,
-        "resume": resumed,
-        "stages_reused_verbatim": sorted(reused),
-        "resume_matches_full": resumed["clusters"] == full["clusters"]
-        and resumed["rows"] == full["rows"],
-        "resume_faster": resumed["wall_sec"] < full["wall_sec"],
-    }
-    shutil.rmtree(root_full, ignore_errors=True)
-    shutil.rmtree(root_kill, ignore_errors=True)
-    print(json.dumps(result))
 
 
 if __name__ == "__main__":

@@ -2,19 +2,20 @@
 """N-vs-4N scaling evidence for the north rule.
 
 No multi-executor cluster exists in this sandbox, so the two cluster sizes
-are proxied by two parallelism levels of the SAME job on the SAME input:
-``local[8]`` (N) vs ``local[32]`` (4N) — separate JVMs, identical parquet
-input generated once. Reported: images/sec at both levels and scaling
-efficiency = T(N) / (4 * T(4N)) = throughput(4N) / (4 * throughput(N)).
+are proxied by parallelism levels of the SAME job on the SAME input:
+``local[N]`` vs ``local[4N]``, separate JVMs, one bench corpus (see
+bench_common). Reported: images/sec per level and scaling efficiency
+T(N) / (4 * T(4N)) = throughput(4N) / (4 * throughput(N)).
+
+Knobs: SPARK_GRAFT_SCALE_CORES (comma-separated levels, default "8,32";
+needs an N/4N pair), SPARK_GRAFT_SCALE_REPEATS (runs per level, best
+kept; default 1), plus the bench_common corpus spec.
 
 Usage:
-    python bench_scaling.py            # full run -> one JSON line + BENCH.md
+    python bench_scaling.py            # one JSON line on stdout; the
+                                       # machine table goes to
+                                       # $SPARK_GRAFT_SCALE_DIR/BENCH_SCALING.md
     python bench_scaling.py --run 8    # (internal) one timed run at local[8]
-
-Every timed run warms the Python-UDF worker pool first (one pass over a
-small slice spread across all cores): worker cold-start is a per-process
-constant (~2 s/worker for numpy+pandas imports) that a long-lived cluster
-amortizes to zero, so steady-state throughput is the honest metric.
 """
 
 from __future__ import annotations
@@ -24,83 +25,27 @@ import os
 import shutil
 import subprocess
 import sys
-import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+import bench_common as bc
 
-N_IMAGES = int(os.environ.get("SPARK_GRAFT_SCALE_IMAGES", "600000"))
-IMG_HW = int(os.environ.get("SPARK_GRAFT_SCALE_HW", "96"))
-WORKDIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/dev/shm/arhivum_scale")
 CORE_LEVELS = tuple(
     int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_CORES", "8,32").split(",")
-)  # N and 4N
-
-
-def _input_path() -> str:
-    return os.path.join(WORKDIR, f"images_n{N_IMAGES}_hw{IMG_HW}.parquet")
-
-
-def generate_input() -> str:
-    from arhivum_spark import datagen
-    from arhivum_spark.session import get_spark
-
-    path = _input_path()
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    spark = get_spark("scale_datagen", cores=32, shuffle_partitions=32)
-    p = datagen.GenParams(n=N_IMAGES, seed=42, img_hw=IMG_HW)
-    datagen.images_df(spark, p, partitions=256).write.mode("overwrite").parquet(path)
-    spark.stop()
-    return path
+)
 
 
 def timed_run(cores: int) -> dict:
-    from arhivum_spark.config import DedupConfig
-    from arhivum_spark.functions.signatures import attach_signatures
-    from arhivum_spark.plans.image_dedup import pinned_reader_batch, run_pipeline
-    from arhivum_spark.session import get_spark
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    # 4x cores shuffle partitions: AQE coalesces the small ones, and band-key
-    # skew averages out over finer tasks (measured: halves the LSH stage)
-    spark = get_spark(f"scale_{cores}", cores=cores, shuffle_partitions=4 * cores)
-    images = spark.read.parquet(_input_path())
-    # warm the Python worker pool: one full-width pass over a small slice
-    # — inside the reader-batch pin like EVERY image-bytes scan with
-    # pandas UDFs downstream (the module contract; unpinned, 32 threads
-    # each reserve ~95 MB contiguous at the 4096-row default)
-    warm = images.limit(64 * cores).repartition(2 * cores)
-    with pinned_reader_batch(spark):
-        attach_signatures(warm, DedupConfig()).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    stage_root = os.path.join(WORKDIR, f"stages_{cores}")
+    spark = bc.session(f"scale_{cores}", cores)
+    images = spark.read.parquet(bc.corpus(spark))
+    bc.warm_up(images)
+    stage_root = os.path.join(bc.WORKDIR, f"stages_{cores}")
     shutil.rmtree(stage_root, ignore_errors=True)
-    t0 = time.time()
-    out = run_pipeline(images, StageStore(spark, stage_root), DedupConfig())
-    n_rows = out.count()
-    wall = time.time() - t0
-    n_clusters = out.select("cluster_id").distinct().count()
-    stage_secs = {
-        r["stage"]: round(r["max(write_seconds)"], 1)
-        for r in StageStore(spark, stage_root)
-        .metrics()
-        .groupBy("stage")
-        .agg({"write_seconds": "max"})
-        .collect()
-    }
+    run = bc.timed_job(spark, images, stage_root)
     shutil.rmtree(stage_root, ignore_errors=True)
     spark.stop()
     return {
         "cores": cores,
-        "wall_sec": round(wall, 1),
-        "images_per_sec": round(N_IMAGES / wall, 1),
-        "rows_out": n_rows,
-        "n_clusters": n_clusters,
-        "stage_sec": stage_secs,
+        "images_per_sec": round(bc.N_IMAGES / run["wall_sec"], 1),
+        **run,
     }
 
 
@@ -108,46 +53,28 @@ def _pairs(levels: tuple[int, ...]) -> list[tuple[int, int]]:
     return [(a, b) for a in levels for b in levels if b == 4 * a]
 
 
-def write_bench_md(results: dict[int, dict], effs: dict[str, float]) -> None:
+def write_table(results: dict[int, dict], effs: dict[str, float]) -> str:
+    """Machine table of this run, written into the work dir (BENCH.md
+    carries the curated narrative and is edited by hand)."""
     levels = sorted(results)
     lines = [
-        "# BENCH_SCALING — auto-generated by bench_scaling.py",
+        "# BENCH_SCALING — generated by bench_scaling.py",
         "",
-        "(Machine-written tables for the latest scaling run. The curated",
-        "narrative — round-over-round history, bandwidth-ceiling analysis,",
-        "per-stage interpretation — lives in BENCH.md and is maintained by",
-        "hand; merge numbers from here into there, never the reverse.)",
-        "",
-        f"Input: {N_IMAGES:,} synthetic images ({IMG_HW}x{IMG_HW}, seeded, "
-        "planted duplicate cohorts incl. all-black / boilerplate skew), one "
-        "parquet table read by every run. Job: full near-dup pipeline "
-        "(signatures -> exact dedup -> LSH banding+salting -> verification "
-        "-> connected components -> representative election), all stages "
-        "checkpointed with per-partition metrics.",
-        "",
-        "Sandbox proxy for cluster sizes (no real cluster available): the "
-        "identical job at two parallelism levels in separate JVMs. "
-        "Python-UDF workers are warmed before timing — worker cold-start "
-        "is a per-process constant a long-lived cluster amortizes away. "
-        "Shuffle dirs: "
-        + os.environ.get(
-            "SPARK_LOCAL_DIRS", os.path.join(WORKDIR, "spark_local")
-        )
-        + " (RAM-backed by default — a single box's one disk does not "
-        "model a cluster's aggregate disk bandwidth; large inputs that "
-        "exhaust tmpfs override this to real disk).",
+        f"Input: {bc.N_IMAGES:,} synthetic images ({bc.IMG_HW}x{bc.IMG_HW}, "
+        "seeded, planted duplicate cohorts), one parquet table read by every "
+        "run. Job: run_pipeline + caption_pairs (s1..s5), every stage "
+        "checkpointed; Python-UDF workers warmed before timing. Shuffle "
+        "dirs: " + os.environ.get("SPARK_LOCAL_DIRS", "(Spark default)") + ".",
         "",
         "| cores | wall (s) | images/sec | stage seconds |",
         "|---|---|---|---|",
     ]
     for c in levels:
         r = results[c]
-        stages = ", ".join(f"{k}={v}" for k, v in sorted(r["stage_sec"].items()))
-        wall = r["wall_sec"]
-        if len(r.get("all_wall_sec", [])) > 1:
-            wall = f"{wall} (runs: {r['all_wall_sec']})"
+        stages = ", ".join(f"{k}={v}" for k, v in r["stage_sec"].items())
         lines.append(
-            f"| local[{c}] | {wall} | {r['images_per_sec']} | {stages} |"
+            f"| local[{c}] | {r['wall_sec']} (runs: {r['all_wall_sec']}) "
+            f"| {r['images_per_sec']} | {stages} |"
         )
     lines.append("")
     for name, eff in effs.items():
@@ -155,48 +82,24 @@ def write_bench_md(results: dict[int, dict], effs: dict[str, float]) -> None:
     for a, b in _pairs(tuple(levels)):
         sa, sb = results[a]["stage_sec"], results[b]["stage_sec"]
         per_stage = ", ".join(
-            f"{st}={sa[st] / (4 * sb[st]):.2f}"
-            for st in sorted(sa)
-            if st in sb and sb[st] > 0
+            f"{st}={sa[st] / (4 * sb[st]):.2f}" for st in sa if sb[st] > 0
         )
         lines.append(f"Per-stage efficiency {a}->{b}: {per_stage}")
+    keys = ("rows", "clusters", "cluster_xor", "caption_rows", "caption_xor")
     r0 = results[levels[0]]
-    # the sentence below claims BOTH identical rows and clusters — check
-    # both (a parallelism-dependent row-loss bug could keep cluster
-    # counts while dropping rows)
-    same = (
-        len({results[c]["n_clusters"] for c in levels}) == 1
-        and len({results[c]["rows_out"] for c in levels}) == 1
-    )
+    same = all(results[c][k] == r0[k] for c in levels for k in keys)
     lines += [
         "",
-        f"Determinism across parallelism: every run produced "
-        f"{r0['rows_out']:,} rows and {r0['n_clusters']:,} clusters "
-        f"({'identical' if same else 'DIFFERENT'}).",
-        "",
-        "## Reading these numbers honestly",
-        "",
-        "A single box shares one memory system across all cores: measured "
-        "warmed aggregate copy bandwidth here grows sublinearly (24 GB/s "
-        "at 1 proc, 44.6 at 2, 110 at 8, 300 at 32 — so 2->8 cores buys "
-        "only 2.47x bandwidth, a 0.62 efficiency ceiling for any "
-        "bandwidth-bound stage). The signature kernel "
-        "itself scales linearly in a process-pool microbenchmark "
-        "(0.62 -> 0.74 ms/img per process from 8 -> 32 processes), so the "
-        "gap between the low-N and high-N efficiency below is the shared "
-        "bandwidth + constant scheduling floor of the proxy, not the "
-        "pipeline: a real 4N-executor cluster multiplies memory bandwidth, "
-        "disk, and scheduler throughput together with the cores. The "
-        "low-N pair (below the box's bandwidth knee) is therefore the "
-        "faithful proxy for executor scaling; the high-N pair is reported "
-        "for transparency.",
+        f"Determinism across parallelism: rows, clusters, cluster_xor and "
+        f"caption_xor are {'identical' if same else 'DIFFERENT'} across "
+        f"levels (local[{levels[0]}]: {r0['rows']:,} rows, "
+        f"{r0['clusters']:,} clusters, cluster_xor {r0['cluster_xor']}).",
         "",
     ]
-    # Write to BENCH_SCALING.md: BENCH.md holds the hand-written narrative
-    # and must never be clobbered by a generated table (a round-3 run
-    # destroyed a full session's notes that way).
-    with open(os.path.join(REPO, "BENCH_SCALING.md"), "w") as f:
+    path = os.path.join(bc.WORKDIR, "BENCH_SCALING.md")
+    with open(path, "w") as f:
         f.write("\n".join(lines))
+    return path
 
 
 def main() -> None:
@@ -211,28 +114,25 @@ def main() -> None:
             "minutes and then report efficiency 0.0; pick levels like "
             "'1,4' or '8,32'"
         )
-    os.makedirs(WORKDIR, exist_ok=True)
-    generate_input()
-    results: dict[int, dict] = {}
-    env = dict(os.environ)
-    # shuffle/spill on tmpfs: a single box's disk does not model a
-    # cluster's aggregate disk bandwidth; RAM-backed local dirs do
-    env.setdefault("SPARK_LOCAL_DIRS", os.path.join(WORKDIR, "spark_local"))
+    os.makedirs(bc.WORKDIR, exist_ok=True)
+    spark = bc.session("scale_datagen")
+    bc.corpus(spark)
+    spark.stop()
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "1"))
+    results: dict[int, dict] = {}
     for cores in CORE_LEVELS:
         runs = []
         for _ in range(repeats):
             proc = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--run", str(cores)],
-                capture_output=True, text=True, cwd=REPO, env=env,
+                capture_output=True, text=True, cwd=bc.REPO,
             )
             if proc.returncode != 0:
                 sys.stderr.write(proc.stderr[-4000:])
                 raise RuntimeError(f"run at {cores} cores failed")
             runs.append(json.loads(proc.stdout.strip().splitlines()[-1]))
-        # best-of-N: this is a shared cloud host with bursty noisy-neighbor
-        # memory-bandwidth interference; the fastest run reflects the
-        # pipeline, slower ones reflect the neighbor. All walls recorded.
+        # best-of-N: on a shared host the fastest run reflects the
+        # pipeline, slower ones a noisy neighbour. All walls recorded.
         best = min(runs, key=lambda r: r["wall_sec"])
         best["all_wall_sec"] = [r["wall_sec"] for r in runs]
         results[cores] = best
@@ -241,21 +141,27 @@ def main() -> None:
         f"N={a} -> 4N={b}": results[a]["wall_sec"] / (4 * results[b]["wall_sec"])
         for a, b in _pairs(CORE_LEVELS)
     }
-    write_bench_md(results, effs)
-    best = max(effs.values()) if effs else 0.0
+    print(f"scaling table: {write_table(results, effs)}", file=sys.stderr)
+    r0 = results[CORE_LEVELS[0]]
     print(
         json.dumps(
             {
                 "metric": "scaling_efficiency_N_to_4N",
-                "value": round(best, 3),
+                "value": round(max(effs.values()), 3),
                 "unit": "ratio",
                 "queries": {
                     f"local[{c}]_images_per_sec": results[c]["images_per_sec"]
                     for c in CORE_LEVELS
                 },
                 "efficiencies": {k: round(v, 3) for k, v in effs.items()},
-                "n_images": N_IMAGES,
-                "img_hw": IMG_HW,
+                "n_images": bc.N_IMAGES,
+                "img_hw": bc.IMG_HW,
+                "rows": {c: results[c]["rows"] for c in CORE_LEVELS},
+                "clusters": {c: results[c]["clusters"] for c in CORE_LEVELS},
+                "cluster_xor_identical": len(
+                    {results[c]["cluster_xor"] for c in CORE_LEVELS}
+                ) == 1,
+                "cluster_xor": r0["cluster_xor"],
             }
         )
     )

@@ -50,6 +50,9 @@ def test_cli_end_to_end_and_resume(spark, tmp_path):
     # resume: same stage dir -> all stages read from manifests, identical
     # output (collected above BEFORE the rerun overwrites the files)
     m2 = run(_argv(tmp), spark=spark)
+    assert m1["reused_stages"] == []
+    assert m2["reused_stages"] == sorted(m1["stage_seconds"])
+    assert set(m2["stage_seconds"].values()) == {0.0}
     assert m2["rows"] == m1["rows"]
     assert m2["clusters"] == m1["clusters"]
     out2 = spark.read.parquet(os.path.join(tmp, "clusters"))
