@@ -31,9 +31,16 @@ Input table schema = the BASELINE.json input_hint: (image_id string,
 bytes binary, w int, h int, fmt string, caption string, phash long) —
 extra columns are ignored.
 
+The job is one fixed sequence of stages (plans.image_dedup.STAGES):
+s1 signatures, s2 exact, s3 LSH candidates, s3b decoded-pixel PSNR
+verification (always on), s4 clusters, and s5 captions when
+--captions-out is given.
+
 Prints ONE JSON line of run metrics on success (rows, clusters,
 duplicates, wall seconds, per-stage seconds of this run, and the stages
-it reused from --stage-dir).
+it reused from --stage-dir). The last two come from the StageStore's
+log of this run, not from the manifest, so stages an earlier run left
+in --stage-dir are not reported.
 """
 
 from __future__ import annotations
@@ -76,7 +83,6 @@ def build_parser() -> argparse.ArgumentParser:
     # everything else keeps the measured defaults in config.DedupConfig
     p.add_argument("--min-signature-agreement", type=float, default=None)
     p.add_argument("--psnr-edge-min-db", type=float, default=None)
-    p.add_argument("--no-psnr-verify", action="store_true")
     p.add_argument(
         "--hot-band-threshold",
         type=int,
@@ -109,8 +115,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
         }.items()
         if v is not None
     }
-    if args.no_psnr_verify:
-        overrides["psnr_verify_enabled"] = False
     cfg = DedupConfig(**overrides)
 
     from urllib.parse import urlparse
@@ -145,14 +149,6 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     try:
         images = spark.read.parquet(args.input)
         store = StageStore(spark, args.stage_dir)
-        # only this pipeline's stages: a reused --stage-dir can hold
-        # entries an earlier, differently-configured run committed
-        ran = {"s1_signatures", "s2_exact", "s3_candidates", "s4_clusters"}
-        if cfg.psnr_verify_enabled:
-            ran.add("s3b_psnr")
-        if args.captions_out:
-            ran.add("s5_captions")
-        reused = sorted(s for s in ran if store.is_committed(s))
         clusters = run_pipeline(images, store, cfg)
         clusters.write.mode("overwrite").parquet(args.output)
 
@@ -170,25 +166,20 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
                 args.captions_out
             )
 
-        # per-stage seconds of THIS run: the manifest's write seconds for
-        # a stage it computed, 0 for one it reused (the manifest entry
-        # keeps the original write time and committed_at, which resume
-        # checks rely on)
-        stage_secs = {
-            stage: (
-                0.0 if stage in reused
-                else round(entry.get("write_seconds", 0.0), 1)
-            )
-            for stage, entry in sorted(store._manifest()["stages"].items())
-            if stage in ran
-        }
+        # the stages THIS run touched, from the store's log: seconds for
+        # a stage it computed, 0 for one it reused. A reused --stage-dir
+        # can hold entries an earlier, differently-configured run
+        # committed; they are not in the log.
+        log = store.stage_log
         metrics = {
             "rows": row["rows"],
             "clusters": row["clusters"],
             "duplicates": int(row["dups"] or 0),
             "wall_seconds": round(time.time() - t0, 1),
-            "stage_seconds": stage_secs,
-            "reused_stages": reused,
+            "stage_seconds": {
+                s: round(e["write_seconds"], 1) for s, e in log.items()
+            },
+            "reused_stages": sorted(s for s, e in log.items() if e["reused"]),
             "output": args.output,
         }
     finally:

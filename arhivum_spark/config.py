@@ -33,16 +33,16 @@ class DedupConfig:
     # shingles is dup pairs J >= ~0.7 (re-encoded worst case) vs random
     # pairs J <= ~0.06; 0.5 sits >5 sigma from both (k=128 estimator)
     min_signature_agreement: float = 0.5
-    # decoded-pixel PSNR re-check of surviving candidate edges; runs as its
-    # own pipeline stage re-joining bytes by id for the (few)
-    # post-signature-verification edges. The EDGE bound is looser than the
-    # roundtrip invariant: a legitimate near-dup with ~5% of pixel blocks
-    # replaced sits near 10*log10(255^2 / (0.05 * 255^2/6)) ~= 20.8 dB,
+    # decoded-pixel PSNR re-check of surviving candidate edges: stage s3b,
+    # part of every run, fetches bytes by id for the (few)
+    # post-signature-verification edges only. The EDGE bound is looser
+    # than the roundtrip invariant: a legitimate near-dup with ~5% of
+    # pixel blocks replaced sits near
+    # 10*log10(255^2 / (0.05 * 255^2/6)) ~= 20.8 dB,
     # while an UNRELATED pair sits at ~7.8 dB (MSE ~= 255^2/6) — 14 dB
     # separates the classes with margin on both sides. Lossy re-encodes of
     # identical content clear a stricter 40 dB, the per-row codec
     # invariant (tests/test_pipeline_recall.py).
-    psnr_verify_enabled: bool = True
     psnr_edge_min_db: float = 14.0
     # bound on the PSNR stage's in-flight byte shuffle: the stage moves
     # ~2 encoded payloads per edge, so an unbounded edge set makes the

@@ -195,11 +195,6 @@ def images_df(
     )
 
 
-def images_pandas(p: GenParams) -> pd.DataFrame:
-    """Driver-side generation for small pytest fixtures."""
-    return pd.DataFrame([build_row(i, p) for i in range(p.n)])
-
-
 # ---------------------------------------------------------------------------
 # Clustered synthetic embeddings (round 4 — blocking-effectiveness evidence)
 #
@@ -208,8 +203,7 @@ def images_pandas(p: GenParams) -> pd.DataFrame:
 # recall-1.0 LSH config provably degenerates to all-pairs
 # (docs/ENGINEERING_NOTES.md round-3), so pruning claims need data shaped
 # like production embeddings. Every row is a pure function of
-# (i, params, seed) — distributed generation is a shuffle-free
-# spark.range -> mapInPandas, same pattern as images_df.
+# (i, params, seed), as in images_df.
 
 
 @dataclass(frozen=True)
@@ -249,27 +243,6 @@ def clustered_embeddings_pandas(p: EmbParams) -> pd.DataFrame:
                 for i in range(p.n)
             ],
         }
-    )
-
-
-def clustered_embeddings_df(spark, p: EmbParams, partitions: int | None = None):
-    """Distributed generation: spark.range -> mapInPandas, no shuffle."""
-    nparts = partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["id"].astype("int64"),
-                    "embedding": [
-                        _emb_vector(int(i), p).astype(np.float32).tolist()
-                        for i in pdf["id"]
-                    ],
-                }
-            )
-
-    return spark.range(0, p.n, 1, nparts).mapInPandas(
-        gen, schema="vec_id long, embedding array<float>"
     )
 
 

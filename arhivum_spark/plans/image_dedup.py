@@ -11,6 +11,7 @@ The Spark shape of the reference's scan lifecycle (SURVEY.md §3.1):
     stage 3  candidates   LSH band explode -> hot-key salting -> star edges
                           + phash-gated bucket-local pairs -> one
                           signature-agreement verification pass
+    stage 3b psnr         decoded-pixel PSNR re-check of the stage-3 edges
     stage 4  clusters     connected components over exact+near edges,
                           representative election (best-copy window), final
                           cluster table
@@ -39,6 +40,17 @@ from arhivum_spark.operators.connected_components import connected_components
 from arhivum_spark.operators.lsh import candidate_edges_compact, verify_edges
 from arhivum_spark.session import ARROW_BATCH_FOR_BINARY
 from arhivum_spark.sources.checkpoints import StageStore
+
+# the job's stages in commit order: run_pipeline commits s1..s4,
+# caption_pairs commits s5
+STAGES = (
+    "s1_signatures",
+    "s2_exact",
+    "s3_candidates",
+    "s3b_psnr",
+    "s4_clusters",
+    "s5_captions",
+)
 
 
 def psnr_verify_edges(
@@ -286,15 +298,12 @@ def _run_pipeline_stages(
         rep_sigs = sigs.join(reps, "image_id", "left_semi")
         cand = candidate_edges_compact(rep_sigs, cfg)
         return verify_edges(cand, rep_sigs, cfg)
-    near_edges = store.read_or_compute("s3_candidates", candidate_stage)
-
-    if cfg.psnr_verify_enabled:
-        sig_edges = near_edges
-        near_edges = store.read_or_compute(
-            "s3b_psnr",
-            lambda: psnr_verify_edges(sig_edges, images, cfg),
-            materialize_first=True,  # pandas-UDF stage
-        )
+    sig_edges = store.read_or_compute("s3_candidates", candidate_stage)
+    near_edges = store.read_or_compute(
+        "s3b_psnr",
+        lambda: psnr_verify_edges(sig_edges, images, cfg),
+        materialize_first=True,  # pandas-UDF stage
+    )
 
     def cluster_stage() -> DataFrame:
         # CC runs over near-dup edges between exact-representatives ONLY:

@@ -26,6 +26,11 @@ other's manifest entries. One driver per stage root is always safe.
 
 Per-stage, per-partition metrics (north rule) are appended to a `_metrics`
 table: stage, spark partition id, row count, wall-clock.
+
+Each store also keeps `stage_log`, what THIS instance did, in commit
+order: a stage it committed maps to the seconds written to its manifest
+entry, a stage it reused to 0.0 with `reused` set. A run reports its own
+cost from it; the manifest keeps the original commit's seconds.
 """
 
 from __future__ import annotations
@@ -46,6 +51,7 @@ class StageStore:
         self.spark = spark
         self.root = root
         self._compute_started: dict[str, float] = {}
+        self.stage_log: dict[str, dict] = {}
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -115,7 +121,7 @@ class StageStore:
             df = df.persist()
             df.count()
         df.write.mode("overwrite").parquet(path)
-        elapsed = time.time() - t0
+        elapsed = round(time.time() - t0, 3)
         if materialize_first:
             df.unpersist()
         committed = self.spark.read.parquet(path)
@@ -127,9 +133,10 @@ class StageStore:
                 "committed_at": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                 ),
-                "write_seconds": round(elapsed, 3),
+                "write_seconds": elapsed,
             }
             self._commit_manifest(m)
+        self.stage_log[stage] = {"write_seconds": elapsed, "reused": False}
         return committed
 
     def _append_metrics(self, stage: str, path: str, elapsed: float) -> None:
@@ -145,9 +152,9 @@ class StageStore:
             if not fn.endswith(".parquet"):
                 continue
             md = pq.read_metadata(os.path.join(path, fn))
-            rows.append((stage, fn, md.num_rows, round(elapsed, 3)))
+            rows.append((stage, fn, md.num_rows, elapsed))
         if not rows:
-            rows.append((stage, "_empty", 0, round(elapsed, 3)))
+            rows.append((stage, "_empty", 0, elapsed))
         import pyarrow as pa
 
         table = pa.table(
@@ -172,6 +179,7 @@ class StageStore:
     ) -> DataFrame:
         """Resume point: reuse the committed snapshot, else compute+commit."""
         if self.is_committed(stage):
+            self.stage_log[stage] = {"write_seconds": 0.0, "reused": True}
             return self.read(stage)
         t0 = time.time()
         df = compute()

@@ -30,6 +30,7 @@ from arhivum_spark import datagen  # noqa: E402
 from arhivum_spark.config import DedupConfig  # noqa: E402
 from arhivum_spark.functions.signatures import attach_signatures  # noqa: E402
 from arhivum_spark.plans.image_dedup import (  # noqa: E402
+    STAGES,  # the stages one timed job commits, in commit order
     caption_pairs,
     pinned_reader_batch,
     run_pipeline,
@@ -40,17 +41,6 @@ from arhivum_spark.sources.checkpoints import StageStore  # noqa: E402
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_SCALE_IMAGES", "600000"))
 IMG_HW = int(os.environ.get("SPARK_GRAFT_SCALE_HW", "96"))
 WORKDIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", os.path.join(REPO, ".bench"))
-
-# the stages one timed job commits, in commit order (run_pipeline with the
-# default DedupConfig, then caption_pairs)
-STAGES = (
-    "s1_signatures",
-    "s2_exact",
-    "s3_candidates",
-    "s3b_psnr",
-    "s4_clusters",
-    "s5_captions",
-)
 
 
 def params() -> datagen.GenParams:
@@ -110,11 +100,11 @@ def timed_job(spark, images, stage_root: str) -> dict:
     """The job `cli.run --captions-out` runs: `run_pipeline`, then
     `caption_pairs` over the committed s1 snapshot, on `stage_root`
     (resuming any stage committed there). The wall covers both and their
-    order-insensitive checksums. Per-stage seconds come from the manifest,
-    0 for a stage that was already committed (listed in `reused_stages`)."""
+    order-insensitive checksums. Per-stage seconds come from the store's
+    log of this job, 0 for a stage that was already committed (listed in
+    `reused_stages`, in commit order)."""
     store = StageStore(spark, stage_root)
     cfg = DedupConfig()
-    reused = [s for s in STAGES if store.is_committed(s)]
     t0 = time.time()
     c = (
         run_pipeline(images, store, cfg)
@@ -134,7 +124,7 @@ def timed_job(spark, images, stage_root: str) -> dict:
         .first()
     )
     wall = time.time() - t0
-    manifest = read_manifest(stage_root)["stages"]
+    log = store.stage_log
     return {
         "wall_sec": round(wall, 3),
         "rows": c["n"],
@@ -142,11 +132,8 @@ def timed_job(spark, images, stage_root: str) -> dict:
         "cluster_xor": c["x"],
         "caption_rows": cap["n"],
         "caption_xor": cap["x"],
-        "stage_sec": {
-            s: 0.0 if s in reused else round(manifest[s]["write_seconds"], 1)
-            for s in STAGES
-        },
-        "reused_stages": reused,
+        "stage_sec": {s: round(e["write_seconds"], 1) for s, e in log.items()},
+        "reused_stages": [s for s, e in log.items() if e["reused"]],
     }
 
 

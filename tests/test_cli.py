@@ -70,20 +70,18 @@ def test_cli_config_overrides(spark, tmp_path):
     datagen.images_df(spark, params, partitions=4).write.parquet(
         os.path.join(tmp, "images")
     )
-    # a reused --stage-dir holding stages an earlier run committed: a
-    # PSNR stage this run skips, and a stage no pipeline has
+    # a reused --stage-dir holding a stage an earlier run committed that
+    # this job does not have
     stale = StageStore(spark, os.path.join(tmp, "stages"))
-    stale.write("s3b_psnr", spark.range(1))
     stale.write("s9_retired", spark.range(1))
-    m = run(
-        _argv(tmp, extra=["--no-psnr-verify", "--max-pairs-per-band", "512"]),
-        spark=spark,
-    )
+    m = run(_argv(tmp, extra=["--max-pairs-per-band", "512"]), spark=spark)
     assert m["rows"] == 120
+    assert m["reused_stages"] == []
     assert set(m["stage_seconds"]) == {
-        "s1_signatures", "s2_exact", "s3_candidates", "s4_clusters",
-        "s5_captions",
+        "s1_signatures", "s2_exact", "s3_candidates", "s3b_psnr",
+        "s4_clusters", "s5_captions",
     }
+    assert "s9_retired" not in m["stage_seconds"]
 
 
 def test_cli_via_real_spark_submit(spark, tmp_path):

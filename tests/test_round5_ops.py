@@ -211,69 +211,6 @@ def test_st_first_wins_scratch_dir_reinvocable(spark, tmp_path):
     assert leftovers == []
 
 
-def test_stage_store_prune_keeps_resume(spark, tmp_path):
-    """VERDICT_r04 task 7: prune() must delete abandoned stage roots
-    (no _SUCCESS / dangling manifest entries) and superseded metrics
-    generations — and a pruned store must resume exactly like an
-    unpruned one (committed snapshots untouched)."""
-    import json
-    import os
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    root = str(tmp_path / "store")
-    store = StageStore(spark, root)
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    store.write("s1", df)
-    store.write("s1", df)  # rerun overwrite -> superseded metrics file
-    store.write("s2", df.filter("id < 50"))
-
-    # abandoned root WITH a manifest entry but no _SUCCESS (driver killed
-    # between job start and commit)
-    os.makedirs(os.path.join(root, "s3", "data"))
-    m = store._manifest()
-    m["stages"]["s3"] = {"committed_at": "never", "write_seconds": 0}
-    store._commit_manifest(m)
-    # orphan root with NO manifest entry
-    os.makedirs(os.path.join(root, "s4", "data"))
-
-    # default grace window: freshly-touched uncommitted roots are a
-    # possibly-live write and must NOT be reaped
-    untouched = store.prune(keep_last_metrics=2)  # keep both metric gens
-    assert untouched["stages"] == [] and untouched["metrics"] == []
-    assert os.path.isdir(os.path.join(root, "s3"))
-    assert os.path.isdir(os.path.join(root, "s4"))
-
-    removed = store.prune(keep_last_metrics=1, min_age_seconds=0)
-    assert set(removed["stages"]) == {"s3", "s4"}
-    assert len(removed["metrics"]) == 1  # the older s1 generation
-    assert not os.path.exists(os.path.join(root, "s3"))
-    assert not os.path.exists(os.path.join(root, "s4"))
-    with open(os.path.join(root, "manifest.json")) as f:
-        assert set(json.load(f)["stages"]) == {"s1", "s2"}
-    mdir = os.path.join(root, "_metrics")
-    per_stage = {}
-    for fn in os.listdir(mdir):
-        per_stage.setdefault(fn.rsplit("-", 1)[0], []).append(fn)
-    assert all(len(v) == 1 for v in per_stage.values())
-
-    # a pruned store still resumes: committed stages read back with no
-    # recompute; the abandoned stage recomputes cleanly
-    store2 = StageStore(spark, root)
-    calls = []
-
-    def poisoned():
-        calls.append(1)
-        return df
-
-    assert store2.read_or_compute("s1", poisoned).count() == 100
-    assert store2.read_or_compute("s2", poisoned).count() == 50
-    assert calls == []
-    assert store2.read_or_compute("s3", lambda: df.limit(7)).count() == 7
-    # prune with everything healthy is a no-op
-    assert store2.prune(keep_last_metrics=1)["stages"] == []
-
-
 def test_images_df_range_slices_match_full(spark):
     """Location-split corpus generation (disk+tmpfs halves for inputs
     larger than any single tier): generating [lo, hi) slices of the SAME
@@ -493,126 +430,6 @@ def test_compact_candidates_emit_each_pair_once(spark):
     ]
 
 
-def test_stage_seconds_include_compute(spark, tmp_path):
-    """The manifest's and _metrics' write_seconds (the CLI's
-    stage_seconds) cover the eager work inside compute(), not only the
-    parquet write after it."""
-    import json
-    import time
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    store = StageStore(spark, str(tmp_path))
-    # a first write warms the parquet writer, so the slow stage's own
-    # write takes well under the 0.5 s sleep
-    store.read_or_compute("warm", lambda: spark.range(3))
-
-    def compute():
-        time.sleep(0.5)
-        return spark.range(3)
-
-    store.read_or_compute("slow", compute)
-    with open(tmp_path / "manifest.json") as f:
-        assert json.load(f)["stages"]["slow"]["write_seconds"] >= 0.5
-    metrics = store.metrics().filter(F.col("stage") == "slow")
-    assert metrics.agg(F.min("write_seconds")).first()[0] >= 0.5
-
-
-def test_prune_does_not_clobber_concurrent_commit(spark, tmp_path):
-    """prune() re-reads the manifest immediately before its commit and
-    applies only the recorded deletions: a stage committed by a
-    concurrent write() AFTER prune's initial manifest snapshot (during
-    the slow mtime walks) must survive. Committing the stale snapshot
-    would un-commit the stage — the next resume recomputes it and a
-    later prune reaps the good data as abandoned. The race is injected
-    through is_committed(), which prune calls once per stage root after
-    taking its snapshot."""
-    import json
-    import os
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    root = str(tmp_path / "store")
-    store = StageStore(spark, root)
-    df = spark.range(10)
-    store.write("s_live", df)
-    # abandoned root (no manifest entry, no _SUCCESS) so prune has a
-    # deletion to record — the manifest-commit path must still run
-    os.makedirs(os.path.join(root, "s_dead", "data"))
-
-    # injection point: prune's rmtree of the abandoned root — it fires
-    # AFTER the manifest snapshot and walks, BEFORE the locked manifest
-    # commit (the exact window the re-read protects). (The old hook,
-    # per-entry is_committed, is no longer called by prune.)
-    from arhivum_spark.sources import checkpoints as cp
-
-    real_rmtree = cp.shutil.rmtree
-    state = {"fired": False}
-
-    def racing_rmtree(path, **kw):
-        if not state["fired"]:
-            state["fired"] = True
-            # the concurrent writer: full commit protocol for a NEW stage
-            d = os.path.join(root, "s_concurrent", "data")
-            os.makedirs(d)
-            open(os.path.join(d, "_SUCCESS"), "w").close()
-            m = store._manifest()
-            m["stages"]["s_concurrent"] = {
-                "committed_at": "now", "write_seconds": 0.0,
-            }
-            store._commit_manifest(m)
-        return real_rmtree(path, **kw)
-
-    cp.shutil.rmtree = racing_rmtree
-    try:
-        removed = store.prune(min_age_seconds=0)
-    finally:
-        cp.shutil.rmtree = real_rmtree
-
-    assert "s_dead" in removed["stages"]
-    with open(os.path.join(root, "manifest.json")) as f:
-        stages = set(json.load(f)["stages"])
-    assert stages == {"s_live", "s_concurrent"}
-    assert store.is_committed("s_concurrent")
-
-
-def test_prune_survives_root_vanishing_mid_walk(spark, tmp_path):
-    """A stage root deleted between prune's listdir and its mtime walk
-    (another prune, an external cleanup) must be skipped, not crash the
-    pass after some roots were already reaped."""
-    import os
-    import shutil
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    root = str(tmp_path / "store")
-    store = StageStore(spark, root)
-    store.write("s_live", spark.range(5))
-    os.makedirs(os.path.join(root, "s_ghost", "data"))
-
-    # injection point: the first os.stat of the ghost root inside the
-    # quiet-window walk — the dir existed at listdir time, vanishes
-    # before its mtime check. (The old hook, per-entry is_committed, is
-    # no longer called by prune.)
-    real_stat = os.stat
-    state = {"fired": False}
-
-    def vanishing_stat(path, *a, **kw):
-        if not state["fired"] and str(path).endswith("s_ghost"):
-            state["fired"] = True
-            shutil.rmtree(os.path.join(root, "s_ghost"))
-            raise FileNotFoundError(path)
-        return real_stat(path, *a, **kw)
-
-    os.stat = vanishing_stat
-    try:
-        removed = store.prune(min_age_seconds=0)  # must not raise
-    finally:
-        os.stat = real_stat
-    assert "s_ghost" not in removed["stages"]
-    assert store.is_committed("s_live")
-
-
 def test_band_keys_are_64bit_and_slice_determined(spark):
     """Equal 4-value slices in the same band must collide; the key column
     must be a long (64-bit) — 32-bit keys birthday-collide at n^2 rate
@@ -805,77 +622,7 @@ def test_simhash_exact_match_blocking_and_config_bounds(spark):
 
 
 # ---------------------------------------------------------------------------
-# checkpoints / streaming review fixes
-
-
-def test_manifest_lock_is_exclusive(spark, tmp_path):
-    import fcntl
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    store = StageStore(spark, str(tmp_path / "store"))
-    with store._manifest_lock():
-        lockp = store._manifest_path + ".lock"
-        assert os.path.exists(lockp)
-        with open(lockp, "w") as other:
-            import pytest as _pytest
-
-            with _pytest.raises(BlockingIOError):
-                fcntl.flock(other, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    # released on exit
-    with open(store._manifest_path + ".lock", "w") as other:
-        fcntl.flock(other, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        fcntl.flock(other, fcntl.LOCK_UN)
-
-
-def test_prune_quiet_check_sees_file_mtimes(spark, tmp_path):
-    """A live write streaming into already-created part files changes no
-    directory entries; the quiet-window check must stat files too, or an
-    in-progress stage gets reaped as abandoned."""
-    import time as _time
-
-    from arhivum_spark.sources.checkpoints import StageStore
-
-    root = tmp_path / "store"
-    store = StageStore(spark, str(root))
-    stage = root / "s9_live" / "data" / "_temporary"
-    stage.mkdir(parents=True)
-    part = stage / "part-00000"
-    part.write_bytes(b"streaming...")
-    # age every DIRECTORY far past the window; keep the FILE fresh
-    old = _time.time() - 10_000
-    for d in (
-        root, root / "s9_live", root / "s9_live" / "data", stage
-    ):
-        os.utime(d, (old, old))
-    removed = store.prune(min_age_seconds=3600)
-    assert removed["stages"] == []  # fresh part file means NOT quiet
-    assert part.exists()
-
-
-def test_prune_metrics_tolerates_concurrent_removal(
-    spark, tmp_path, monkeypatch
-):
-    from arhivum_spark.sources import checkpoints as cp
-
-    store = cp.StageStore(spark, str(tmp_path / "store"))
-    mdir = tmp_path / "store" / "_metrics"
-    mdir.mkdir(parents=True)
-    for ms in (1, 2, 3):
-        (mdir / f"s1-{ms}.parquet").write_bytes(b"x")
-
-    real_remove = os.remove
-
-    def racing_remove(path):
-        real_remove(path)  # the "other" prune got there first ...
-        raise FileNotFoundError(path)  # ... so ours sees ENOENT
-
-    monkeypatch.setattr(cp.os, "remove", racing_remove)
-    removed = store.prune(keep_last_metrics=1, min_age_seconds=0)
-    # no crash; the files ARE gone (removed by the racing peer), and we
-    # honestly claim none as our own
-    assert removed["metrics"] == []
-    assert sorted(f.name for f in mdir.iterdir()) == ["s1-3.parquet"]
+# streaming and other review fixes
 
 
 def test_windowed_rates_hash_col_param(spark):
