@@ -89,7 +89,7 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help=(
             "LSH band-key bucket size at which s3 salts the bucket "
-            "(detected on a 3/N sample of band keys; default 300)"
+            "(exact member count; default 300)"
         ),
     )
     p.add_argument("--max-pairs-per-band", type=int, default=None)

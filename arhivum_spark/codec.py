@@ -11,8 +11,9 @@ PSNR verification, lossy-vs-lossless handling — is real and tested:
   a lossy codec with analytically bounded error (MSE ~= q^2/12, so q=8 gives
   PSNR ~40.9 dB, q=4 ~46.9 dB), standing in for JPEG's DCT quantization.
 
-On a production cluster, swap `decode`/`encode_*` for PIL/turbojpeg calls
-inside the same pandas UDFs; nothing else changes.
+Every stage that decodes image bytes (s1 signatures, s3b PSNR, the media
+operators) calls `decode_any`. On a production cluster, plug PIL/turbojpeg
+calls in there for the formats it does not know; nothing else changes.
 
 Reference parity note: the reference never decodes images — it streams bytes
 into SHA-256 (archivum-scanner HashService.java:58-109). The graft adds
@@ -66,6 +67,24 @@ def decode(data: bytes) -> np.ndarray:
             arr.astype(np.uint16) * qstep + qstep // 2, 255
         ).astype(np.uint8)
     raise ValueError(f"unknown codec magic: {magic!r}")
+
+
+def decode_any(data: bytes, fmt: str = "") -> np.ndarray:
+    """Image bytes of any format -> (h, w, 3) uint8 pixels.
+
+    The in-repo containers decode with ``decode``. Any other format
+    (jpeg/png/webp/mp4 keyframes) is the swap-in point for PIL /
+    turbojpeg / pyav on a production cluster and raises
+    NotImplementedError until one is plugged in: a missing codec is an
+    infrastructure failure, so callers that score or hash pixels let it
+    fail the stage instead of reading it as a verdict on the image.
+    """
+    if data[:4] in (MAGIC_LOSSLESS, MAGIC_LOSSY):
+        return decode(data)
+    raise NotImplementedError(
+        f"external codec for {fmt!r} not available in this environment; "
+        "plug PIL/turbojpeg/pyav in here"
+    )
 
 
 def header(data: bytes) -> tuple[str, int, int]:
@@ -171,7 +190,7 @@ def parse_exif_trailer(data: bytes) -> dict | None:
 # multimodal triad). Real decoders (soundfile/pyav) are absent from this
 # container; this codec exercises the full Spark plumbing — schema, Arrow
 # batching, one-to-many frame explode — with a real round-trip, and
-# multimodal.decode_external stays the swap-in point for production codecs.
+# decode_any stays the swap-in point for production image codecs.
 
 MAGIC_AUDIO = b"ARVA"
 _AHDR = struct.Struct("<4sIH")  # magic, sample_rate, channels

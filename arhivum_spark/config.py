@@ -59,13 +59,9 @@ class DedupConfig:
     # instead of switching to a join that shuffles every image.
     psnr_max_inflight_edges: int = 600_000
 
-    # skew handling: (band, key) buckets of about this many members get
-    # salted. Detection counts a per-row hash draw at rate 3/threshold
-    # (1% at the default) instead of shuffling every rows x bands row, so
-    # a key this large expects 3 sampled rows; keys near the threshold are
-    # salted or not by the draw, which is correctness-neutral (star edges
-    # and the hub chain both link them) and only moves partition sizes
-    # (see lsh.salted_candidate_edges).
+    # skew handling: a (band, key) bucket of at least this many members
+    # is salted. s3 counts every key exactly in the one bucket aggregate
+    # it needs for star hubs anyway (see lsh.salted_candidate_edges).
     hot_band_threshold: int = 300
     max_pairs_per_band: int = 4096         # hard cap per (band,key) group
     # bucket-local pairs (lsh.salted_candidate_edges): buckets of 3 up to

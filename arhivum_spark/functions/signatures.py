@@ -46,10 +46,10 @@ def signature_extractor(cfg: DedupConfig):
             shas: list[str] = []
             dws = np.empty(n, dtype=np.int32)
             dhs = np.empty(n, dtype=np.int32)
-            for i, raw in enumerate(pdf["bytes"]):
+            for i, (raw, fmt) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
                 data = bytes(raw)
                 shas.append(hashlib.sha256(data).hexdigest())
-                pixels = codec.decode(data)
+                pixels = codec.decode_any(data, fmt)
                 dhs[i], dws[i] = pixels.shape[0], pixels.shape[1]
                 # gray computed once; pHash is NOT recomputed here — the
                 # input schema carries it (BASELINE.json input_hint), and

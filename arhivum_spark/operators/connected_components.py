@@ -20,14 +20,15 @@ One algorithm: min-label propagation with a pointer jump in every round.
 Each round is ONE `localCheckpoint()` of the labels frame (north rule:
 checkpointed lineage), and the count of labels it changed is an
 `Observation` filled in by that same checkpoint — no separate count job.
-The hub-star graphs the dedup pipelines feed in (operators/lsh.py)
-finish in 2-3 rounds, the last of them a round that changes nothing. One
-jump per round does NOT bound the rounds by O(log diameter) for every id
-order: when ids are scrambled along a chain, the round count can grow
-with the chain length (up to 29 rounds on a 29-vertex chain; see
-ROADMAP's open item on the `connected_components` planning hang). Labels
-still changing after `max_iters` rounds raise `ConvergenceError` —
-partial labels are never returned.
+The checkpointed labels are re-read under a plan without carried
+statistics, so planning a round costs the same whatever its number. The
+hub-star graphs the dedup pipelines feed in (operators/lsh.py) finish in
+2-3 rounds, the last of them a round that changes nothing. One jump per
+round does NOT bound the rounds by O(log diameter) for every id order:
+when ids are scrambled along a chain, the round count can grow with the
+chain length (28 rounds on a 30-vertex chain; see ROADMAP's open item on
+bounding the rounds). Labels still changing after `max_iters` rounds
+raise `ConvergenceError` — partial labels are never returned.
 """
 
 from __future__ import annotations
@@ -98,7 +99,7 @@ def connected_components(
         if rnd:
             step = _jump(_hop(sym, labels), labels)
         obs = Observation()
-        labels = (
+        labels = _fresh_plan(
             step.observe(
                 obs,
                 F.count_if(F.col("component") < F.col("_old")).alias("changed"),
@@ -121,6 +122,24 @@ def connected_components(
     return vertices.select(id_col).join(comp, id_col, "left").select(
         id_col, F.coalesce("component", id_col).alias("component")
     )
+
+
+def _fresh_plan(checkpointed: DataFrame) -> DataFrame:
+    """The rows of a checkpointed frame under a plan that carries no size
+    estimate. `localCheckpoint()` keeps the checkpointed plan's
+    statistics, and a join's size-only estimate is the product of its
+    children's, so a round's labels estimate would square every round
+    (4,871 digits by round 7); past about 20 rounds the planner's BigInt
+    arithmetic alone takes minutes to hours. The fresh frame reads the
+    same checkpointed RDD (no job) at the default size estimate, so every
+    round plans alike whatever its number."""
+    spark = checkpointed.sparkSession
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        checkpointed._jdf.queryExecution().toRdd(),
+        checkpointed._jdf.schema(),
+        False,
+    )
+    return DataFrame(jdf, spark)
 
 
 def _hop(sym: DataFrame, labels: DataFrame) -> DataFrame:

@@ -22,13 +22,12 @@ Scale design (the parts Catalyst can't do for us — SURVEY.md §4):
   only. One verification pass scores the whole candidate set;
   connected components restores the full cluster. No collect_list, no
   un-gated quadratic pair blowup on hot bands.
-- **Two-pass hot-key salting**: band-key frequencies are counted on a
-  per-row hash draw at rate 3 / `hot_band_threshold`, so a key with
-  `hot_band_threshold` members expects 3 sampled rows; keys with 3 sampled
-  rows get a salt = hash(image_id, band, key) % SALT_BUCKETS appended,
-  splitting a hot bucket's window into bounded partitions. Buckets of a
-  salted key are re-linked by CC through the exact-dup and multi-band
-  overlap edges (and a per-key hub chain emitted from the count pass).
+- **Exact hot-key salting**: one groupBy(band, key) counts every key's
+  members; a key with at least `hot_band_threshold` members gets a salt =
+  hash(image_id, band, key) % SALT_BUCKETS appended, splitting a hot
+  bucket's window into bounded partitions. Buckets of a salted key are
+  re-linked by CC through the exact-dup and multi-band overlap edges (and
+  a hub chain from each salt bucket's hub to the key's min id).
 - AQE skew-join stays on for the verification join (session.py).
 """
 
@@ -41,9 +40,6 @@ from arhivum_spark.config import DedupConfig
 
 # salt buckets per hot (band, key): a hot bucket's rows split this many ways
 SALT_BUCKETS = 16
-# hot-key detection keeps a row when a hash of it, mod this range, falls
-# below rate * range
-HOT_DRAW_RANGE = 1 << 20
 
 
 def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> DataFrame:
@@ -119,15 +115,15 @@ def salted_candidate_edges(
 ) -> DataFrame:
     """(band,key) buckets -> candidate edges (src < dst), salt-split.
 
-    Two passes:
-      1. count band-key frequencies on a per-row hash draw at rate
-         min(1, 3 / hot_band_threshold); a key is 'hot' when its sampled
-         count reaches min(3, hot_band_threshold). A key with exactly
-         hot_band_threshold members expects 3 sampled rows; a threshold
-         of 3 or less samples at rate 1, so every row is counted.
-      2. hot keys get per-row salt; each (band, key, salt) bucket emits
-         hub->member star edges; for hot keys an extra bucket-hub chain
-         edge set links the salt buckets of the same (band, key) together.
+    One bucket aggregate: bands.groupBy(band, key) gives each key's
+    member count key_n and min id key_hub, kept for keys of 2 or more
+    members. A key is 'hot' when key_n >= hot_band_threshold — an exact
+    count, not a sample. Hot keys' rows get a per-row salt, and only
+    those rows go through a second, small (band, key, salt) aggregate for
+    each salt bucket's hub and size; a cold key is one bucket whose hub
+    and size are key_hub and key_n. Each bucket emits hub->member star
+    edges, and every salt-bucket hub that is not its key's key_hub links
+    to it (the hub chain), so a salted key stays one component.
 
     Why pairs as well as stars: star verification filters (hub, member)
     edges independently, so a FOREIGN collider that holds the bucket's
@@ -145,7 +141,7 @@ def salted_candidate_edges(
     its star edge, so it is skipped.
 
     Every edge is oriented src < dst in id order — star (hub = min), pair
-    (m1 < m2) and hub chain (key hub = min) — so the final distinct()
+    (m1 < m2) and hub chain (key_hub = min) — so the final distinct()
     dedups unordered pairs across buckets and edge kinds.
 
     Residual recall gap, documented: a true pair is found only through
@@ -154,35 +150,22 @@ def salted_candidate_edges(
     bound — and (b) when its pHash Hamming distance exceeds
     pair_phash_max_hamming (PSNR >= 40 dB re-encodes measure 0-2 bits).
     """
-    # pass 1: hot-band detection on a SAMPLE. Band keys are mostly unique
-    # (near-dup pairs are rare), so a full groupBy(band,key) count shuffles
-    # nearly all rows x bands — a 19M-row shuffle at 600k images just to
-    # find a handful of heavy hitters. At the default threshold of 300 the
-    # rate is 1%; keys that slip through are harmless (a few hundred rows
-    # in one window partition), and salting a falsely-flagged key is also
-    # harmless (the hub chain reconnects its buckets). A window count over
-    # raw (band,key) would funnel a whole hot band into one partition —
-    # never do that.
-    # The draw is a per-row hash, not DataFrame.sample: Spark seeds a
-    # sample per partition, so the hot set would depend on how the band
-    # rows happen to be partitioned (input files, core count).
-    threshold = cfg.hot_band_threshold
-    draw = F.pmod(
-        F.xxhash64("image_id", "band", "key", F.lit(cfg.minhash_seed)),
-        F.lit(HOT_DRAW_RANGE),
+    # The one aggregate over every band row, partial-aggregated map-side
+    # so a hot key never funnels into one partition (a window over raw
+    # (band, key) would — never do that). Band keys are mostly unique, so
+    # the >= 2 filter leaves a small table that AQE broadcasts into the
+    # member join: the band rows themselves are never shuffled (AQE's
+    # skew join splits a hot key if the table ever outgrows a broadcast).
+    buckets = (
+        bands.groupBy("band", "key")
+        .agg(F.count("*").alias("key_n"), F.min("image_id").alias("key_hub"))
+        .filter(F.col("key_n") >= 2)
     )
-    hot = (
-        bands.filter(draw < min(1.0, 3 / threshold) * HOT_DRAW_RANGE)
-        .groupBy("band", "key")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= min(3, threshold))
-        .select("band", "key", F.lit(True).alias("hot"))
-    )
-    # pass 2: salt hot keys; localCheckpoint so edges + hub chain reuse one
-    # materialization instead of re-deriving the band explode three times
+    hot = F.col("key_n") >= cfg.hot_band_threshold
+    # rows of multi-member buckets only; pinned because the hot-bucket
+    # aggregate, the star edges and the pairs all read them
     salted = (
-        bands.join(F.broadcast(hot), ["band", "key"], "left")
-        .withColumn("hot", F.col("hot").isNotNull())
+        bands.join(buckets, ["band", "key"])
         .withColumn(
             # the salt hash MUST mix in (band, key), not just the id: a
             # per-id-only salt gives a true pair the SAME split/co-salt
@@ -198,7 +181,7 @@ def salted_candidate_edges(
             # hot keys).
             "salt",
             F.when(
-                F.col("hot"),
+                hot,
                 F.pmod(
                     F.xxhash64("image_id", F.col("band"), F.col("key")),
                     F.lit(SALT_BUCKETS),
@@ -207,33 +190,23 @@ def salted_candidate_edges(
         )
         .localCheckpoint(eager=False)
     )
-    # Star edges WITHOUT a ranking window (round-1's largest non-scaling
-    # stage: the window sort-shuffled the whole rows x bands explode).
-    # Instead: groupBy(min, count) — partial-aggregated map-side, so hot
-    # keys never funnel into one partition — then an INNER join of the
-    # explode against only the buckets with >= 2 members. Near-dup buckets
-    # are rare, so that hub set is tiny and AQE turns the join into a
-    # broadcast: the big side is never shuffled at all. (If hubs outgrow
-    # broadcast at 10^12, the salt key still bounds the sort-merge
-    # partitions — same skew guarantee as before.)
-    hub_agg = salted.groupBy("band", "key", "salt").agg(
-        F.min("image_id").alias("hub"),
-        F.count("*").alias("bucket_n"),
-        F.max("hot").alias("hot"),
+    # hub and size of each salt bucket of a hot key: at most SALT_BUCKETS
+    # rows per hot key, so it is broadcast. key_hub is constant within a
+    # key, so grouping by it splits no bucket.
+    salt_hubs = (
+        salted.filter(hot)
+        .groupBy("band", "key", "key_hub", "salt")
+        .agg(F.min("image_id").alias("_hub"), F.count("*").alias("_n"))
     )
-    # Two consumers (star join + hot-key chain) — materialize ONCE, and
-    # only the buckets either can use (>=2 members or hot): singleton
-    # non-hot buckets, the overwhelming majority, are dropped before the
-    # checkpoint so the stored frame is tiny. Without this the rows x
-    # bands groupBy runs twice (measured: s3 doubled at local[2]).
-    hub_small = hub_agg.filter(
-        (F.col("bucket_n") >= 2) | F.col("hot")
-    ).localCheckpoint(eager=False)
-    pair_hubs = hub_small.filter(F.col("bucket_n") >= 2).select(
-        "band", "key", "salt", "hub", "bucket_n"
-    )
-    members = salted.join(pair_hubs, ["band", "key", "salt"]).filter(
-        F.col("image_id") != F.col("hub")
+    members = (
+        salted.join(
+            F.broadcast(salt_hubs.drop("key_hub")),
+            ["band", "key", "salt"],
+            "left",
+        )
+        .withColumn("hub", F.coalesce("_hub", "key_hub"))
+        .withColumn("bucket_n", F.coalesce("_n", "key_n"))
+        .filter(F.col("image_id") != F.col("hub"))
     )
     # max_pairs_per_band (SURVEY §4 degenerate-content valve): a bucket
     # with more than `cap` members emits only ~cap star edges — members are
@@ -280,17 +253,8 @@ def salted_candidate_edges(
         )
         .select("src", "dst")
     )
-    # link salt buckets of the same hot (band,key): min bucket-hub per key
-    # joins every other bucket hub (replaces the per-key ordering window —
-    # bucket_hubs is tiny, one broadcastable self-aggregation)
-    bucket_hubs = hub_small.filter(F.col("hot"))
-    key_hubs = bucket_hubs.groupBy("band", "key").agg(
-        F.min("hub").alias("key_hub")
-    )
-    hub_chain = (
-        bucket_hubs.join(key_hubs, ["band", "key"])
-        .filter(F.col("hub") != F.col("key_hub"))
-        .select(F.col("key_hub").alias("src"), F.col("hub").alias("dst"))
+    hub_chain = salt_hubs.filter(F.col("_hub") != F.col("key_hub")).select(
+        F.col("key_hub").alias("src"), F.col("_hub").alias("dst")
     )
     return edges.unionByName(pairs).unionByName(hub_chain).distinct()
 
@@ -306,22 +270,19 @@ def verify_edges(
     Agreement = fraction of equal MinHash positions (unbiased Jaccard
     estimate, the true-Jaccard generalization of the reference's
     calculateSimilarity proxy), computed with zip_with/aggregate — stays
-    in the JVM, no Python. Adds est_jaccard and phash_hamming.
+    in the JVM, no Python. Returns (src, dst, est_jaccard).
     """
     sigs = sig_df.select(
         F.col(id_col).alias("_vid"),
         F.col("minhash").alias("_mh"),
-        F.col("phash").alias("_ph"),
     )
     a = sigs.select(
         F.col("_vid").alias("src"),
         F.col("_mh").alias("mh_a"),
-        F.col("_ph").alias("ph_a"),
     )
     b = sigs.select(
         F.col("_vid").alias("dst"),
         F.col("_mh").alias("mh_b"),
-        F.col("_ph").alias("ph_b"),
     )
     agree = F.aggregate(
         F.zip_with("mh_a", "mh_b", lambda x, y: (x == y).cast("int")),
@@ -332,10 +293,6 @@ def verify_edges(
         edges.join(a, "src")
         .join(b, "dst")
         .withColumn("est_jaccard", agree / F.lit(cfg.num_perm))
-        .withColumn(
-            "phash_hamming",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))),
-        )
-        .select("src", "dst", "est_jaccard", "phash_hamming")
+        .select("src", "dst", "est_jaccard")
         .filter(F.col("est_jaccard") >= cfg.min_signature_agreement)
     )

@@ -11,11 +11,11 @@ Design for 100 TB media tables:
   functions/signatures.py).
 
 Real codec libraries (PIL/libjpeg/ffmpeg) are NOT in this container, so the
-decode core is pluggable: the deterministic ARVL/ARVY codec
-(arhivum_spark/codec.py) exercises the full plumbing, while
-``decode_external`` is a clearly marked stub that raises
-NotImplementedError until a real library is dropped in. Schema, batching,
-partitioning, and UDF signatures are real and tested either way.
+decode core is pluggable: ``codec.decode_any`` decodes the deterministic
+ARVL/ARVY containers, which exercise the full plumbing, and raises
+NotImplementedError for any other format until a real library is dropped
+in there. Schema, batching, partitioning, and UDF signatures are real and
+tested either way.
 """
 
 from __future__ import annotations
@@ -34,24 +34,6 @@ MEDIA_META_SCHEMA = (
 )
 
 
-def decode_external(data: bytes, fmt: str) -> np.ndarray:
-    """STUB: decode real-world formats (jpeg/png/webp/mp4 keyframes).
-
-    Swap-in point for PIL / turbojpeg / pyav on a production cluster —
-    the surrounding Spark plumbing does not change.
-    """
-    raise NotImplementedError(
-        f"external codec for {fmt!r} not available in this environment; "
-        "plug PIL/turbojpeg/pyav in here"
-    )
-
-
-def _decode_any(data: bytes, fmt: str) -> np.ndarray:
-    if data[:4] in (codec.MAGIC_LOSSLESS, codec.MAGIC_LOSSY):
-        return codec.decode(data)
-    return decode_external(data, fmt)
-
-
 def attach_media_meta(
     df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt",
     id_col: str = "image_id",
@@ -68,7 +50,7 @@ def attach_media_meta(
             rows = []
             for rid, raw, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
                 try:
-                    px = _decode_any(bytes(raw), fmt)
+                    px = codec.decode_any(bytes(raw), fmt)
                     rows.append(
                         (rid, fmt, px.shape[1], px.shape[0],
                          float(px.mean()), True)
@@ -226,7 +208,7 @@ def resize_images(
             out = []
             for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
                 try:
-                    px = _decode_any(bytes(raw), "")
+                    px = codec.decode_any(bytes(raw))
                 except Exception:
                     if on_error == "skip":
                         continue
@@ -266,7 +248,7 @@ def sample_frames(
             out = []
             for rid, raw in zip(pdf[id_col], pdf[bytes_col]):
                 try:
-                    px = _decode_any(bytes(raw), "")
+                    px = codec.decode_any(bytes(raw))
                 except Exception:
                     if on_error == "skip":
                         continue

@@ -78,7 +78,7 @@ def psnr_verify_edges(
 
     This is the only stage after s1 that touches pixels. Pairs whose
     decoded shapes differ are dropped (not a duplicate), identical pixels
-    give PSNR = inf. Adds `psnr_db`.
+    give PSNR = inf. Returns (src, dst, psnr_db).
 
     In-flight shuffle bound (cliff #5, BENCH.md): the payload shuffle is
     ~2 encoded images per edge, so its high-water mark grows with the
@@ -115,7 +115,7 @@ def psnr_verify_edges(
             # shuffles — this is what bounds the high-water mark
             edges.sparkSession._jvm.System.gc()
         parts.append(part)
-    return edges.join(reduce(DataFrame.unionByName, parts), ["src", "dst"])
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _psnr_scored(
@@ -133,7 +133,6 @@ def _psnr_scored(
     from collections.abc import Iterator
 
     from arhivum_spark import codec
-    from arhivum_spark.operators.multimodal import _decode_any
 
     thresh = float(cfg.psnr_edge_min_db)
 
@@ -186,15 +185,15 @@ def _psnr_scored(
                     and side[i + 1] == 1
                 ):
                     try:
-                        pa = _decode_any(bytes(blobs[i]), "")
-                        pb = _decode_any(bytes(blobs[i + 1]), "")
+                        pa = codec.decode_any(bytes(blobs[i]))
+                        pb = codec.decode_any(bytes(blobs[i + 1]))
                         v = (
                             codec.psnr(pa, pb)
                             if pa.shape == pb.shape
                             else -1.0
                         )
                     except NotImplementedError:
-                        # decode_external stub / codec misconfiguration:
+                        # no codec for this format / codec misconfiguration:
                         # an INFRASTRUCTURE failure, not a verdict.
                         # Mapping it to -1 would silently reject 100% of
                         # candidate edges and commit a plausible-looking

@@ -77,9 +77,8 @@ def test_merging_two_stars_via_bridge(spark):
 
 
 def test_cc_long_chain_never_returns_partial_labels(spark):
-    # pointer jumping roughly halves the label-path length per round, so
-    # a diameter-d chain converges in ~log2(d) rounds; with max_iters=2 a
-    # chain of 40 (diameter 39) cannot finish.
+    # a chain of 40 with consecutive ids (diameter 39) takes 6 rounds
+    # (see test_cc_stats_report_rounds), so max_iters=2 cannot finish it.
     n = 40
     edges = [(i, i + 1) for i in range(n - 1)]
     with pytest.raises(ConvergenceError):
@@ -157,6 +156,21 @@ def test_cc_stats_report_rounds(spark):
         v, e = _frames(spark, vertex_ids, edges)
         connected_components(v, e, stats=stats)
         assert stats == {"rounds": rounds}
+
+
+def test_cc_scrambled_chain_plans_each_round_alike(spark):
+    """A 30-vertex chain with scrambled ids needs 28 rounds: the worst of
+    300 random id orders (random.Random(3)) in a pure-Python replay of
+    the rounds. When each round's checkpoint kept its plan's size
+    estimate, the estimate squared every round and planning this chain
+    did not finish in 600 s."""
+    perm = [2, 10, 18, 20, 9, 13, 3, 4, 27, 23, 11, 26, 5, 22, 6, 8, 21, 28,
+            7, 12, 19, 16, 24, 17, 14, 29, 15, 1, 25, 0]
+    v, e = _frames(spark, perm, list(zip(perm, perm[1:])))
+    stats: dict = {}
+    rows = connected_components(v, e, stats=stats).collect()
+    assert stats == {"rounds": 28}
+    assert {r["component"] for r in rows} == {0} and len(rows) == 30
 
 
 def test_cc_two_rounds_run_only_checkpoint_and_emit_jobs(spark):

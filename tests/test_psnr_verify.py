@@ -1,6 +1,7 @@
 """Decoded-pixel PSNR verification of candidate edges (pipeline stage s3b,
 `plans.image_dedup.psnr_verify_edges`): verdicts, hash-batching, plan
-shape, duplicate-id and codec-error handling, and config validation."""
+shape, duplicate-id and codec-error handling (s1 shares the codec
+dispatch), and config validation."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 from arhivum_spark import codec
 from arhivum_spark.config import DedupConfig
+from arhivum_spark.functions.signatures import attach_signatures
 from arhivum_spark.plans import image_dedup
 from arhivum_spark.plans.image_dedup import psnr_verify_edges
 
@@ -203,12 +205,11 @@ def test_psnr_ignores_duplicate_image_ids(spark):
 
 
 def test_psnr_kernel_raises_on_codec_infra_error(spark):
-    """Undecodable-by-the-in-repo-codec bytes route to decode_external,
-    which raises NotImplementedError (the documented external-codec
-    swap-in point). That is an infrastructure failure, not a 'not a
-    duplicate' verdict: it must fail the stage loudly instead of
-    silently scoring every edge PSNR=-1 and committing an empty
-    snapshot."""
+    """Bytes the in-repo codec does not know make codec.decode_any raise
+    NotImplementedError (the documented external-codec swap-in point).
+    That is an infrastructure failure, not a 'not a duplicate' verdict:
+    it must fail the stage loudly instead of silently scoring every edge
+    PSNR=-1 and committing an empty snapshot."""
     images = spark.createDataFrame(
         [("a", bytearray(b"\x89PNGnotreally")), ("b", bytearray(b"junk"))],
         "image_id string, bytes binary",
@@ -216,6 +217,19 @@ def test_psnr_kernel_raises_on_codec_infra_error(spark):
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(Exception, match="NotImplementedError"):
         psnr_verify_edges(edges, images, DedupConfig()).collect()
+
+
+def test_signatures_raise_on_codec_infra_error(spark):
+    """s1 decodes through the same dispatch as s3b: bytes the in-repo
+    codec does not know (a real JPEG) raise the external-codec
+    NotImplementedError, not a zlib error from the container decoder."""
+    images = spark.createDataFrame(
+        [("a", bytearray(b"\xff\xd8\xff\xe0notreally"), "", "jpeg", 1, 1, 0)],
+        "image_id string, bytes binary, caption string, fmt string, "
+        "w int, h int, phash long",
+    )
+    with pytest.raises(Exception, match="NotImplementedError.*'jpeg'"):
+        attach_signatures(images, DedupConfig()).collect()
 
 
 def test_config_rejects_psnr_max_inflight_edges_below_one():

@@ -135,4 +135,4 @@ def test_resize_and_frame_sample_plumbing(spark):
 
 def test_decode_external_is_explicit_stub():
     with pytest.raises(NotImplementedError):
-        multimodal.decode_external(b"\x89PNG1234", "png")
+        codec.decode_any(b"\x89PNG1234", "png")
