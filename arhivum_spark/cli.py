@@ -34,7 +34,8 @@ extra columns are ignored.
 The job is one fixed sequence of stages (plans.image_dedup.STAGES):
 s1 signatures, s2 exact, s3 LSH candidates, s3b decoded-pixel PSNR
 verification (always on), s4 clusters, and s5 captions when
---captions-out is given.
+--captions-out is given. s5 reads only s1's signatures, so it runs
+beside s2..s4 from s1's commit on.
 
 Prints ONE JSON line of run metrics on success (rows, clusters,
 duplicates, wall seconds, per-stage seconds of this run, and the stages
@@ -69,7 +70,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--captions-out", default=None,
         help=(
-            "optional output dir for caption near-dup/containment pairs. "
+            "optional output dir for caption near-dup/containment pairs "
+            "(stage s5, which then runs beside s2..s4 from s1's commit on). "
             "NOTE: containment rows are a COVERING edge set, not the full "
             "pair enumeration — identical captions are collapsed to a "
             "min-id representative (rep-level containment edges plus "
@@ -149,7 +151,9 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     try:
         images = spark.read.parquet(args.input)
         store = StageStore(spark, args.stage_dir)
-        clusters = run_pipeline(images, store, cfg)
+        clusters = run_pipeline(
+            images, store, cfg, captions=args.captions_out is not None
+        )
         clusters.write.mode("overwrite").parquet(args.output)
 
         # one aggregate pass, not three separate scans of the output

@@ -18,12 +18,20 @@ The Spark shape of the reference's scan lifecycle (SURVEY.md §3.1):
     stage 5  captions     SimHash near-dup caption pairs + substring
                           (suffix) containment pairs — separate output
 
+The stages form a DAG, not a chain: s5 reads only the s1 signatures.
+
+    s1 ──> s2 ──> s3 ──> s3b ──> s4      (caller's thread)
+     └──> s5                             (one worker thread, from s1's
+                                          commit until s4 returns)
+
 Every stage commits a snapshot via StageStore (resume-mid-pipeline) and
-appends per-partition metrics. All joins on ids/signatures only.
+appends per-partition metrics, so the two branches commit and resume
+independently. All joins on ids/signatures only.
 """
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 from functools import reduce
 
@@ -32,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from arhivum_spark.config import DedupConfig
 from arhivum_spark.functions.signatures import attach_signatures
@@ -41,8 +50,9 @@ from arhivum_spark.operators.lsh import candidate_edges_compact, verify_edges
 from arhivum_spark.session import ARROW_BATCH_FOR_BINARY
 from arhivum_spark.sources.checkpoints import StageStore
 
-# the job's stages in commit order: run_pipeline commits s1..s4,
-# caption_pairs commits s5
+# the job's stages, s1 first and s4 after s3b; s5 (committed beside
+# s2..s4 by run_pipeline, or by caption_pairs alone) can commit anywhere
+# after s1
 STAGES = (
     "s1_signatures",
     "s2_exact",
@@ -258,31 +268,95 @@ def run_pipeline(
     images: DataFrame,
     store: StageStore,
     cfg: DedupConfig = DedupConfig(),
+    captions: bool = True,
 ) -> DataFrame:
     """images -> committed cluster table (image_id, cluster_id, is_duplicate,
     representative_id, content_sha256). Resumes from committed stages.
 
+    captions: also commit s5 (see caption_pairs) to ``store``. s5 reads
+    only the s1 signatures, so it starts as soon as s1 commits and runs on
+    one worker thread beside s2..s4. The thread carries the caller's local
+    properties (job group, scheduler pool) and the session's tags, so its
+    Spark jobs are the caller's jobs. It is joined before this returns: no
+    thread outlives the call. If s2..s4 fail, the error is raised once s5
+    has finished, with s5's error (if any) chained at the end of its
+    context; if only s5 fails, its error is raised. Afterwards
+    ``caption_pairs(sigs, store, cfg)`` on the same store is a read of the
+    committed snapshot.
+
     Side effect: bounds the session's parquet vectorized-reader batch to
-    ``ARROW_BATCH_FOR_BINARY`` rows for the DURATION of the pipeline — every
-    scan this pipeline performs carries multi-KB binary payloads (see
-    pinned_reader_batch). The prior session value is restored on return
-    so unrelated queries sharing the session keep the default (wide)
-    vectorized-scan batches.
+    ``ARROW_BATCH_FOR_BINARY`` rows for the DURATION of the pipeline, s5
+    included — every scan this pipeline performs carries multi-KB binary
+    payloads (see pinned_reader_batch). The prior session value is
+    restored on return so unrelated queries sharing the session keep the
+    default (wide) vectorized-scan batches.
     """
     with pinned_reader_batch(images.sparkSession):
-        return _run_pipeline_stages(images, store, cfg)
+        return _run_pipeline_stages(images, store, cfg, captions)
+
+
+@contextmanager
+def _beside(spark, side):
+    """Run ``side()`` (if given) on one worker thread while the block runs
+    and join it when the block exits, however it exits. The block's error
+    wins and gets ``side``'s error chained at the end of its context (and
+    named in a note, since PySpark raises its converted errors with the
+    context display suppressed); ``side``'s error alone is re-raised."""
+    if side is None:
+        yield
+        return
+    errors: list[BaseException] = []
+
+    def target() -> None:
+        try:
+            side()
+        except BaseException as e:  # handed to the joining thread
+            errors.append(e)
+
+    worker = threading.Thread(
+        target=inheritable_thread_target(spark)(target), name="s5_captions"
+    )
+    worker.start()
+    try:
+        yield
+    except BaseException as err:
+        worker.join()
+        if errors:
+            tail = err
+            while tail.__context__ is not None:
+                tail = tail.__context__
+            tail.__context__ = errors[0]
+            err.add_note(f"s5_captions failed as well: {errors[0]!r}")
+        raise
+    worker.join()
+    if errors:
+        raise errors[0]
 
 
 def _run_pipeline_stages(
     images: DataFrame,
     store: StageStore,
     cfg: DedupConfig,
+    captions: bool,
 ) -> DataFrame:
     sigs = store.read_or_compute(
         "s1_signatures",
         lambda: attach_signatures(images, cfg),
         materialize_first=True,  # pandas-UDF stage (see StageStore.write)
     )
+
+    side = (lambda: caption_pairs(sigs, store, cfg)) if captions else None
+    with _beside(images.sparkSession, side):
+        return _image_chain(images, sigs, store, cfg)
+
+
+def _image_chain(
+    images: DataFrame,
+    sigs: DataFrame,
+    store: StageStore,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """s2 -> s3 -> s3b -> s4 over the committed s1 signatures."""
 
     def exact_stage() -> DataFrame:
         return dedup_exact.flag_duplicates(
@@ -353,7 +427,11 @@ def _run_pipeline_stages(
 def caption_pairs(
     sigs: DataFrame, store: StageStore, cfg: DedupConfig = DedupConfig()
 ) -> DataFrame:
-    """Caption near-dup pairs: SimHash banding + substring containment."""
+    """Caption near-dup pairs: SimHash banding + substring containment,
+    committed as s5 (id_a, id_b, pair_class). run_pipeline calls this on
+    its worker thread beside s2..s4; called afterwards on the same store,
+    it reads that snapshot back. On a store where s5 was never run it
+    computes and commits the stage here."""
     from arhivum_spark.operators.dedup_text import (
         simhash_near_pairs,
         substring_pairs,

@@ -30,7 +30,16 @@ table: stage, spark partition id, row count, wall-clock.
 Each store also keeps `stage_log`, what THIS instance did, in commit
 order: a stage it committed maps to the seconds written to its manifest
 entry, a stage it reused to 0.0 with `reused` set. A run reports its own
-cost from it; the manifest keeps the original commit's seconds.
+cost from it; the manifest keeps the original commit's seconds. Stages
+that run on different threads land in the order they commit: the image
+pipeline's s5 runs beside s2..s4, so its entry can fall anywhere after
+s1. A stage already in the log is returned by `read_or_compute` as a
+plain read, with the log left as it is.
+
+Each manifest entry also records the written frame's schema, so reading
+a snapshot back (after a write, or on resume) needs no schema-inference
+job; entries written before the schema was recorded fall back to
+inference.
 """
 
 from __future__ import annotations
@@ -44,6 +53,7 @@ from contextlib import contextmanager, suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class StageStore:
@@ -124,20 +134,19 @@ class StageStore:
         elapsed = round(time.time() - t0, 3)
         if materialize_first:
             df.unpersist()
-        committed = self.spark.read.parquet(path)
         if metrics:
             self._append_metrics(stage, path, elapsed)
+        entry = {
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "write_seconds": elapsed,
+            "schema": df.schema.json(),
+        }
         with self._manifest_lock():
             m = self._manifest()
-            m["stages"][stage] = {
-                "committed_at": time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
-                "write_seconds": elapsed,
-            }
+            m["stages"][stage] = entry
             self._commit_manifest(m)
         self.stage_log[stage] = {"write_seconds": elapsed, "reused": False}
-        return committed
+        return self._read(stage, entry)
 
     def _append_metrics(self, stage: str, path: str, elapsed: float) -> None:
         """Per-FILE row counts of the COMMITTED snapshot (the contract:
@@ -172,12 +181,24 @@ class StageStore:
         )
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, stage, "data"))
+        return self._read(stage, self._manifest()["stages"].get(stage, {}))
+
+    def _read(self, stage: str, entry: dict) -> DataFrame:
+        """The committed snapshot, under the schema its manifest entry
+        records (no schema-inference job); inferred when it has none."""
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        return reader.parquet(os.path.join(self.root, stage, "data"))
 
     def read_or_compute(
         self, stage: str, compute, materialize_first: bool = False
     ) -> DataFrame:
-        """Resume point: reuse the committed snapshot, else compute+commit."""
+        """Resume point: reuse the committed snapshot, else compute+commit.
+        A stage this instance already committed or reused is read back
+        and left in the log as it is."""
+        if stage in self.stage_log:
+            return self.read(stage)
         if self.is_committed(stage):
             self.stage_log[stage] = {"write_seconds": 0.0, "reused": True}
             return self.read(stage)

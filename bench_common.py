@@ -30,7 +30,7 @@ from arhivum_spark import datagen  # noqa: E402
 from arhivum_spark.config import DedupConfig  # noqa: E402
 from arhivum_spark.functions.signatures import attach_signatures  # noqa: E402
 from arhivum_spark.plans.image_dedup import (  # noqa: E402
-    STAGES,  # the stages one timed job commits, in commit order
+    STAGES,  # the stages one timed job commits
     caption_pairs,
     pinned_reader_batch,
     run_pipeline,
@@ -97,12 +97,14 @@ def read_manifest(stage_root: str) -> dict:
 
 
 def timed_job(spark, images, stage_root: str) -> dict:
-    """The job `cli.run --captions-out` runs: `run_pipeline`, then
-    `caption_pairs` over the committed s1 snapshot, on `stage_root`
-    (resuming any stage committed there). The wall covers both and their
-    order-insensitive checksums. Per-stage seconds come from the store's
-    log of this job, 0 for a stage that was already committed (listed in
-    `reused_stages`, in commit order)."""
+    """The job `cli.run --captions-out` runs: `run_pipeline` (which
+    commits s5 beside s2..s4), then `caption_pairs` over the committed s1
+    snapshot, which reads s5 back, on `stage_root` (resuming any stage
+    committed there). The wall covers both and their order-insensitive
+    checksums. Per-stage seconds come from the store's log of this job,
+    0 for a stage that was already committed (listed in
+    `reused_stages`); both are in `STAGES` order, whatever order the
+    two branches committed in."""
     store = StageStore(spark, stage_root)
     cfg = DedupConfig()
     t0 = time.time()
@@ -124,7 +126,7 @@ def timed_job(spark, images, stage_root: str) -> dict:
         .first()
     )
     wall = time.time() - t0
-    log = store.stage_log
+    log = {s: store.stage_log[s] for s in STAGES if s in store.stage_log}
     return {
         "wall_sec": round(wall, 3),
         "rows": c["n"],

@@ -75,6 +75,8 @@ def main() -> None:
                 "cores": bc.cores(),
                 **bc.dup_pair_recall(datagen.truth_clusters(p), pred),
                 "clusters": run["clusters"],
+                "cluster_xor": run["cluster_xor"],
+                "caption_xor": run["caption_xor"],
                 "pipeline_wall_sec": run["wall_sec"],
                 "stage_sec": run["stage_sec"],
                 "caption_truth_pairs": int(len(caption_truth)),

@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from arhivum_spark.sources.checkpoints import StageStore
+from tests.conftest import run_counting_jobs
 
 
 def test_stage_log_is_this_store_only(spark, tmp_path):
@@ -42,6 +43,83 @@ def test_stage_log_is_this_store_only(spark, tmp_path):
         for e in second.stage_log.values()
     )
     assert "b" in manifest and "b" not in second.stage_log
+
+    # a stage already in the log reads back as is: no recompute, and a
+    # stage this store computed is not re-marked reused
+    before = dict(first.stage_log)
+    assert first.read_or_compute("a", poisoned).count() == 3
+    assert second.read_or_compute("c", poisoned).count() == 5
+    assert first.stage_log == before and list(first.stage_log) == ["a", "b", "c"]
+    assert list(second.stage_log) == ["c", "a"]
+
+
+def test_concurrent_commits_lose_no_stage(spark, tmp_path):
+    """Stages committed at once from several threads through one store
+    (the image pipeline commits s5 beside s2..s4) all land in the
+    manifest and the log: the manifest swap is locked, and the log's
+    per-stage entries do not collide."""
+    import sys
+    import threading
+
+    store = StageStore(spark, str(tmp_path / "store"))
+    stages = [f"t{i}" for i in range(8)]
+    errors: list[BaseException] = []
+
+    def commit(stage: str) -> None:
+        try:
+            store.read_or_compute(stage, lambda: spark.range(len(stage)))
+        except BaseException as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=commit, args=(s,)) for s in stages]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert set(store._manifest()["stages"]) == set(stages)
+    assert set(store.stage_log) == set(stages)
+    assert all(store.is_committed(s) for s in stages)
+
+
+def test_stage_reads_skip_schema_inference(spark, tmp_path):
+    """write() records the frame's schema in the stage's manifest entry,
+    so the snapshot it returns and every later read() (a resume) carry
+    the schema inference would give, without starting a Spark job. An
+    entry written before the schema was recorded is read by inference."""
+    root = str(tmp_path / "store")
+    df = (
+        spark.range(20)
+        .withColumn("ids", F.array(F.lit(1), F.col("id")))
+        .withColumn("s", F.struct(F.col("id").cast("string").alias("t")))
+        .withColumn("b", F.lit(None).cast("binary"))
+    )
+    store = StageStore(spark, root)
+    written = store.write("x", df)
+    inferred = spark.read.parquet(os.path.join(root, "x", "data")).schema
+    assert written.schema == inferred
+
+    resumed, jobs = run_counting_jobs(
+        spark, lambda: StageStore(spark, root).read("x").schema
+    )
+    assert resumed == inferred
+    assert jobs == 0
+    assert StageStore(spark, root).read("x").count() == 20
+
+    m = store._manifest()
+    del m["stages"]["x"]["schema"]
+    store._commit_manifest(m)
+    old, jobs = run_counting_jobs(
+        spark, lambda: StageStore(spark, root).read("x").schema
+    )
+    assert old == inferred
+    assert jobs >= 1  # the inference job the recorded schema saves
 
 
 def test_stage_store_prune_keeps_resume(spark, tmp_path):

@@ -9,7 +9,7 @@ import pytest
 
 from arhivum_spark import codec, datagen
 from arhivum_spark.config import DedupConfig
-from arhivum_spark.plans.image_dedup import caption_pairs, run_pipeline
+from arhivum_spark.plans.image_dedup import STAGES, caption_pairs, run_pipeline
 from arhivum_spark.functions.signatures import attach_signatures
 from arhivum_spark.session import ARROW_BATCH_FOR_BINARY
 from arhivum_spark.sources.checkpoints import StageStore
@@ -200,9 +200,9 @@ def test_pipeline_bounds_parquet_reader_batch(
     seen: list[str] = []
     real_stages = mod._run_pipeline_stages
 
-    def spy(images_df, store_arg, cfg_arg):
+    def spy(images_df, store_arg, cfg_arg, captions):
         seen.append(spark.conf.get(key))
-        return real_stages(images_df, store_arg, cfg_arg)
+        return real_stages(images_df, store_arg, cfg_arg, captions)
 
     monkeypatch.setattr(mod, "_run_pipeline_stages", spy)
     store = StageStore(spark, str(tmp_path_factory.mktemp("rbstages")))
@@ -242,3 +242,116 @@ def test_resume_reuses_committed_stages(spark, images, tmp_path_factory):
     )
     m = StageStore(spark, root).metrics()
     assert m is not None and m.count() > 0
+
+
+SMALL = datagen.GenParams(n=300, seed=42, img_hw=64)
+
+
+@pytest.fixture(scope="module")
+def small_images(spark):
+    df = datagen.images_df(spark, SMALL, partitions=4)
+    df.cache().count()
+    return df
+
+
+def _poison(*_a, **_kw):
+    raise AssertionError("the caption stage was recomputed")
+
+
+def test_run_pipeline_commits_captions_beside_image_stages(
+    spark, small_images, tmp_path, monkeypatch
+):
+    """run_pipeline commits s5 itself, on a thread whose jobs carry the
+    caller's job group; a later caption_pairs on the same store reads
+    that snapshot back without computing, and the snapshot equals a
+    sequential caption_pairs run on a fresh store."""
+    from arhivum_spark.operators import dedup_text
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"caller-{tmp_path.name}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    store = StageStore(spark, str(tmp_path / "overlap"))
+    sc.setJobGroup(group, group)
+    try:
+        run_pipeline(small_images, store, CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert tracker.getJobIdsForGroup(group)
+
+    assert store.is_committed("s5_captions")
+    assert store.stage_log["s5_captions"]["reused"] is False
+    logged = dict(store.stage_log)
+    sigs = store.read("s1_signatures")
+    with monkeypatch.context() as m:
+        m.setattr(dedup_text, "simhash_near_pairs", _poison)
+        m.setattr(dedup_text, "substring_pairs", _poison)
+        overlapped = caption_pairs(sigs, store, CFG).toPandas()
+    assert store.stage_log == logged
+
+    sequential = caption_pairs(
+        sigs, StageStore(spark, str(tmp_path / "sequential")), CFG
+    ).toPandas()
+    assert len(overlapped) > 0
+    cols = ["id_a", "id_b", "pair_class"]
+    pd.testing.assert_frame_equal(
+        overlapped.sort_values(cols).reset_index(drop=True),
+        sequential.sort_values(cols).reset_index(drop=True),
+    )
+
+
+@pytest.fixture(scope="module")
+def image_stages_root(spark, small_images, tmp_path_factory):
+    """A root where run_pipeline(captions=False) committed s1..s4."""
+    root = str(tmp_path_factory.mktemp("image_only"))
+    run_pipeline(small_images, StageStore(spark, root), CFG, captions=False)
+    return root
+
+
+def test_captions_false_commits_no_caption_stage(spark, image_stages_root):
+    store = StageStore(spark, image_stages_root)
+    assert all(store.is_committed(s) for s in STAGES if s != "s5_captions")
+    assert not store.is_committed("s5_captions")
+
+
+def test_caption_error_surfaces_and_image_error_wins(
+    spark, small_images, image_stages_root, tmp_path, monkeypatch
+):
+    """An s5 error is raised from run_pipeline; when s4 fails too, the s4
+    error is raised, with the s5 error chained in its context, and the
+    s5 thread has finished by then."""
+    import shutil
+    import threading
+
+    from arhivum_spark.operators import dedup_text
+    from arhivum_spark.plans import image_dedup as mod
+
+    def caption_boom(*_a, **_kw):
+        raise ValueError("s5 boom")
+
+    def cluster_boom(*_a, **_kw):
+        raise RuntimeError("s4 boom")
+
+    monkeypatch.setattr(dedup_text, "simhash_near_pairs", caption_boom)
+    root = str(tmp_path / "stages")
+    shutil.copytree(image_stages_root, root)
+    with pytest.raises(ValueError, match="s5 boom"):
+        run_pipeline(small_images, StageStore(spark, root), CFG)
+
+    store = StageStore(spark, root)
+    m = store._manifest()
+    del m["stages"]["s4_clusters"]
+    store._commit_manifest(m)
+    monkeypatch.setattr(mod, "connected_components", cluster_boom)
+    with pytest.raises(RuntimeError, match="s4 boom") as err:
+        run_pipeline(small_images, StageStore(spark, root), CFG)
+    chain, e = [], err.value
+    while e is not None:
+        chain.append(e)
+        e = e.__context__
+    assert any(str(c) == "s5 boom" for c in chain)
+    assert not any(t.name == "s5_captions" for t in threading.enumerate())
+    assert not store.is_committed("s5_captions")
