@@ -15,7 +15,7 @@ The north-rule launch shape (BASELINE.json: "run via spark-submit
 
 --input/--output/--captions-out take any Spark-readable URI (s3://,
 hdfs://, ...). --stage-dir must be a DRIVER-VISIBLE filesystem path
-(local or a shared mount): StageStore's manifest/lock/metrics live on
+(local or a shared mount): StageStore's manifest/lock live on
 the driver's filesystem; the object-store/production form of the stage
 store is an Iceberg catalog (checkpoints.py module docstring), not
 reachable from this sandbox. An s3:// stage dir is rejected with a
@@ -129,7 +129,7 @@ def run(argv: list[str] | None = None, spark=None) -> dict:
     if scheme and scheme != "file":
         raise SystemExit(
             f"--stage-dir must be a driver-visible filesystem path, got "
-            f"'{args.stage_dir}': StageStore's manifest/lock/metrics are "
+            f"'{args.stage_dir}': StageStore's manifest/lock are "
             "local-FS (the production form is an Iceberg catalog — see "
             "sources/checkpoints.py). Use a shared mount for multi-driver "
             "resume."

@@ -24,8 +24,12 @@ from one stage root need cross-host advisory locks (e.g. NFSv4); on NFSv3
 without a lock manager, or a mount that ignores flock, they can lose each
 other's manifest entries. One driver per stage root is always safe.
 
-Per-stage, per-partition metrics (north rule) are appended to a `_metrics`
-table: stage, spark partition id, row count, wall-clock.
+The manifest entry is a stage's one commit record. Beside `committed_at`
+and `write_seconds` it keeps the per-partition metrics (north rule):
+`files` maps each part file of the committed snapshot to its row count,
+read from the parquet footers on the driver, as an Iceberg manifest keeps
+per-data-file record counts. One locked swap commits them all. Entries
+written before `files` was recorded still count as committed.
 
 Each store also keeps `stage_log`, what THIS instance did, in commit
 order: a stage it committed maps to the seconds written to its manifest
@@ -49,10 +53,10 @@ import json
 import os
 import shutil
 import time
-from contextlib import contextmanager, suppress
+from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -96,15 +100,18 @@ class StageStore:
             finally:
                 fcntl.flock(lf, fcntl.LOCK_UN)
 
+    def _committed_entry(self, stage: str) -> dict | None:
+        """The stage's manifest entry if the stage is committed (entry
+        and ``data/_SUCCESS`` both exist), else None."""
+        entry = self._manifest()["stages"].get(stage)
+        if entry and os.path.exists(
+            os.path.join(self.root, stage, "data", "_SUCCESS")
+        ):
+            return entry
+        return None
+
     def is_committed(self, stage: str) -> bool:
-        m = self._manifest()
-        entry = m["stages"].get(stage)
-        return bool(
-            entry
-            and os.path.exists(
-                os.path.join(self.root, stage, "data", "_SUCCESS")
-            )
-        )
+        return self._committed_entry(stage) is not None
 
     def write(
         self,
@@ -116,6 +123,9 @@ class StageStore:
         """Commit a stage snapshot (idempotent overwrite) and return a reader
         of the committed data — downstream reads the snapshot, not the
         lineage, so a failure downstream never recomputes this stage.
+
+        metrics: record the snapshot's per-file rows (``files``) in the
+        manifest entry.
 
         materialize_first: persist+count before the file write. Needed for
         pandas-UDF stages only — fusing a UDF stage into the parquet-write
@@ -134,51 +144,19 @@ class StageStore:
         elapsed = round(time.time() - t0, 3)
         if materialize_first:
             df.unpersist()
-        if metrics:
-            self._append_metrics(stage, path, elapsed)
         entry = {
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "write_seconds": elapsed,
             "schema": df.schema.json(),
         }
+        if metrics:
+            entry["files"] = _file_rows(path)
         with self._manifest_lock():
             m = self._manifest()
             m["stages"][stage] = entry
             self._commit_manifest(m)
         self.stage_log[stage] = {"write_seconds": elapsed, "reused": False}
         return self._read(stage, entry)
-
-    def _append_metrics(self, stage: str, path: str, elapsed: float) -> None:
-        """Per-FILE row counts of the COMMITTED snapshot (the contract:
-        _metrics reflects what a resume actually reads, not the in-memory
-        plan's partitioning). Read from parquet footers driver-side — no
-        Spark job; stage dirs have O(cores) files. On a real cluster the
-        same footers come from the object store listing."""
-        import pyarrow.parquet as pq
-
-        rows = []
-        for fn in sorted(os.listdir(path)):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.read_metadata(os.path.join(path, fn))
-            rows.append((stage, fn, md.num_rows, elapsed))
-        if not rows:
-            rows.append((stage, "_empty", 0, elapsed))
-        import pyarrow as pa
-
-        table = pa.table(
-            {
-                "stage": [r[0] for r in rows],
-                "file": [r[1] for r in rows],
-                "rows": [r[2] for r in rows],
-                "write_seconds": [r[3] for r in rows],
-            }
-        )
-        mdir = os.path.join(self.root, "_metrics")
-        os.makedirs(mdir, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(mdir, f"{stage}-{int(time.time()*1000)}.parquet")
-        )
 
     def read(self, stage: str) -> DataFrame:
         return self._read(stage, self._manifest()["stages"].get(stage, {}))
@@ -199,37 +177,26 @@ class StageStore:
         and left in the log as it is."""
         if stage in self.stage_log:
             return self.read(stage)
-        if self.is_committed(stage):
+        entry = self._committed_entry(stage)
+        if entry is not None:
             self.stage_log[stage] = {"write_seconds": 0.0, "reused": True}
-            return self.read(stage)
+            return self._read(stage, entry)
         t0 = time.time()
         df = compute()
         self._compute_started[stage] = t0
         return self.write(stage, df, materialize_first=materialize_first)
 
-    def metrics(self) -> DataFrame | None:
-        path = os.path.join(self.root, "_metrics")
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
-
-    def prune(
-        self, keep_last_metrics: int = 1, min_age_seconds: float = 3600.0
-    ) -> dict:
+    def prune(self, min_age_seconds: float = 3600.0) -> dict:
         """Manifest-led GC (retention story — at production scale the
         stage store IS the Iceberg table and this is `expire_snapshots`):
 
-        - ABANDONED stage roots — directories with no manifest entry or
-          no ``data/_SUCCESS`` (a write that died mid-job; Spark's job
-          commit makes complete-or-absent per directory, but the
-          directory itself survives a driver kill) — are deleted, along
-          with any dangling manifest entry. A rerun recomputes them; a
-          committed stage is NEVER touched, so a pruned store resumes
-          exactly like an unpruned one (test-gated).
-        - SUPERSEDED metrics generations — every ``write()`` appends one
-          ``<stage>-<millis>.parquet`` to ``_metrics``; repeated reruns
-          accumulate them unboundedly. Keep the newest
-          ``keep_last_metrics`` per stage.
+        ABANDONED stage roots — directories with no manifest entry or no
+        ``data/_SUCCESS`` (a write that died mid-job; Spark's job commit
+        makes complete-or-absent per directory, but the directory itself
+        survives a driver kill) — are deleted, along with any dangling
+        manifest entry. A rerun recomputes them; a committed stage is
+        NEVER touched, so a pruned store resumes exactly like an
+        unpruned one (test-gated).
 
         An uncommitted root is only "abandoned" once its tree has been
         QUIET for ``min_age_seconds`` (newest mtime over dirs AND files
@@ -247,8 +214,7 @@ class StageStore:
         is never clobbered. Pass ``min_age_seconds=0`` only when the
         store is known quiescent.
 
-        Returns {"stages": [removed stage roots], "metrics": [removed
-        metric files]} for operator logging.
+        Returns {"stages": [removed stage roots]} for operator logging.
         """
         def _newest_mtime(path: str) -> float | None:
             # stat FILES as well as directories: a live write whose tasks
@@ -273,12 +239,12 @@ class StageStore:
                         pass
             return newest
 
-        removed: dict = {"stages": [], "metrics": []}
+        removed: dict = {"stages": []}
         now = time.time()
         snapshot = self._manifest()
         for entry in sorted(os.listdir(self.root)):
             p = os.path.join(self.root, entry)
-            if entry == "_metrics" or not os.path.isdir(p):
+            if not os.path.isdir(p):
                 continue
             # committed = manifest snapshot entry + _SUCCESS on disk (no
             # per-entry manifest re-parse: the lost-update safety comes
@@ -316,22 +282,16 @@ class StageStore:
                         m["stages"].pop(stage, None)
                 self._commit_manifest(m)
 
-        mdir = os.path.join(self.root, "_metrics")
-        if os.path.isdir(mdir) and keep_last_metrics >= 0:
-            by_stage: dict[str, list[str]] = {}
-            for fn in os.listdir(mdir):
-                if not fn.endswith(".parquet"):
-                    continue
-                stage = fn[: -len(".parquet")].rsplit("-", 1)[0]
-                by_stage.setdefault(stage, []).append(fn)
-            for stage, files in by_stage.items():
-                # filename millis timestamp orders generations
-                for fn in sorted(files)[
-                    : max(0, len(files) - keep_last_metrics)
-                ]:
-                    # a concurrent prune may have removed it first —
-                    # same tolerance as the rmtree/mtime paths
-                    with suppress(FileNotFoundError):
-                        os.remove(os.path.join(mdir, fn))
-                        removed["metrics"].append(fn)
         return removed
+
+
+def _file_rows(path: str) -> dict[str, int]:
+    """Rows per part file of the COMMITTED snapshot (what a resume reads,
+    not the in-memory plan's partitioning), from the parquet footers on
+    the driver — no Spark job; stage dirs have O(cores) files. On a real
+    cluster the same footers come from the object store listing."""
+    return {
+        fn: pq.read_metadata(os.path.join(path, fn)).num_rows
+        for fn in sorted(os.listdir(path))
+        if fn.endswith(".parquet")
+    }

@@ -12,7 +12,7 @@ first-occurrence-wins) and its batch-then-upload resumable micro-batching
   the design fix).
 - `ingest_stream`: foreachBatch writing each micro-batch as its own bare
   parquet snapshot directory (``batch-<id>/`` — NOT a StageStore stage:
-  no manifest or _metrics involvement; on a real cluster this is an
+  no manifest involvement; on a real cluster this is an
   Iceberg append per batch). Idempotent on replay purely through the
   overwrite-by-batch-dir commit: Structured Streaming re-runs a failed
   batch with the same batch_id and the rewrite commits identical bytes,

@@ -3,7 +3,8 @@
 The recall >= 0.99 gate runs in pytest on a ~2k-row corpus
 (tests/test_pipeline_recall.py::test_recall_gate). This bench runs the
 same computation on the bench corpus (bench_common's corpus spec): one
-timed job (pipeline + caption stage), then recall of
+timed job (pipeline + caption stage, after the same UDF-worker warm-up as
+bench.py and bench_scaling.py), then recall of
 `datagen.truth_clusters` over the committed s4 table and of
 `datagen.truth_caption_pairs` over the committed s5 edges.
 
@@ -57,6 +58,7 @@ def main() -> None:
         )
     spark = bc.session("recall")
     images = spark.read.parquet(bc.corpus(spark))
+    bc.warm_up(images)
     stage_root = os.path.join(bc.WORKDIR, "stages_recall")
     shutil.rmtree(stage_root, ignore_errors=True)
     run = bc.timed_job(spark, images, stage_root)

@@ -122,11 +122,40 @@ def test_stage_reads_skip_schema_inference(spark, tmp_path):
     assert jobs >= 1  # the inference job the recorded schema saves
 
 
+def test_entry_without_files_resumes_with_one_manifest_parse(
+    spark, tmp_path, monkeypatch
+):
+    """An entry written before per-file rows were recorded (no ``files``)
+    still counts as committed and resumes with no recompute, and a resume
+    lookup parses the manifest once for both the commit check and the
+    schema it reads back under."""
+    root = str(tmp_path / "store")
+    store = StageStore(spark, root)
+    store.write("x", spark.range(7))
+    m = store._manifest()
+    assert sum(m["stages"]["x"].pop("files").values()) == 7
+    store._commit_manifest(m)
+
+    def poisoned():
+        raise AssertionError("a committed stage was recomputed")
+
+    resumed = StageStore(spark, root)
+    parses = []
+    real_manifest = resumed._manifest
+    monkeypatch.setattr(
+        resumed, "_manifest", lambda: parses.append(1) or real_manifest()
+    )
+    df = resumed.read_or_compute("x", poisoned)
+    assert len(parses) == 1
+    assert resumed.stage_log["x"] == {"write_seconds": 0.0, "reused": True}
+    assert df.count() == 7
+
+
 def test_stage_store_prune_keeps_resume(spark, tmp_path):
     """VERDICT_r04 task 7: prune() must delete abandoned stage roots
-    (no _SUCCESS / dangling manifest entries) and superseded metrics
-    generations — and a pruned store must resume exactly like an
-    unpruned one (committed snapshots untouched)."""
+    (no _SUCCESS / dangling manifest entries) — and a pruned store must
+    resume exactly like an unpruned one (committed snapshots
+    untouched)."""
     import json
     import os
 
@@ -136,7 +165,7 @@ def test_stage_store_prune_keeps_resume(spark, tmp_path):
     store = StageStore(spark, root)
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     store.write("s1", df)
-    store.write("s1", df)  # rerun overwrite -> superseded metrics file
+    store.write("s1", df)  # rerun overwrite
     store.write("s2", df.filter("id < 50"))
 
     # abandoned root WITH a manifest entry but no _SUCCESS (driver killed
@@ -150,23 +179,17 @@ def test_stage_store_prune_keeps_resume(spark, tmp_path):
 
     # default grace window: freshly-touched uncommitted roots are a
     # possibly-live write and must NOT be reaped
-    untouched = store.prune(keep_last_metrics=2)  # keep both metric gens
-    assert untouched["stages"] == [] and untouched["metrics"] == []
+    untouched = store.prune()
+    assert untouched["stages"] == []
     assert os.path.isdir(os.path.join(root, "s3"))
     assert os.path.isdir(os.path.join(root, "s4"))
 
-    removed = store.prune(keep_last_metrics=1, min_age_seconds=0)
+    removed = store.prune(min_age_seconds=0)
     assert set(removed["stages"]) == {"s3", "s4"}
-    assert len(removed["metrics"]) == 1  # the older s1 generation
     assert not os.path.exists(os.path.join(root, "s3"))
     assert not os.path.exists(os.path.join(root, "s4"))
     with open(os.path.join(root, "manifest.json")) as f:
         assert set(json.load(f)["stages"]) == {"s1", "s2"}
-    mdir = os.path.join(root, "_metrics")
-    per_stage = {}
-    for fn in os.listdir(mdir):
-        per_stage.setdefault(fn.rsplit("-", 1)[0], []).append(fn)
-    assert all(len(v) == 1 for v in per_stage.values())
 
     # a pruned store still resumes: committed stages read back with no
     # recompute; the abandoned stage recomputes cleanly
@@ -182,13 +205,13 @@ def test_stage_store_prune_keeps_resume(spark, tmp_path):
     assert calls == []
     assert store2.read_or_compute("s3", lambda: df.limit(7)).count() == 7
     # prune with everything healthy is a no-op
-    assert store2.prune(keep_last_metrics=1)["stages"] == []
+    assert store2.prune()["stages"] == []
 
 
 def test_stage_seconds_include_compute(spark, tmp_path):
-    """The manifest's and _metrics' write_seconds (the CLI's
-    stage_seconds) cover the eager work inside compute(), not only the
-    parquet write after it."""
+    """The manifest entry's write_seconds (the CLI's stage_seconds)
+    cover the eager work inside compute(), not only the parquet write
+    after it."""
     import json
     import time
 
@@ -206,8 +229,6 @@ def test_stage_seconds_include_compute(spark, tmp_path):
     store.read_or_compute("slow", compute)
     with open(tmp_path / "manifest.json") as f:
         assert json.load(f)["stages"]["slow"]["write_seconds"] >= 0.5
-    metrics = store.metrics().filter(F.col("stage") == "slow")
-    assert metrics.agg(F.min("write_seconds")).first()[0] >= 0.5
 
 
 def test_prune_does_not_clobber_concurrent_commit(spark, tmp_path):
@@ -348,28 +369,3 @@ def test_prune_quiet_check_sees_file_mtimes(spark, tmp_path):
     removed = store.prune(min_age_seconds=3600)
     assert removed["stages"] == []  # fresh part file means NOT quiet
     assert part.exists()
-
-
-def test_prune_metrics_tolerates_concurrent_removal(
-    spark, tmp_path, monkeypatch
-):
-    from arhivum_spark.sources import checkpoints as cp
-
-    store = cp.StageStore(spark, str(tmp_path / "store"))
-    mdir = tmp_path / "store" / "_metrics"
-    mdir.mkdir(parents=True)
-    for ms in (1, 2, 3):
-        (mdir / f"s1-{ms}.parquet").write_bytes(b"x")
-
-    real_remove = os.remove
-
-    def racing_remove(path):
-        real_remove(path)  # the "other" prune got there first ...
-        raise FileNotFoundError(path)  # ... so ours sees ENOENT
-
-    monkeypatch.setattr(cp.os, "remove", racing_remove)
-    removed = store.prune(keep_last_metrics=1, min_age_seconds=0)
-    # no crash; the files ARE gone (removed by the racing peer), and we
-    # honestly claim none as our own
-    assert removed["metrics"] == []
-    assert sorted(f.name for f in mdir.iterdir()) == ["s1-3.parquet"]

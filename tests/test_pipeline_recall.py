@@ -240,8 +240,8 @@ def test_resume_reuses_committed_stages(spark, images, tmp_path_factory):
     pd.testing.assert_frame_equal(
         out1.reset_index(drop=True), out2.reset_index(drop=True)
     )
-    m = StageStore(spark, root).metrics()
-    assert m is not None and m.count() > 0
+    entries = StageStore(spark, root)._manifest()["stages"]
+    assert sum(entries["s1_signatures"]["files"].values()) == small.n
 
 
 SMALL = datagen.GenParams(n=300, seed=42, img_hw=64)
@@ -301,6 +301,28 @@ def test_run_pipeline_commits_captions_beside_image_stages(
         overlapped.sort_values(cols).reset_index(drop=True),
         sequential.sort_values(cols).reset_index(drop=True),
     )
+
+
+def test_every_stage_entry_records_its_file_rows(spark, small_images, tmp_path):
+    """Each committed stage's manifest entry is its one commit record:
+    ``files`` names exactly the snapshot's part files, and their rows
+    add up to what a read of the snapshot counts. s5 commits from
+    run_pipeline's worker thread, so its entry and s4's both surviving
+    the locked read-modify-write is checked too."""
+    import os
+
+    root = str(tmp_path / "stages")
+    store = StageStore(spark, root)
+    run_pipeline(small_images, store, CFG)
+    entries = store._manifest()["stages"]
+    assert set(entries) == set(STAGES)
+    for stage in STAGES:
+        data = os.path.join(root, stage, "data")
+        files = entries[stage]["files"]
+        assert set(files) == {f for f in os.listdir(data) if f.endswith(".parquet")}
+        assert sum(files.values()) == store.read(stage).count(), stage
+    # nothing but the stages and the manifest: no second commit record
+    assert set(os.listdir(root)) == {*STAGES, "manifest.json", "manifest.json.lock"}
 
 
 @pytest.fixture(scope="module")
