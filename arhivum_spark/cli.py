@@ -82,7 +82,8 @@ def build_parser() -> argparse.ArgumentParser:
         ),
     )
     # the config knobs a cluster operator actually tunes per-corpus;
-    # everything else keeps the measured defaults in config.DedupConfig
+    # every other DedupConfig setting but substring_max_tokens is a
+    # class constant
     p.add_argument("--min-signature-agreement", type=float, default=None)
     p.add_argument("--psnr-edge-min-db", type=float, default=None)
     p.add_argument(

@@ -1,7 +1,7 @@
 """Stage-1 signature extraction: one Arrow-batched pass over image bytes.
 
 Decodes each image ONCE per row and emits every signature the pipeline needs
-(content sha256, MinHash array, SimHash, pHash, decoded dims) — the Spark
+(content sha256, MinHash array, SimHash, pHash) — the Spark
 analogue of the reference's single per-file pipeline pass
 (ScanCommand.java:280-294: hash -> metadata, never re-reading the file).
 
@@ -22,35 +22,31 @@ import pandas as pd
 from arhivum_spark import codec
 from arhivum_spark.config import DedupConfig
 from arhivum_spark.functions import minhash as mh
-from arhivum_spark.functions import phash as ph
 from arhivum_spark.functions import simhash as sh
 
+# only columns a later stage reads: s2 (content_sha256, fmt), s3
+# (minhash, phash) and s5 (caption, simhash)
 SIGNATURE_SCHEMA = (
-    "image_id string, caption string, fmt string, w int, h int, "
-    "content_sha256 string, minhash array<int>, simhash long, "
-    "phash long, dec_w int, dec_h int"
+    "image_id string, caption string, fmt string, "
+    "content_sha256 string, minhash array<int>, simhash long, phash long"
 )
 
 
 def signature_extractor(cfg: DedupConfig):
     """Returns a mapInPandas function: images rows -> signature rows.
 
-    Input columns required: image_id, bytes, caption, fmt, w, h, phash.
+    Input columns required: image_id, bytes, caption, fmt, phash.
     """
     a, b = mh.permutations(cfg.num_perm, cfg.minhash_seed)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
             shingle_sets: list[np.ndarray] = []
             shas: list[str] = []
-            dws = np.empty(n, dtype=np.int32)
-            dhs = np.empty(n, dtype=np.int32)
-            for i, (raw, fmt) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
+            for raw, fmt in zip(pdf["bytes"], pdf["fmt"]):
                 data = bytes(raw)
                 shas.append(hashlib.sha256(data).hexdigest())
                 pixels = codec.decode_any(data, fmt)
-                dhs[i], dws[i] = pixels.shape[0], pixels.shape[1]
                 # gray computed once; pHash is NOT recomputed here — the
                 # input schema carries it (BASELINE.json input_hint), and
                 # recompute-to-verify belongs on candidate pairs only (the
@@ -66,14 +62,10 @@ def signature_extractor(cfg: DedupConfig):
                     "image_id": pdf["image_id"].values,
                     "caption": pdf["caption"].values,
                     "fmt": pdf["fmt"].values,
-                    "w": pdf["w"].values,
-                    "h": pdf["h"].values,
                     "content_sha256": shas,
                     "minhash": list(sigs),
                     "simhash": simhashes,
                     "phash": pdf["phash"].values,
-                    "dec_w": dws,
-                    "dec_h": dhs,
                 }
             )
 
@@ -82,7 +74,7 @@ def signature_extractor(cfg: DedupConfig):
 
 def attach_signatures(df, cfg: DedupConfig):
     """images DataFrame -> signature DataFrame (bytes projected away)."""
-    cols = ["image_id", "bytes", "caption", "fmt", "w", "h", "phash"]
+    cols = ["image_id", "bytes", "caption", "fmt", "phash"]
     return df.select(*cols).mapInPandas(
         signature_extractor(cfg), schema=SIGNATURE_SCHEMA
     )

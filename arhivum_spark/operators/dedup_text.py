@@ -89,19 +89,7 @@ def simhash_near_pairs(
 
     n_chunks = cfg.simhash_max_hamming + 1
     width = 64 // n_chunks
-    if width < 1:
-        # max_hamming >= 64 would give zero-width chunks — every row
-        # joins every row (all-pairs). Config validation rejects it; this
-        # guards direct callers.
-        raise ValueError(
-            "simhash_max_hamming must be <= 63 (pigeonhole blocking needs "
-            f"chunks of >= 1 bit), got {cfg.simhash_max_hamming}"
-        )
-    # two's-complement fold: for width == 64 (max_hamming = 0, exact-match
-    # blocking) the all-ones mask does not fit a signed LongType literal
     mask = (1 << width) - 1
-    if mask >= 1 << 63:
-        mask -= 1 << 64
     chunks = F.array(
         *[
             F.shiftrightunsigned(F.col("_sh"), c * width).bitwiseAND(F.lit(mask))

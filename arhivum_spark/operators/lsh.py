@@ -42,7 +42,7 @@ from arhivum_spark.config import DedupConfig
 SALT_BUCKETS = 16
 
 
-def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> DataFrame:
+def band_keys(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Explode each signature into (image_id, band, key) — JVM-side only.
 
     key = xxhash64 of the band's signature slice (plus band index so
@@ -69,15 +69,13 @@ def band_keys(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id") -> 
         lambda b: F.xxhash64(F.slice(F.col("minhash"), b * r + 1, r), b),
     )
     return sig_df.select(
-        F.col(id_col).alias("image_id"),
+        "image_id",
         "phash",
         F.posexplode(bands_arr).alias("band", "key"),
     )
 
 
-def candidate_edges_compact(
-    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "image_id"
-) -> DataFrame:
+def candidate_edges_compact(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """band explode -> salted candidate edges, with a compact long
     surrogate id.
 
@@ -87,21 +85,21 @@ def candidate_edges_compact(
     the original id via one broadcast-friendly dictionary join.
     """
     keyed = sig_df.select(
-        F.xxhash64(F.col(id_col)).alias("_iid"),
-        F.col(id_col),
+        F.xxhash64("image_id").alias("_iid"),
+        "image_id",
         "minhash",
         "phash",
     )
-    iid_map = keyed.select("_iid", F.col(id_col))
+    iid_map = keyed.select("_iid", "image_id")
     bands = band_keys(
         keyed.select(F.col("_iid").alias("image_id"), "minhash", "phash"), cfg
     )
     edges = salted_candidate_edges(bands, cfg)
     src_map = iid_map.select(
-        F.col("_iid").alias("src"), F.col(id_col).alias("src_id")
+        F.col("_iid").alias("src"), F.col("image_id").alias("src_id")
     )
     dst_map = iid_map.select(
-        F.col("_iid").alias("dst"), F.col(id_col).alias("dst_id")
+        F.col("_iid").alias("dst"), F.col("image_id").alias("dst_id")
     )
     return (
         edges.join(src_map, "src")
@@ -260,10 +258,7 @@ def salted_candidate_edges(
 
 
 def verify_edges(
-    edges: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
+    edges: DataFrame, sig_df: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Keep candidate edges whose full-signature agreement >= threshold.
 
@@ -273,7 +268,7 @@ def verify_edges(
     in the JVM, no Python. Returns (src, dst, est_jaccard).
     """
     sigs = sig_df.select(
-        F.col(id_col).alias("_vid"),
+        F.col("image_id").alias("_vid"),
         F.col("minhash").alias("_mh"),
     )
     a = sigs.select(

@@ -18,15 +18,18 @@ The Spark shape of the reference's scan lifecycle (SURVEY.md §3.1):
     stage 5  captions     SimHash near-dup caption pairs + substring
                           (suffix) containment pairs — separate output
 
-The stages form a DAG, not a chain: s5 reads only the s1 signatures.
+The stages form a DAG, not a chain. s3 reads s1 and s2, s3b reads s3
+(and the images), s4 reads only s2 and s3b (s2 carries each row's fmt
+and content_sha256 through from s1), and s5 reads only s1.
 
     s1 ──> s2 ──> s3 ──> s3b ──> s4      (caller's thread)
+     │      └────────────────────^
      └──> s5                             (one worker thread, from s1's
                                           commit until s4 returns)
 
-Every stage commits a snapshot via StageStore (resume-mid-pipeline) and
-appends per-partition metrics, so the two branches commit and resume
-independently. All joins on ids/signatures only.
+Every stage commits a snapshot via StageStore (resume-mid-pipeline), so
+the two branches commit and resume independently. All joins on
+ids/signatures only.
 """
 
 from __future__ import annotations
@@ -64,11 +67,7 @@ STAGES = (
 
 
 def psnr_verify_edges(
-    edges: DataFrame,
-    images: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
+    edges: DataFrame, images: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Decoded-pixel PSNR re-check of candidate edges: keep pairs with
     PSNR >= cfg.psnr_edge_min_db (separates near-dups, ~20 dB worst case
@@ -88,7 +87,8 @@ def psnr_verify_edges(
 
     This is the only stage after s1 that touches pixels. Pairs whose
     decoded shapes differ are dropped (not a duplicate), identical pixels
-    give PSNR = inf. Returns (src, dst, psnr_db).
+    give PSNR = inf. Reads (image_id, bytes) of `images`. Returns
+    (src, dst, psnr_db).
 
     In-flight shuffle bound (cliff #5, BENCH.md): the payload shuffle is
     ~2 encoded images per edge, so its high-water mark grows with the
@@ -112,8 +112,7 @@ def psnr_verify_edges(
     parts = []
     for b in range(n_batches):
         part = _psnr_scored(
-            edges.filter(batch_of == b).select("src", "dst"),
-            images, cfg, id_col, bytes_col,
+            edges.filter(batch_of == b).select("src", "dst"), images, cfg
         )
         if b < n_batches - 1:
             part = part.localCheckpoint(
@@ -129,11 +128,7 @@ def psnr_verify_edges(
 
 
 def _psnr_scored(
-    pairs: DataFrame,
-    images: DataFrame,
-    cfg: DedupConfig,
-    id_col: str,
-    bytes_col: str,
+    pairs: DataFrame, images: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """One PSNR verification pass over an edge subset: returns
     (src, dst, psnr_db) for the pairs clearing cfg.psnr_edge_min_db.
@@ -148,11 +143,12 @@ def _psnr_scored(
 
     side_map = (
         pairs.select(
-            F.col("src").alias(id_col), "src", "dst", F.lit(0).alias("_side")
+            F.col("src").alias("image_id"), "src", "dst",
+            F.lit(0).alias("_side"),
         )
         .unionByName(
             pairs.select(
-                F.col("dst").alias(id_col), "src", "dst",
+                F.col("dst").alias("image_id"), "src", "dst",
                 F.lit(1).alias("_side"),
             )
         )
@@ -160,12 +156,10 @@ def _psnr_scored(
     # NEVER dedup/shuffle the images frame itself here — that moves every
     # byte payload; duplicate image_ids are instead handled side-aware in
     # the pair walk below.
-    joined = images.select(id_col, bytes_col).join(
-        F.broadcast(side_map), id_col
+    joined = images.select("image_id", "bytes").join(
+        F.broadcast(side_map), "image_id"
     )
-    payload = joined.select(
-        "src", "dst", "_side", F.col(bytes_col).alias("_b")
-    )
+    payload = joined.select("src", "dst", "_side", F.col("bytes").alias("_b"))
 
     def pair_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry = None  # a pair can straddle Arrow batch boundaries
@@ -359,8 +353,10 @@ def _image_chain(
     """s2 -> s3 -> s3b -> s4 over the committed s1 signatures."""
 
     def exact_stage() -> DataFrame:
+        # fmt rides along for s4's representative election, so s4 reads
+        # no s1 column
         return dedup_exact.flag_duplicates(
-            sigs.select("image_id", "content_sha256"),
+            sigs.select("image_id", "content_sha256", "fmt"),
             hash_col="content_sha256",
             id_col="image_id",
         )
@@ -394,15 +390,16 @@ def _image_chain(
             max_iters=cfg.cc_max_iters, id_col="id",
         )
         # every row -> its exact-representative's component
-        rows = exact.select("image_id", F.col("representative_id").alias("_rep"))
-        labeled = rows.join(
+        rows = exact.select(
+            "image_id",
+            F.col("representative_id").alias("_rep"),
+            "fmt",
+            "content_sha256",
+        )
+        members = rows.join(
             comp.select(F.col("id").alias("_rep"), "component"), "_rep"
         ).drop("_rep")
         # representative election (W2/J5): lossless copies first, then id asc
-        members = labeled.join(
-            sigs.select(F.col("image_id").alias("_sid"), "fmt", "content_sha256"),
-            F.col("image_id") == F.col("_sid"),
-        ).drop("_sid")
         w = Window.partitionBy("component").orderBy(
             F.when(F.col("fmt") == "png", 0).otherwise(1).asc(),
             F.col("image_id").asc(),

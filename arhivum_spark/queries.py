@@ -1561,8 +1561,8 @@ FROM labels GROUP BY component
 
 # MinHash-LSH doc pairs: the PAIR SET is the oracle-checkable contract —
 # planted near-dups sit at exact 3-gram Jaccard >= 0.2 while random pairs
-# stay < 0.05 (docs/ENGINEERING_NOTES.md), and LSH at
-# min_signature_agreement=0.5 recovers exactly that set, row for row, at
+# stay < 0.05 (docs/ENGINEERING_NOTES.md), and LSH at the default
+# min_signature_agreement (0.5) recovers exactly that set, row for row, at
 # sf0.001, sf0.01 and sf0.1 (tests/test_oracle_parity.py). Docs carry a
 # constant phash, so every bucket of 3..bucket_allpairs_max members emits
 # all its pairs: a true pair no longer has to win a hub election (the
@@ -1573,7 +1573,7 @@ def q_docs_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arhivum_spark.config import DedupConfig
     from arhivum_spark.operators.dedup_text import minhash_lsh_pairs
 
-    cfg = DedupConfig(min_signature_agreement=0.5)
+    cfg = DedupConfig()
     docs = _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("string"))
     pairs = minhash_lsh_pairs(docs, cfg, id_col="doc_id", text_col="text")
     return pairs.select(

@@ -115,20 +115,12 @@ def get_spark(
         # every core even on GB-scale local inputs (the 128 MB default
         # yields ~10 read partitions for a 250 MB table -> 2/3 of a 32-core
         # box idles through the signature stage). Harmless at scale: a
-        # 100 TB table always has more splits than cores.
-        # SPARK_GRAFT_MAXPART_MB overrides for DISK-resident inputs: when
-        # the input no longer fits the page cache, 32 threads x 16 MB
-        # quasi-random reads oversubscribe a single disk (measured at 4.8M
-        # images / 108 GB: the 8-thread run beat the 32-thread run);
-        # larger sequential splits trade core-fill for stream locality.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            str(
-                int(os.environ.get("SPARK_GRAFT_MAXPART_MB", "16"))
-                * 1024
-                * 1024
-            ),
-        )
+        # 100 TB table always has more splits than cores. Larger splits
+        # for disk-resident inputs were tried (128 MB, at 4.8M images /
+        # 108 GB) and died in the PSNR stage's byte-bearing re-scan: ~127
+        # MB contiguous per in-flight split x 32 threads on the 16 GB heap
+        # (BENCH.md round 5).
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet 1.16 (bundled with Spark 4.1) enables Hadoop vectored IO

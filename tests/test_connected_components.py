@@ -9,7 +9,6 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from arhivum_spark.config import DedupConfig
 from arhivum_spark.operators.connected_components import (
     ConvergenceError,
     connected_components,
@@ -202,10 +201,3 @@ def test_cc_two_rounds_run_only_checkpoint_and_emit_jobs(spark):
     assert {r["id"]: r["component"] for r in rows} == {
         i: 0 if i < 10 else i for i in range(12)
     }
-
-
-def test_config_rejects_cc_max_iters_below_one():
-    # caught when the config is built, not in s4 after s1..s3b committed
-    with pytest.raises(ValueError, match="cc_max_iters"):
-        DedupConfig(cc_max_iters=0)
-    assert DedupConfig(cc_max_iters=1).cc_max_iters == 1

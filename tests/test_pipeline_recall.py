@@ -83,10 +83,11 @@ def test_cluster_stage_job_budget(clusters):
     assert 0 < store.jobs["s4_clusters"] <= 16, store.jobs
 
 
-def test_psnr_batches_reproduce_committed_s3b(images, clusters):
+def test_psnr_batches_reproduce_committed_s3b(images, clusters, monkeypatch):
     """The hash-batched PSNR path on realistic data: re-verifying the
-    committed s3 snapshot in 3+ batches yields exactly the committed
-    single-batch s3b snapshot (same edges, same psnr_db)."""
+    committed s3 snapshot in 3+ batches (the driver-side bound lowered)
+    yields exactly the committed single-batch s3b snapshot (same edges,
+    same psnr_db)."""
     from arhivum_spark.plans.image_dedup import psnr_verify_edges
 
     _, store = clusters
@@ -98,9 +99,8 @@ def test_psnr_batches_reproduce_committed_s3b(images, clusters):
     def scored(df):
         return {(r.src, r.dst, r.psnr_db) for r in df.collect()}
 
-    batched = psnr_verify_edges(
-        cand, images, DedupConfig(psnr_max_inflight_edges=bound)
-    )
+    monkeypatch.setattr(DedupConfig, "psnr_max_inflight_edges", bound)
+    batched = psnr_verify_edges(cand, images, CFG)
     assert scored(batched) == scored(store.read("s3b_psnr"))
 
 
@@ -323,6 +323,28 @@ def test_every_stage_entry_records_its_file_rows(spark, small_images, tmp_path):
         assert sum(files.values()) == store.read(stage).count(), stage
     # nothing but the stages and the manifest: no second commit record
     assert set(os.listdir(root)) == {*STAGES, "manifest.json", "manifest.json.lock"}
+
+
+class _InputRecordingStore(StageStore):
+    """StageStore that records the input files of each frame it commits."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.inputs: dict[str, list[str]] = {}
+
+    def write(self, stage, df, metrics=True, materialize_first=False):
+        self.inputs[stage] = df.inputFiles()
+        return super().write(stage, df, metrics, materialize_first)
+
+
+def test_cluster_stage_reads_only_s2_and_s3b(spark, small_images, tmp_path):
+    """s4 takes each row's fmt and content_sha256 from s2, so the frame
+    it commits scans the s2 snapshot and none of the s1 signatures."""
+    store = _InputRecordingStore(spark, str(tmp_path / "stages"))
+    run_pipeline(small_images, store, CFG, captions=False)
+    stages = {f.split("/")[-3] for f in store.inputs["s4_clusters"]}
+    assert "s2_exact" in stages
+    assert stages <= {"s2_exact", "s3b_psnr"}, stages
 
 
 @pytest.fixture(scope="module")

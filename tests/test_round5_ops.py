@@ -353,25 +353,6 @@ def test_substring_within_groups_tolerates_null_and_empty(spark):
     assert got == {("b", "a")}
 
 
-def test_simhash_exact_match_blocking_and_config_bounds(spark):
-    """simhash_max_hamming=0 is valid exact-match blocking: the width-64
-    mask must fold to a signed long literal instead of failing at plan
-    build. >= 64 is rejected at config construction."""
-    from arhivum_spark.operators.dedup_text import simhash_near_pairs
-
-    cfg = DedupConfig(simhash_max_hamming=0)
-    df = spark.createDataFrame(
-        [("a", 7), ("b", 7), ("c", 8), ("d", -1)], "id string, simhash long"
-    )
-    rows = simhash_near_pairs(df, cfg).collect()
-    assert {(r.id_a, r.id_b, r.hamming) for r in rows} == {("a", "b", 0)}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="simhash_max_hamming"):
-        DedupConfig(simhash_max_hamming=64)
-
-
 # ---------------------------------------------------------------------------
 # streaming and other review fixes
 
@@ -419,11 +400,6 @@ def test_block_shingles_subblock_images_are_content_dependent():
     # zero-pixel image: distinct non-empty sentinel
     empty = block_shingles(np.zeros((0, 0), dtype=np.float32), block=8)
     assert len(empty) == 1 and set(empty).isdisjoint(set(s_black))
-
-
-def test_config_rejects_odd_block():
-    with pytest.raises(ValueError, match="block"):
-        DedupConfig(block=7)
 
 
 def test_cosine_topk_duplicate_query_ids(spark):
